@@ -137,7 +137,7 @@ def main() -> None:
     # BENCH_HISTORY) — the generated sf1 corpus carries only the document/
     # event tables, so a full-HEADLINE run is impossible there. The default
     # (unset) HEADLINE is unchanged; subset rows land in BENCH_HISTORY
-    # keyed by their sf like any other row.
+    # keyed by their sf and marked ``subset`` (see latest_full_record).
     subset = os.environ.get("SPARK_GRAFT_BENCH_QUERIES")
     headline = (
         [q.strip() for q in subset.split(",") if q.strip()]
@@ -195,7 +195,9 @@ def main() -> None:
     cpu = {name: median(cpu_samples[name]) for name in headline}
     total = round(sum(timings.values()), 3)
     noise_floor = round(sum(mad.values()), 3)
-    _append_history(timings, total, sf, mad=mad, cpu=cpu, passes=passes)
+    _append_history(
+        timings, total, sf, mad=mad, cpu=cpu, passes=passes, subset=bool(subset)
+    )
     print(_stdout_line(timings, total, sf, passes, noise_floor))
 
 
@@ -277,6 +279,18 @@ def _proc_cpu_sec(pid: int | None) -> float:
         return 0.0
 
 
+def latest_full_record(lines, sf: str) -> dict | None:
+    """The newest BENCH_HISTORY record of a full-HEADLINE run at ``sf``;
+    rows of a ``SPARK_GRAFT_BENCH_QUERIES`` subset run are skipped."""
+    last = None
+    for line in lines:
+        if line.strip():
+            rec = json.loads(line)
+            if rec.get("sf") == sf and not rec.get("subset"):
+                last = rec
+    return last
+
+
 def _append_history(
     timings: dict[str, float],
     total: float,
@@ -284,6 +298,7 @@ def _append_history(
     mad: dict[str, float] | None = None,
     cpu: dict[str, float] | None = None,
     passes: int | None = None,
+    subset: bool = False,
 ) -> None:
     """Persist per-query history (BENCH_HISTORY.jsonl next to this file) and
     emit a regression diff vs the previous same-sf entry to stderr — the
@@ -326,6 +341,7 @@ def _append_history(
                         **({"mad": mad} if mad else {}),
                         **({"cpu": cpu} if cpu else {}),
                         **({"passes": passes} if passes else {}),
+                        **({"subset": True} if subset else {}),
                     }
                 )
                 + "\n"

@@ -49,9 +49,12 @@ PACK_BUDGET = 2048
 
 
 def _read(ctx: JobContext, layer: Layer, table: str):
-    from ..sources.reader import _read_parquet
+    from ..sources.reader import _scan
 
-    return _read_parquet(ctx.spark, ctx.catalog.table_path(layer, table))
+    df = _scan(ctx.spark, ctx.catalog.table_path(layer, table))
+    if df is None:
+        raise FileNotFoundError(f"table {layer.value}/{table} not found")
+    return df
 
 
 @CORPUS_JOBS.register("corpus_filter")
@@ -139,17 +142,11 @@ def job_corpus_decontam(ctx: JobContext) -> None:
     13). No benchmark table registered → clean passthrough, so the stage is
     safe to keep in the DAG unconditionally."""
     from ..operators import contamination
-    from ..sources.reader import table_exists
+    from ..sources.reader import _scan
 
     d = _read(ctx, Layer.DOMAIN, "corpus_canonical")
-    bench_path = ctx.catalog.table_path(Layer.RAW, "benchmark")
-    if table_exists(ctx.spark, bench_path):
-        from ..sources.reader import _read_parquet
-
-        bench = _read_parquet(ctx.spark, bench_path)
-        out = contamination.decontaminate(d, bench, k=3)
-    else:
-        out = d
+    bench = _scan(ctx.spark, ctx.catalog.table_path(Layer.RAW, "benchmark"))
+    out = d if bench is None else contamination.decontaminate(d, bench, k=3)
     write_table(
         out,
         ctx.catalog.table_path(Layer.DOMAIN, "corpus_clean"),

@@ -90,6 +90,21 @@ def contract_edges(
     ).mapInPandas(contract, schema=f"{src} long, {dst} long")
 
 
+def default_broadcast_max_nodes(spark) -> int:
+    """The connected-components label broadcast cap, derived from the
+    session's broadcast budget instead of a fixed node count: a broadcast
+    label relation costs well over its raw 16 B/node once the hash relation
+    and the driver copy are counted, so allow ~32 B/node against 8x the
+    configured ``spark.sql.autoBroadcastJoinThreshold`` (the deliberate-hint
+    headroom; the planner alone would never broadcast these stat-less
+    frames). Default threshold 10 MB -> ~2.5M nodes; -1 disables it.
+
+    The threshold is read as the typed byte count: the string conf renders
+    with a unit (``'10485760b'``), which ``int()`` cannot parse."""
+    thr = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return max(0, (8 * max(thr, 0)) // 32)
+
+
 def connected_components(
     pairs: DataFrame,
     src: str = "id_a",
@@ -151,22 +166,7 @@ def connected_components(
     # paid that materialization anyway, so the count is effectively free
     n_nodes = labels.count()
     if broadcast_max_nodes is None:
-        # Derive from the session's broadcast budget instead of a fixed
-        # node count (ADVICE r13): a broadcast label relation costs well
-        # over its raw 16 B/node once the hash relation and the driver
-        # copy are counted, so allow ~32 B/node against 8x the configured
-        # autoBroadcastJoinThreshold (the deliberate-hint headroom; the
-        # planner alone would never broadcast these stat-less frames).
-        # Default threshold 10 MB -> ~2.5M nodes; still overridable.
-        try:
-            thr = int(
-                pairs.sparkSession.conf.get(
-                    "spark.sql.autoBroadcastJoinThreshold"
-                )
-            )
-        except Exception:
-            thr = 10 * 1024 * 1024
-        broadcast_max_nodes = max(0, (8 * max(thr, 0)) // 32)
+        broadcast_max_nodes = default_broadcast_max_nodes(pairs.sparkSession)
     bcast = n_nodes <= broadcast_max_nodes
 
     for _ in range(max_iter):

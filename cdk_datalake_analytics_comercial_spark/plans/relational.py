@@ -1174,7 +1174,9 @@ def _order_buckets(df: DataFrame, col: Column, nb: int) -> Column:
     quality affects only balance, never correctness) and baked into a
     binary-search tree of CaseWhen literals, so bucketing is whole-stage
     codegen with log2(nb) comparisons per row — no crossJoin subtree, no
-    interpreted higher-order function. Returns ``#boundaries > col``."""
+    interpreted higher-order function. Returns ``#boundaries > col``;
+    NULLs take the last bucket, since ``desc()`` orders them last (the
+    classic single-partition window's placement)."""
     probs = [i / nb for i in range(1, nb)]
     row = df.agg(F.percentile_approx(col, probs).alias("_gb")).first()
     bounds = sorted(set(row["_gb"] or []))
@@ -1188,7 +1190,9 @@ def _order_buckets(df: DataFrame, col: Column, nb: int) -> Column:
             F.lit(bounds[mid]) > col, F.lit(hi - mid) + rec(lo, mid)
         ).otherwise(rec(mid + 1, hi))
 
-    return rec(0, len(bounds))
+    return F.when(col.isNull(), F.lit(len(bounds))).otherwise(
+        rec(0, len(bounds))
+    )
 
 
 # --------------------------------------------------------------------------

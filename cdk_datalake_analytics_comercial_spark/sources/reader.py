@@ -6,47 +6,116 @@ partition-pruning capable); the catalog abstracts the path scheme so the same
 code runs on local FS and ``s3a://``.
 
 Scale notes:
+- Resolving a table is one directory probe (:func:`_probe`): a listing of
+  its txlog log (on disk or in the registered LogStore), then of its data
+  files when it has no committed log. No Spark job and no data-file footer
+  is touched to decide whether a table exists.
+- The schema registry is authoritative for stage schemas, as the
+  reference's DynamoDB registry is for its Delta stage tables: a registered
+  stage table is scanned with ``spark.read.schema(registry.schema(t))``, so
+  resolving it launches no Spark job, and a present and an absent table
+  (the empty-table fallback, SURVEY S3) share one schema by construction.
+  A registered column missing from a file reads as NULL (the same padding
+  the multi-instance union gives a drifted instance); a file column whose
+  type conflicts with the registry fails loudly when the scan runs (the
+  parquet reader refuses the conversion), never silently re-typed; a file
+  column the registry does not list is dropped from the scan (the registry,
+  not the file, defines the table's columns — unlike the unregistered
+  multi-instance union, which carries a drifted instance's extra column).
+- Tables without a registry entry (domain/analytics outputs, unregistered
+  stage tables) infer their schema once, from the data files.
 - The multi-instance union is a metadata-only plan operation (``unionByName``
   of N scans); Catalyst pushes filters/projections into every branch.
-- The empty-table fallback (SURVEY S3) keeps the registered schema so joins
-  against absent tables neither fail nor drop columns.
 """
 
 from __future__ import annotations
 
 import functools
+import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from ..core.catalog import Catalog, Layer
 from .registry import SchemaRegistry
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Scan one table dir — format-transparent: txlog tables (detected by
-    their ``_txlog`` log, like the reference's ``DeltaTable.isDeltaTable``
-    probe) resolve their current manifest; plain dirs are parquet scans. A
-    raw ``spark.read.parquet`` on a txlog dir would union every batch ever
-    written, including superseded versions — hence the mandatory probe."""
-    from .txlog import is_txlog_table, tx_read
+def _entries(spark: SparkSession, path: str) -> list[tuple[str, bool]] | None:
+    """``(name, is_dir)`` of the children of ``path``; None when ``path`` is
+    not a directory. Local paths list with one ``os.scandir`` (the py4j
+    round trip per entry would dominate); others use the Hadoop FS API."""
+    from .txlog import _as_local_dir, _fs
+
+    local = _as_local_dir(path)
+    if local is not None:
+        try:
+            with os.scandir(local) as it:
+                return [(e.name, e.is_dir()) for e in it]
+        except (FileNotFoundError, NotADirectoryError):
+            return None
+    fs, p, _ = _fs(spark, path)
+    if not fs.exists(p) or not fs.getFileStatus(p).isDirectory():
+        return None
+    return [(s.getPath().getName(), s.isDirectory()) for s in fs.listStatus(p)]
+
+
+def _has_data(spark: SparkSession, path: str, entries) -> bool:
+    """True at the first visible data file under ``path`` (partition dirs
+    are walked depth-first; ``_``/``.``-prefixed names are hidden, as in
+    Spark's own file index)."""
+    for name, is_dir in entries:
+        if name.startswith(("_", ".")):
+            continue
+        if not is_dir:
+            return True
+        sub = f"{path.rstrip('/')}/{name}"
+        if _has_data(spark, sub, _entries(spark, sub) or []):
+            return True
+    return False
+
+
+def _probe(spark: SparkSession, path: str) -> str | None:
+    """Classify a table dir: ``"txlog"`` when it has a committed log (the
+    reference's ``DeltaTable.isDeltaTable`` probe; the log may live in a
+    registered LogStore with no ``_txlog`` dir on disk, so the log is asked
+    first), ``"parquet"`` when it holds a data file, None when it is absent
+    or empty (no dir, or only ``_SUCCESS``/hidden files)."""
+    from .txlog import is_txlog_table
 
     if is_txlog_table(spark, path):
+        return "txlog"
+    entries = _entries(spark, path)
+    return "parquet" if entries and _has_data(spark, path, entries) else None
+
+
+def _open(
+    spark: SparkSession, path: str, kind: str, schema: T.StructType | None = None
+) -> DataFrame:
+    """Scan a table dir :func:`_probe` classified as ``kind``. txlog tables
+    resolve their current manifest (a raw parquet scan of a txlog dir would
+    union every batch ever written, superseded ones included); parquet dirs
+    scan with ``schema`` when given (no Spark job) and infer it from the
+    files otherwise (one job)."""
+    if kind == "txlog":
+        from .txlog import tx_read
+
         return tx_read(spark, path)
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
+
+
+def _scan(
+    spark: SparkSession, path: str, schema: T.StructType | None = None
+) -> DataFrame | None:
+    """The table at ``path`` after one :func:`_probe`, or None if absent."""
+    kind = _probe(spark, path)
+    return None if kind is None else _open(spark, path, kind, schema)
 
 
 def table_exists(spark: SparkSession, path: str) -> bool:
     """True if ``path`` holds a readable table (reference ``table_exists``,
     `common_jobs_functions.py:351-356`, done via Delta log probe there)."""
-    from .txlog import is_txlog_table
-
-    if is_txlog_table(spark, path):
-        return True
-    try:
-        spark.read.parquet(path).schema
-        return True
-    except Exception:
-        return False
+    return _probe(spark, path) is not None
 
 
 def read_table(
@@ -64,7 +133,8 @@ def read_table(
       (reference S1, `common_jobs_functions.py:271`).
     - Stage: one dir per source endpoint; all instances are read and
       ``unionByName``-ed (reference S2, `:231-268`, union at `:268`).
-      ``instances=None`` → discover from the filesystem catalog.
+      ``instances=None`` → discover from the filesystem catalog. A stage
+      table the registry knows is scanned with the registered schema.
     - ``principal_only=True``: restrict discovery to endpoints flagged
       principal in the layer's ``_endpoints.json`` — the reference's
       ``have_principal=True`` (`common_jobs_functions.py:241-243`), used
@@ -77,23 +147,27 @@ def read_table(
     layer = Layer(layer) if not isinstance(layer, Layer) else layer
 
     if layer == Layer.STAGE:
+        schema = (
+            registry.schema(table)
+            if registry is not None and table in registry.tables
+            else None
+        )
         if instances is None:
             instances = catalog.instances(layer, table, principal_only=principal_only)
         paths = [catalog.table_path(layer, table, i) for i in instances]
-        dfs = [ _read_parquet(spark, p) for p in paths if table_exists(spark, p) ]
+        dfs = [df for df in (_scan(spark, p, schema) for p in paths) if df is not None]
         if not dfs and catalog.is_table_dir(layer, table):
             # single-instance stage layout (no endpoint subdirs)
-            base = catalog.table_path(layer, table)
-            if table_exists(spark, base):
-                dfs = [_read_parquet(spark, base)]
+            df = _scan(spark, catalog.table_path(layer, table), schema)
+            dfs = [df] if df is not None else []
         if dfs:
             return functools.reduce(
                 lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs
             )
     else:
-        path = catalog.table_path(layer, table)
-        if table_exists(spark, path):
-            return _read_parquet(spark, path)
+        df = _scan(spark, catalog.table_path(layer, table))
+        if df is not None:
+            return df
 
     if registry is not None:
         return registry.empty_dataframe(spark, table)

@@ -30,12 +30,12 @@ from pyspark.sql import functions as F
 FORMAT_CONF = "spark.datalake.tableFormat"
 
 
-def _table_format(spark: SparkSession, path: str) -> str:
-    """Resolve the storage format for a write to ``path``:
+def _table_format(spark: SparkSession, is_txlog: bool) -> str:
+    """Resolve the storage format for a write to a table:
 
-    - an EXISTING txlog table always stays txlog (format is a property of
-      the table, detected from its ``_txlog`` log — the reference's
-      ``DeltaTable.isDeltaTable`` probe);
+    - an EXISTING txlog table (``is_txlog``, detected from its ``_txlog``
+      log — the reference's ``DeltaTable.isDeltaTable`` probe) always
+      stays txlog (format is a property of the table);
     - otherwise the session conf ``spark.datalake.tableFormat`` decides
       what NEW tables are created as (``parquet`` default, ``txlog`` for
       the full Delta-parity surface: versioned commits, time travel, CDF,
@@ -44,9 +44,7 @@ def _table_format(spark: SparkSession, path: str) -> str:
 
     One conf switch therefore routes the whole job layer through the
     transactional format with no job-code changes."""
-    from .txlog import is_txlog_table
-
-    if is_txlog_table(spark, path):
+    if is_txlog:
         return "txlog"
     fmt = spark.conf.get(FORMAT_CONF, "parquet")
     if fmt not in ("parquet", "txlog"):
@@ -64,8 +62,10 @@ def write_table(
     overwrite (reference K1, `common_jobs_functions.py:306-319`). Routes
     through the txlog format when the table (or the session default) is
     txlog — same dynamic-overwrite semantics, transactional commit."""
+    from .txlog import is_txlog_table
+
     spark = df.sparkSession
-    if _table_format(spark, path) == "txlog":
+    if _table_format(spark, is_txlog_table(spark, path)) == "txlog":
         from .txlog import tx_write
 
         if mode == "append":
@@ -226,9 +226,29 @@ def merge_upsert(
     at-least-once streaming sink needs to converge; without it the default
     source-always-wins semantics apply.
     """
-    from .reader import table_exists
+    from .reader import _probe
 
-    if _table_format(spark, path) == "txlog":
+    _merge_upsert(
+        spark, source, path, keys, partition_by, precedence, schema_evolution,
+        _probe(spark, path),
+    )
+
+
+def _merge_upsert(
+    spark: SparkSession,
+    source: DataFrame,
+    path: str,
+    keys: list[str],
+    partition_by: list[str] | None,
+    precedence: str | None,
+    schema_evolution: bool,
+    kind: str | None,
+    target: DataFrame | None = None,
+) -> None:
+    """:func:`merge_upsert` against a target already probed as ``kind``
+    (``reader._probe``); ``target`` is its scan when the caller already
+    opened it."""
+    if _table_format(spark, kind == "txlog") == "txlog":
         from .txlog import tx_merge
 
         tx_merge(
@@ -252,11 +272,12 @@ def merge_upsert(
             .drop("_rn")
         )
 
-    if not table_exists(spark, path):
+    if kind is None:
         write_table(source, path, partition_by)
         return
 
-    target = spark.read.parquet(path)
+    if target is None:
+        target = spark.read.parquet(path)
     if schema_evolution:
         target, source = _evolve_schemas(target, source)
 
@@ -307,15 +328,16 @@ def merge_update_only(
 ) -> None:
     """MERGE with ``whenMatchedUpdateAll`` only — unmatched source rows are
     dropped (reference K4, `common_jobs_functions.py:323-337`)."""
-    from .reader import _read_parquet, table_exists
+    from .reader import _open, _probe
 
-    if not table_exists(spark, path):
+    kind = _probe(spark, path)
+    if kind is None:
         return
-    target = _read_parquet(spark, path)
+    target = _open(spark, path, kind)
     source = _dedup_on_keys(source, keys)
     # rows of source that exist in target (these update), rest of target kept
     matched = source.join(target.select(*keys).distinct(), keys, "left_semi")
-    merge_upsert(spark, matched, path, keys, partition_by)
+    _merge_upsert(spark, matched, path, keys, partition_by, None, False, kind, target)
 
 
 def write_csv_gzip(df: DataFrame, path: str, header: bool = True) -> None:

@@ -148,3 +148,18 @@ def test_broadcast_round_strategy_matches_smj(spark):
     )
     bcast = sorted(map(tuple, connected_components(pairs).collect()))
     assert smj == bcast and len(smj) > 0
+
+
+def test_broadcast_cap_follows_session_threshold(spark):
+    """The label-broadcast cap derives from autoBroadcastJoinThreshold,
+    whose string form carries a unit ('10485760b'); the cap must follow
+    the setting, not fall back to a hard-coded 10 MB."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "1m")
+        assert graph.default_broadcast_max_nodes(spark) == 8 * 1024 * 1024 // 32
+        spark.conf.set(key, "-1")
+        assert graph.default_broadcast_max_nodes(spark) == 0
+    finally:
+        spark.conf.set(key, old)

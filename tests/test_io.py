@@ -361,3 +361,181 @@ def test_merge_schema_evolution_missing_source_column(spark, tmp_path):
     )
     got = {r["k"]: (r["v"], r["extra"]) for r in spark.read.parquet(p).collect()}
     assert got == {1: ("a", 10), 2: ("b", None)}
+
+
+# ---- table resolution: one probe per dir, registry-typed stage scans -----
+
+
+def _spark_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn launched) — counted by the status
+    tracker under a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+_PART = "id int, v string, id_pais string, id_periodo string"
+_PART_REG = SchemaRegistry(
+    {"t": [("id", "int"), ("v", "varchar"), ("id_pais", "varchar"), ("id_periodo", "varchar")]}
+)
+
+
+def _write_partitioned(spark, path, data=((1, "a", "PE", "202401"), (2, "b", "CO", "202402"))):
+    spark.createDataFrame(list(data), _PART).write.partitionBy(
+        "id_pais", "id_periodo"
+    ).parquet(path)
+
+
+def test_registered_stage_read_launches_no_job(spark, lake):
+    p = lake.table_path(Layer.STAGE, "t", "i1")
+    _write_partitioned(spark, p)
+    out, jobs = _spark_jobs(
+        spark, lambda: read_table(spark, lake, Layer.STAGE, "t", registry=_PART_REG)
+    )
+    assert jobs == 0
+    # the registry schema is the one inference would find, order included
+    assert out.schema == spark.read.parquet(p).schema
+    assert rows(out) == [(1, "a", "PE", "202401"), (2, "b", "CO", "202402")]
+
+
+def test_unregistered_read_infers_schema_once(spark, lake):
+    p = lake.table_path(Layer.DOMAIN, "t_dom")
+    _write_partitioned(spark, p)
+    out, jobs = _spark_jobs(spark, lambda: read_table(spark, lake, Layer.DOMAIN, "t_dom"))
+    assert jobs <= 1
+    assert out.schema == spark.read.parquet(p).schema
+
+
+@pytest.mark.parametrize("marker", [None, "_SUCCESS"])
+def test_empty_stage_dir_takes_registry_fallback(spark, lake, marker):
+    from unittest import mock
+
+    inst = lake.table_path(Layer.STAGE, "t", "i1")
+    os.makedirs(inst)
+    if marker:
+        open(os.path.join(inst, marker), "w").close()
+    assert not table_exists(spark, inst)
+    with mock.patch.object(
+        _PART_REG, "empty_dataframe", wraps=_PART_REG.empty_dataframe
+    ) as fallback:
+        out = read_table(spark, lake, Layer.STAGE, "t", registry=_PART_REG)
+    assert fallback.call_count == 1
+    assert out.schema == _PART_REG.schema("t") and out.count() == 0
+
+
+def test_txlog_stage_dir_reads_current_snapshot(spark, lake):
+    from cdk_datalake_analytics_comercial_spark.sources.txlog import tx_write
+
+    p = lake.table_path(Layer.STAGE, "t", "i1")
+    schema = "id int, v string, id_pais string, id_periodo string"
+    tx_write(spark, spark.createDataFrame([(1, "old", "PE", "202401")], schema), p)
+    tx_write(
+        spark, spark.createDataFrame([(2, "new", "PE", "202401")], schema), p,
+        mode="overwrite",
+    )
+    assert table_exists(spark, p)
+    out = read_table(spark, lake, Layer.STAGE, "t", registry=_PART_REG)
+    # a raw parquet scan would also return the superseded version-0 batch
+    assert [tuple(r) for r in out.select("id", "v").collect()] == [(2, "new")]
+
+
+def test_registered_column_missing_from_file_reads_null(spark, lake):
+    reg = SchemaRegistry({"t": [("id", "int"), ("v", "varchar"), ("extra", "bigint")]})
+    spark.createDataFrame([(1, "a")], "id int, v string").write.parquet(
+        lake.table_path(Layer.STAGE, "t", "i1")
+    )
+    spark.createDataFrame([(2, "b", 7)], "id int, v string, extra long").write.parquet(
+        lake.table_path(Layer.STAGE, "t", "i2")
+    )
+    out = read_table(spark, lake, Layer.STAGE, "t", registry=reg)
+    assert out.schema == reg.schema("t")
+    assert rows(out) == [(1, "a", None), (2, "b", 7)]
+
+
+def test_registry_type_conflict_fails_loudly(spark, lake):
+    reg = SchemaRegistry({"t": [("id", "int"), ("v", "int")]})
+    spark.createDataFrame([(1, "a")], "id int, v string").write.parquet(
+        lake.table_path(Layer.STAGE, "t", "i1")
+    )
+    out = read_table(spark, lake, Layer.STAGE, "t", registry=reg)
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        out.collect()
+
+
+def test_file_column_outside_registry_is_dropped(spark, lake):
+    # the registry defines a registered stage table's columns: a file column
+    # it does not list is not read (an unregistered union would carry it)
+    reg = SchemaRegistry({"t": [("id", "int"), ("v", "varchar")]})
+    spark.createDataFrame([(1, "a", 9)], "id int, v string, drift long").write.parquet(
+        lake.table_path(Layer.STAGE, "t", "i1")
+    )
+    out = read_table(spark, lake, Layer.STAGE, "t", registry=reg)
+    assert out.columns == ["id", "v"]
+    assert rows(out) == [(1, "a")]
+    assert "drift" in read_table(spark, lake, Layer.STAGE, "t").columns
+
+
+@pytest.fixture
+def cas_store():
+    from cdk_datalake_analytics_comercial_spark.sources import txlog as TX
+
+    store = TX.InMemoryCASLogStore()
+    TX.set_log_store(store)
+    try:
+        yield store
+    finally:
+        TX.set_log_store(None)
+
+
+def test_store_backed_txlog_table_resolves_as_txlog(spark, lake, cas_store):
+    # with a LogStore the log lives off disk (no _txlog dir): the probe must
+    # still classify the dir as txlog, or a raw parquet scan would union the
+    # superseded batch and a merge would swap a parquet dir over the table
+    from cdk_datalake_analytics_comercial_spark.sources.txlog import (
+        current_version,
+        tx_read,
+        tx_write,
+    )
+
+    p = lake.table_path(Layer.STAGE, "t", "i1")
+    tx_write(spark, spark.createDataFrame([(1, "old", "PE", "202401")], _PART), p)
+    tx_write(
+        spark, spark.createDataFrame([(2, "new", "PE", "202401")], _PART), p,
+        mode="overwrite",
+    )
+    assert not os.path.exists(os.path.join(p, "_txlog"))
+    for reg in (_PART_REG, None):
+        out = read_table(spark, lake, Layer.STAGE, "t", registry=reg)
+        assert rows(out.select("id", "v")) == [(2, "new")]
+
+    v = current_version(spark, p)
+    src = spark.createDataFrame(
+        [(2, "upd", "PE", "202401"), (3, "ins", "PE", "202401")], _PART
+    )
+    merge_upsert(spark, src, p, keys=["id"])
+    assert current_version(spark, p) == v + 1  # committed through tx_merge
+    merge_update_only(spark, src.withColumn("v", F.lit("again")), p, keys=["id"])
+    assert current_version(spark, p) == v + 2
+    assert rows(tx_read(spark, p).select("id", "v")) == [(2, "again"), (3, "again")]
+
+
+def test_merge_probes_target_once(spark, lake):
+    from unittest import mock
+
+    from cdk_datalake_analytics_comercial_spark.sources import reader
+
+    path = lake.table_path(Layer.DOMAIN, "t_probe")
+    write_table(spark.createDataFrame([("a", 1)], "id string, v int"), path)
+    src = spark.createDataFrame([("a", 10), ("b", 2)], "id string, v int")
+    with mock.patch.object(reader, "_probe", wraps=reader._probe) as probe:
+        merge_update_only(spark, src, path, keys=["id"])
+        merge_upsert(spark, src, path, keys=["id"])
+    assert probe.call_count == 2
+    assert rows(spark.read.parquet(path)) == [("a", 10), ("b", 2)]

@@ -116,11 +116,12 @@ def test_committed_artifacts_cover_full_registry():
     rows = {m.group(1) for m in re.finditer(r"^\| (\w+) \|", audit, re.M)}
     assert names <= rows, f"PLAN_AUDIT.md missing {sorted(names - rows)[:5]}"
 
-    from bench import HEADLINE
+    from bench import HEADLINE, latest_full_record
 
     assert set(HEADLINE) <= names, "bench headline names a missing query"
     with open(os.path.join(root, "BENCH_HISTORY.jsonl")) as f:
-        last = json.loads(f.readlines()[-1])
+        last = latest_full_record(f, "0.1")
+    assert last is not None, "BENCH_HISTORY has no full-headline sf0.1 record"
     assert set(HEADLINE) <= set(last["queries"]), (
         "BENCH_HISTORY's latest record predates the current headline set: "
         f"missing {sorted(set(HEADLINE) - set(last['queries']))[:5]}"
@@ -137,6 +138,28 @@ def test_committed_artifacts_cover_full_registry():
         assert counts == {n}, (
             f"{doc} states query count(s) {sorted(counts)}, registry has {n}"
         )
+
+
+def test_bench_history_guard_ignores_subset_rows():
+    """A SPARK_GRAFT_BENCH_QUERIES subset row (any sf) can neither fail nor
+    satisfy the history guard: the guard reads the newest full-headline
+    record of its scale factor."""
+    import json
+
+    from bench import latest_full_record
+
+    full = {"sf": "0.1", "queries": {"a": 1.0, "b": 1.0}}
+    lines = [
+        json.dumps(r)
+        for r in (
+            {"sf": "0.1", "queries": {"a": 9.0}},  # old full run, smaller set
+            full,
+            {"sf": "1", "queries": {"a": 1.0}},
+            {"sf": "0.1", "queries": {"a": 1.0}, "subset": True},
+        )
+    ]
+    assert latest_full_record(lines, "0.1") == full
+    assert latest_full_record(lines[3:], "0.1") is None
 
 
 def test_bench_stdout_line_fits_driver_tail():

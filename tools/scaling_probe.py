@@ -22,6 +22,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SFS = ["0.001", "0.01", "0.1"]
 
+KEEP_MARKER = "<!-- hand-written sections below; scaling_probe keeps them -->"
+
 # document-only queries probed one decade further (generated sf1 corpus)
 DEDUP_FAMILY = [
     "dedup_exact",
@@ -338,8 +340,15 @@ def main() -> None:
     )
     lines.append("")
     out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "SCALING.md")
+    # hand-written sections after KEEP_MARKER survive a regeneration
+    tail = ""
+    if os.path.exists(out):
+        with open(out) as f:
+            old = f.read()
+        if KEEP_MARKER in old:
+            tail = "\n" + old[old.index(KEEP_MARKER):]
     with open(out, "w") as f:
-        f.write("\n".join(lines))
+        f.write("\n".join(lines) + tail)
     print(f"wrote {out}")
 
 
