@@ -134,15 +134,18 @@ def txlog_table_path(spark: SparkSession, table: str) -> tuple[str, dict] | None
     """Resolve ``db.t`` to its txlog ``(path, pinned extra options)`` via
     the in-process pinned-format registry, or ``None`` when the name is
     not a txlog-backed catalog table (plain parquet tables, views, CTEs
-    all return None and take the passthrough path)."""
+    all return None and take the passthrough path). "Not a catalog
+    table" is decided by ``spark.catalog.tableExists``; a metadata read
+    that fails on an EXISTING table raises — it must never route DML on
+    a txlog table through plain ``spark.sql``."""
     from ..streaming.source import _PINNED_SOURCES
 
     parts = [_unquote(p) for p in table.split(".")]
     fq = ".".join(parts)
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fq}").collect()
-    except Exception:
+    qfq = ".".join(f"`{p.replace('`', '``')}`" for p in parts)
+    if not spark.catalog.tableExists(qfq):
         return None
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {qfq}").collect()
     provider = next(
         (
             r.data_type
@@ -167,13 +170,10 @@ def txlog_table_path(spark: SparkSession, table: str) -> tuple[str, dict] | None
         )
         if not is_parquet:
             return None
-        try:
-            props = {
-                r.key: r.value
-                for r in spark.sql(f"SHOW TBLPROPERTIES {fq}").collect()
-            }
-        except Exception:
-            return None
+        props = {
+            r.key: r.value
+            for r in spark.sql(f"SHOW TBLPROPERTIES {qfq}").collect()
+        }
         tpath = props.get(_NATIVE_PROP_PATH)
         if not tpath:
             return None

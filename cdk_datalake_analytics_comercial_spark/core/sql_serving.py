@@ -16,10 +16,14 @@ gives the engine the same surface on Spark's session catalog:
   Catalyst pushdown/pruning, and hive-partitioned layouts get their
   partitions recovered (``MSCK REPAIR TABLE`` — the Glue-crawler step).
 - **txlog tables** register as ``USING txlog`` tables through the Python
-  Data Source batch reader (`streaming/source.TxLogBatchReader`): the
-  snapshot is re-resolved at every query plan, so SQL always reads the
-  current committed version (stale-batch unions are impossible — a raw
-  parquet table over a txlog dir would serve superseded files).
+  Data Source batch reader (`streaming/source.TxLogBatchReader`) by
+  default: the snapshot is re-resolved at every query plan, so SQL always
+  reads the current committed version (stale-batch unions are impossible
+  — a raw parquet table over a txlog dir would serve superseded files).
+  Opt-in ``read_optimized=True`` registrations of eligible snapshots, and
+  every eligible BOUNDED change-feed range, register instead as NATIVE
+  parquet tables over a symlink manifest (Delta's
+  ``symlink_format_manifest`` model; see the read-optimized block below).
 - **Multi-instance stage tables** (one subdir per source endpoint)
   register one table per instance plus a UNION-ALL VIEW under the plain
   table name, null-padding by name — the SQL twin of
@@ -36,10 +40,12 @@ Everything is idempotent: re-running refreshes the registration
 
 from __future__ import annotations
 
+import contextlib
 import hashlib
 import json
 import os
 import re
+import shutil
 import tempfile
 import uuid
 
@@ -131,11 +137,8 @@ def _reg_fresh(spark: SparkSession, db: str, name: str, desc: tuple) -> bool:
     key = _reg_key(spark, db, name)
     if _REG_CACHE.get(key) != desc:
         return False
-    try:
-        if spark.catalog.tableExists(f"{db}.{name}"):
-            return True
-    except Exception:
-        pass
+    if spark.catalog.tableExists(f"{db}.{name}"):
+        return True
     _REG_CACHE.pop(key, None)
     return False
 
@@ -221,8 +224,16 @@ def register_parquet_table(
 # moment THIS process commits — the same visible-next-query semantics the
 # Python reader gets by re-resolving per plan. Commits made by OTHER
 # processes become visible at the next registration (every serving query
-# re-registers; a long-lived session that never re-registers fails loudly
-# on the vanished old manifest rather than serving stale rows).
+# re-registers). `current` only moves FORWARD — the version is encoded in
+# the dir name, and a swap to an older snapshot is a no-op — and each swap
+# removes the superseded snapshot dirs no live registration of this process
+# points at, so a long-lived session that never re-registers fails loudly
+# on a vanished file rather than serving stale rows; a frozen VERSION AS OF
+# twin points straight at its v<N> dir and keeps it. A listener that fails
+# never fails the commit (the commit is durable; txlog logs the error):
+# the registration it could not refresh is forgotten and dropped from the
+# catalog, so the next SELECT fails loudly instead of reading the stale
+# manifest.
 #
 # Ineligible snapshots — deletion vectors, column mapping, non-local
 # storage, partition columns that are not the schema tail — fall back to
@@ -230,12 +241,38 @@ def register_parquet_table(
 # FLIP between the two as commits change eligibility (e.g. a DV delete
 # flips to Python; a compaction that drops the DVs flips back).
 #
+# BOUNDED CHANGE-FEED ranges (register_txlog_changes_table with an
+# ending_version, file-level mode) serve the same way. The change-feed
+# planner (streaming/source.TxCdfStreamReader) gives each commit's
+# pre-image and post-image files; they link under two extra partition
+# levels below the table's own,
+#
+#     <sha(path)>/cdf_<db>.<name>_v<s>-<e>_<content>/<k=v>/
+#         _change_type=delete|insert/_commit_version=<v>/f<sha>.parquet
+#
+# pre-images as `delete`, post-images as `insert` — exactly the rows the
+# Python feed emits for its insert/filecdf splits. A bounded range is
+# immutable (later commits never change what versions s..e did), so the
+# table needs no commit listener and keeps no freshness contract. Its
+# columns are the table's CURRENT schema at registration, as the Python
+# feed's are; re-registering picks up a later schema change. Eligibility
+# is checked over EVERY pre and post entry of the range, not just the
+# snapshot at e: a deletion vector, column mapping, a non-local file or a
+# file whose partition layout differs from the table's sends the range to
+# the Python source, as do row-keyed and open-ended feeds and ranges the
+# planner refuses (vacuumed, inverted, beyond current — the Python source
+# raises those at the first SELECT, as before). Widened columns stay
+# native: Spark's parquet reader up-casts the narrow physical types the
+# way the Arrow path casts them. The registration name is part of the dir
+# key, and re-registering a name removes its previous range dir.
+#
 # Writes: all DML/DDL routed through core/sql_dml resolves the table back
 # to txlog storage via TBLPROPERTIES (so MERGE/INSERT/DELETE keep their
-# transactional semantics and the post-commit refresh), but a RAW
-# ``spark.sql("INSERT INTO …")`` on a read-optimized table would write
-# bare parquet into the manifest directory — hence read_optimized is an
-# explicit OPT-IN for serving registrations, never the default.
+# transactional semantics and the post-commit refresh; change-feed tables
+# refuse DML), but a RAW ``spark.sql("INSERT INTO …")`` on a
+# read-optimized table would write bare parquet into the manifest
+# directory — hence read_optimized is an explicit OPT-IN for serving
+# registrations, never the default.
 
 _NATIVE_PROP_PATH = "spark_graft.txlog.path"
 _NATIVE_PROP_EXTRA = "spark_graft.txlog.extra"
@@ -244,6 +281,9 @@ _NATIVE_PROP_EXTRA = "spark_graft.txlog.extra"
 _NATIVE_STATE: dict[tuple[str, str, str], dict] = {}
 # (appId, normalized path) -> {(db, name)} of current-serving native tables
 _SERVING_BY_PATH: dict[tuple[str, str], set[tuple[str, str]]] = {}
+# a snapshot manifest dir name: v<version>_<content hash>
+_SNAPSHOT_DIR = re.compile(r"v(\d+)_[0-9a-f]+")
+_CDF_DIR_PREFIX = "cdf_"
 
 
 def _native_serving_enabled() -> bool:
@@ -289,35 +329,38 @@ def _native_ineligible_reason(path: str, manifest: dict) -> str | None:
     return None
 
 
-def _build_native_manifest(path: str, manifest: dict) -> str:
-    """Materialize the snapshot's live files as a symlink directory
-    (idempotent, content-keyed, atomically published) and return it.
-    Metadata only: links, never data."""
+def _build_native_manifest(
+    path: str, key: str, files: list[tuple[dict, tuple[str, ...]]]
+) -> str:
+    """Materialize ``files`` — (manifest entry, extra ``k=v`` dir segments
+    below the entry's own partition dirs) — as the symlink directory
+    ``<serving root>/<key>_<content>`` (idempotent, content-keyed,
+    atomically published) and return it. Metadata only: links, never
+    data."""
     from ..sources import txlog as TX
 
     root = path.rstrip("/")
     content = hashlib.sha1(
         "\n".join(
             sorted(
-                f"{f['path']}:{f.get('rows', '')}:{f.get('bytes', '')}"
-                for f in manifest["files"]
+                f"{f['path']}:{f.get('rows', '')}:{f.get('bytes', '')}:"
+                + "/".join(segs)
+                for f, segs in files
             )
         ).encode()
     ).hexdigest()[:10]
-    vdir = os.path.join(
-        _serving_root(path), f"v{manifest['version']}_{content}"
-    )
+    vdir = os.path.join(_serving_root(path), f"{key}_{content}")
     if os.path.isdir(vdir):
         return vdir
     tmp = f"{vdir}.build-{uuid.uuid4().hex[:8]}"
     os.makedirs(tmp, exist_ok=True)
-    for f in manifest["files"]:
+    for f, segs in files:
         full, bd = TX._resolve_file(root, f["path"])
         if full.startswith("file:"):
             full = full[len("file:"):]
         rel = full[len(bd):].lstrip("/") if full.startswith(bd) else ""
         part_dirs = [seg for seg in rel.split("/")[:-1] if "=" in seg]
-        d = os.path.join(tmp, *part_dirs)
+        d = os.path.join(tmp, *part_dirs, *segs)
         os.makedirs(d, exist_ok=True)
         link = "f" + hashlib.sha1(full.encode()).hexdigest()[:16] + ".parquet"
         os.symlink(full, os.path.join(d, link))
@@ -325,23 +368,89 @@ def _build_native_manifest(path: str, manifest: dict) -> str:
         os.rename(tmp, vdir)
     except OSError:
         # lost a build race: the winner's dir is content-identical
-        import shutil
-
         shutil.rmtree(tmp, ignore_errors=True)
         if not os.path.isdir(vdir):
             raise
     return vdir
 
 
-def _swap_current(path: str, vdir: str) -> str:
-    """Atomically point ``<serving root>/current`` at ``vdir``; returns the
-    stable current path (the catalog LOCATION)."""
+def _snapshot_version(dirname: str) -> int:
+    """The version a ``v<N>_<content>`` snapshot dir serves; -1 for any
+    other entry of a serving root."""
+    m = _SNAPSHOT_DIR.fullmatch(dirname)
+    return int(m.group(1)) if m else -1
+
+
+@contextlib.contextmanager
+def _serving_lock(root: str):
+    """Serialize `current` swaps (and their GC) of one serving root across
+    threads and processes."""
+    import fcntl
+
+    os.makedirs(root, exist_ok=True)
+    fd = os.open(os.path.join(root, ".lock"), os.O_CREAT | os.O_RDWR)
+    try:
+        fcntl.flock(fd, fcntl.LOCK_EX)
+        yield
+    finally:
+        os.close(fd)
+
+
+def _swap_current(spark: SparkSession, path: str, vdir: str) -> str:
+    """Point ``<serving root>/current`` at ``vdir`` and return the stable
+    current path (the catalog LOCATION). Forward only: when ``current``
+    already serves a newer snapshot of the table the swap is a no-op, so
+    racing registrations never move serving back (a served version NEWER
+    than the table's own belongs to a dropped-and-recreated table and is
+    replaced). A swap removes the snapshot dirs it supersedes."""
+    from ..sources import txlog as TX
+
     root = _serving_root(path)
     cur = os.path.join(root, "current")
-    tmp = os.path.join(root, f".current-{uuid.uuid4().hex[:8]}")
-    os.symlink(os.path.basename(vdir), tmp)
-    os.replace(tmp, cur)
+    name = os.path.basename(vdir)
+    with _serving_lock(root):
+        try:
+            served = _snapshot_version(os.readlink(cur))
+        except FileNotFoundError:
+            served = -1
+        if served > _snapshot_version(name):
+            live = TX.current_version(spark, path)
+            if live is not None and served <= live:
+                return cur
+        tmp = os.path.join(root, f".current-{uuid.uuid4().hex[:8]}")
+        os.symlink(name, tmp)
+        os.replace(tmp, cur)
+        _gc_snapshots(root, name)
     return cur
+
+
+def _gc_snapshots(root: str, keep: str) -> None:
+    """Remove the snapshot dirs of ``root`` that ``keep`` supersedes (same
+    or older version) and that no live registration of this process points
+    at — frozen time-travel twins keep theirs."""
+    keep_v = _snapshot_version(keep)
+    live = {st["location"] for st in _NATIVE_STATE.values()}
+    for entry in os.listdir(root):
+        d = os.path.join(root, entry)
+        v = _snapshot_version(entry)
+        if entry != keep and 0 <= v <= keep_v and d not in live:
+            shutil.rmtree(d, ignore_errors=True)
+
+
+def _native_state_put(key: tuple[str, str, str], st: dict | None) -> None:
+    """Record (``None``: forget) the native registration under ``key``. A
+    change-feed range dir the name stops serving is removed unless another
+    live registration points at it."""
+    prev = _NATIVE_STATE.pop(key, None)
+    if st is not None:
+        _NATIVE_STATE[key] = st
+    loc = prev["location"] if prev else None
+    if (
+        loc
+        and os.path.basename(loc).startswith(_CDF_DIR_PREFIX)
+        and loc not in {s["location"] for s in _NATIVE_STATE.values()}
+    ):
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 def _schema_ddl(spark: SparkSession, schema_json: str) -> str:
@@ -349,6 +458,41 @@ def _schema_ddl(spark: SparkSession, schema_json: str) -> str:
         schema_json
     )
     return jtype.toDDL()
+
+
+def _create_native_table(
+    spark: SparkSession,
+    db: str,
+    name: str,
+    schema_json: str,
+    pcols: list[str],
+    location: str,
+    path: str,
+    extra: dict,
+) -> str:
+    """(Re-)create ``db.name`` as an external parquet table at
+    ``location``; TBLPROPERTIES carry the txlog path and options so DML by
+    name routes to (or is refused by) the transactional writers."""
+    fq = f"{db}.{name}"
+    ensure_database(spark, db)
+    _drop_any(spark, fq)
+    part_clause = (
+        " PARTITIONED BY (" + ", ".join(f"`{c}`" for c in pcols) + ")"
+        if pcols
+        else ""
+    )
+    props = (
+        f"'{_NATIVE_PROP_PATH}'='{_sq(path.rstrip('/'))}', "
+        f"'{_NATIVE_PROP_EXTRA}'='{_sq(json.dumps(extra, sort_keys=True))}'"
+    )
+    spark.sql(
+        f"CREATE TABLE {fq} ({_schema_ddl(spark, schema_json)}) "
+        f"USING parquet{part_clause} LOCATION '{_sq(location)}' "
+        f"TBLPROPERTIES ({props})"
+    )
+    if pcols:
+        spark.sql(f"MSCK REPAIR TABLE {fq}")
+    return fq
 
 
 def _native_register(
@@ -368,8 +512,10 @@ def _native_register(
     if _native_ineligible_reason(path, manifest) is not None:
         return None
     frozen = "versionasof" in extra or "timestampasof" in extra
-    vdir = _build_native_manifest(path, manifest)
-    location = vdir if frozen else _swap_current(path, vdir)
+    vdir = _build_native_manifest(
+        path, f"v{manifest['version']}", [(f, ()) for f in manifest["files"]]
+    )
+    location = vdir if frozen else _swap_current(spark, path, vdir)
     pcols = TX.table_partition_columns(manifest)
     fq = f"{db}.{name}"
     key = _reg_key(spark, db, name)
@@ -379,11 +525,8 @@ def _native_register(
         and st["schema"] == manifest["schema"]
         and st["pcols"] == pcols
         and st["location"] == location
+        and spark.catalog.tableExists(fq)
     )
-    try:
-        reusable = reusable and spark.catalog.tableExists(fq)
-    except Exception:
-        reusable = False
     if reusable:
         # same catalog entry, new file set behind the swapped symlink:
         # drop the cached listing; SYNC picks up added/removed partitions
@@ -391,30 +534,18 @@ def _native_register(
         if pcols:
             spark.sql(f"MSCK REPAIR TABLE {fq} SYNC PARTITIONS")
     else:
-        ensure_database(spark, db)
-        _drop_any(spark, fq)
-        part_clause = (
-            " PARTITIONED BY (" + ", ".join(f"`{c}`" for c in pcols) + ")"
-            if pcols
-            else ""
+        _create_native_table(
+            spark, db, name, manifest["schema"], pcols, location, path, extra
         )
-        props = (
-            f"'{_NATIVE_PROP_PATH}'='{_sq(path.rstrip('/'))}', "
-            f"'{_NATIVE_PROP_EXTRA}'='{_sq(json.dumps(extra, sort_keys=True))}'"
-        )
-        spark.sql(
-            f"CREATE TABLE {fq} ({_schema_ddl(spark, manifest['schema'])}) "
-            f"USING parquet{part_clause} LOCATION '{_sq(location)}' "
-            f"TBLPROPERTIES ({props})"
-        )
-        if pcols:
-            spark.sql(f"MSCK REPAIR TABLE {fq}")
-    _NATIVE_STATE[key] = {
-        "path": path.rstrip("/"),
-        "schema": manifest["schema"],
-        "pcols": pcols,
-        "location": location,
-    }
+    _native_state_put(
+        key,
+        {
+            "path": path.rstrip("/"),
+            "schema": manifest["schema"],
+            "pcols": pcols,
+            "location": location,
+        },
+    )
     return fq
 
 
@@ -437,10 +568,25 @@ def _subscribe_serving(
             regs.discard((db, name))
 
 
+def _invalidate_registration(
+    spark: SparkSession, db: str, name: str, path: str
+) -> None:
+    """Forget a registration that could not be refreshed and drop its
+    catalog entry: the next SELECT fails loudly (or the caller
+    re-registers) instead of reading a stale manifest."""
+    key = _reg_key(spark, db, name)
+    _REG_CACHE.pop(key, None)
+    _native_state_put(key, None)
+    _subscribe_serving(spark, db, name, path, wanted=False)
+    _drop_any(spark, f"{db}.{name}")
+
+
 def _refresh_native_serving(spark, path: str, version: int) -> None:
     """Post-commit listener: re-register every current-serving native
     table of ``path`` so the next SELECT reads the new snapshot (or flips
-    back to the Python source when the commit made it ineligible)."""
+    back to the Python source when the commit made it ineligible). A
+    registration whose refresh fails is invalidated; the first error is
+    re-raised once every registration had its turn."""
     if spark is None:
         return
     try:
@@ -448,8 +594,15 @@ def _refresh_native_serving(spark, path: str, version: int) -> None:
     except Exception:
         return
     regs = _SERVING_BY_PATH.get((app, path.rstrip("/")))
+    failed: Exception | None = None
     for db, name in sorted(regs or ()):
-        register_txlog_table(spark, db, name, path, read_optimized=True)
+        try:
+            register_txlog_table(spark, db, name, path, read_optimized=True)
+        except Exception as exc:
+            _invalidate_registration(spark, db, name, path)
+            failed = failed or exc
+    if failed is not None:
+        raise failed
 
 
 def register_txlog_table(
@@ -529,7 +682,7 @@ def register_txlog_table(
             if fq is not None:
                 _reg_done(spark, db, name, desc)
                 return fq
-    _NATIVE_STATE.pop(_reg_key(spark, db, name), None)
+    _native_state_put(_reg_key(spark, db, name), None)
     fmt = pinned_txlog_source(spark, path, extra or None)
     ensure_database(spark, db)
     _drop_any(spark, f"{db}.{name}")
@@ -557,7 +710,13 @@ def register_txlog_changes_table(
     (:func:`~..streaming.source.pinned_txlog_source` with extra
     options), because catalog-table scans hand Python data sources an
     empty option map. ``row_keyed=True`` (requires row tracking) makes
-    rewrites cancel, so the named feed shows only real changes."""
+    rewrites cancel, so the named feed shows only real changes.
+
+    A bounded file-level range (``ending_version`` given, not
+    ``row_keyed``) whose files are all eligible serves instead as a
+    NATIVE parquet table over a change-feed symlink manifest (see the
+    read-optimized block comment above; ``SPARK_GRAFT_SQL_NATIVE=0``
+    turns it off). Re-registering the same range is a cache hit."""
     from ..streaming.source import pinned_txlog_source
 
     extra = {
@@ -568,11 +727,84 @@ def register_txlog_changes_table(
         extra["endingversion"] = str(ending_version)
     if row_keyed:
         extra["rowkeyed"] = "true"
+    bounded = ending_version is not None and not row_keyed
+    if bounded and _native_serving_enabled():
+        fq = _native_changes_register(spark, db, name, path, extra)
+        if fq is not None:
+            return fq
+    key = _reg_key(spark, db, name)
+    _REG_CACHE.pop(key, None)
+    _native_state_put(key, None)
     fmt = pinned_txlog_source(spark, path, extra)
     ensure_database(spark, db)
     _drop_any(spark, f"{db}.{name}")
     spark.sql(f"CREATE TABLE {db}.{name} USING {fmt}")
     return f"{db}.{name}"
+
+
+def _native_changes_register(
+    spark: SparkSession, db: str, name: str, path: str, extra: dict
+) -> str | None:
+    """Register the bounded change-feed range of ``extra`` as a native
+    parquet table partitioned by (table partition columns,
+    ``_change_type``, ``_commit_version``); None (caller registers the
+    Python source) when the planner refuses the range or any of its files
+    is ineligible."""
+    from ..sources import txlog as TX
+    from ..streaming.source import (
+        _CDF_TYPE,
+        _CDF_VERSION,
+        TxCdfBatchReader,
+        _cdf_file_sides,
+        _cdf_schema_json,
+    )
+
+    root = path.rstrip("/")
+    cur = TX.current_version(spark, root)
+    if cur is None:
+        return None
+    manifest = TX.read_manifest(spark, root, cur)
+    schema = manifest.get("schema")
+    if not schema:
+        return None
+    # the feed's columns are the CURRENT schema (the Python feed's), so a
+    # schema change since the last registration misses the cache
+    desc = (
+        "txlog_changes",
+        root,
+        tuple(sorted(extra.items())),
+        hashlib.sha1(schema.encode()).hexdigest(),
+    )
+    if _reg_fresh(spark, db, name, desc):
+        return f"{db}.{name}"
+    try:
+        parts = TxCdfBatchReader(schema, {**extra, "path": root}).partitions()
+    except (ValueError, RuntimeError, FileNotFoundError, NotImplementedError):
+        # vacuumed, inverted or beyond-current windows: the Python source
+        # raises the same error at the first SELECT
+        return None
+    files: list[tuple[dict, tuple[str, ...]]] = []
+    for p in parts:
+        for change, refs in _cdf_file_sides(p):
+            segs = (f"{_CDF_TYPE}={change}", f"{_CDF_VERSION}={p.version}")
+            files.extend(({"path": rel, "dv": dv}, segs) for rel, dv in refs)
+    ranged = dict(manifest, files=[f for f, _ in files])
+    if _native_ineligible_reason(root, ranged) is not None:
+        return None
+    s, e = extra["startingversion"], extra["endingversion"]
+    key = f"{_CDF_DIR_PREFIX}{_ident(db)}.{_ident(name)}_v{s}-{e}"
+    vdir = _build_native_manifest(root, key, files)
+    cdf_schema = _cdf_schema_json(schema)
+    pcols = TX.table_partition_columns(ranged) + [_CDF_TYPE, _CDF_VERSION]
+    fq = _create_native_table(
+        spark, db, name, cdf_schema, pcols, vdir, root, extra
+    )
+    _native_state_put(
+        _reg_key(spark, db, name),
+        {"path": root, "schema": cdf_schema, "pcols": pcols, "location": vdir},
+    )
+    _reg_done(spark, db, name, desc)
+    return fq
 
 
 def _register_union_view(

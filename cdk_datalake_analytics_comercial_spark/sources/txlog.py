@@ -52,6 +52,7 @@ from __future__ import annotations
 import datetime as _dt
 import decimal as _decimal
 import json
+import logging
 import os
 import re
 import time
@@ -59,6 +60,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+_logger = logging.getLogger(__name__)
 
 _LOG = "_txlog"
 _DATA = "data"
@@ -1980,9 +1983,12 @@ def _commit(spark: SparkSession, path: str, build) -> int:
 # a READ-OPTIMIZED catalog registration (native parquet relation over a
 # snapshot manifest, core/sql_serving.py) is refreshed the moment any commit
 # lands through this driver — the same freshness the Python Data Source gets
-# by re-resolving per query plan. Listener failures propagate: a registration
-# that can no longer be refreshed must fail loudly, never serve stale rows
-# (the commit itself is already durable at that point).
+# by re-resolving per query plan. A listener failure never propagates: the
+# commit is already durable, and an error here would look like a failed
+# write that a caller retries (committing twice). It is logged once at WARN,
+# and the listener invalidates what it could not refresh (the serving layer
+# drops that registration, so its next read fails loudly instead of serving
+# stale rows); the committed version is returned as usual.
 _COMMIT_LISTENERS: list = []
 
 
@@ -1995,7 +2001,15 @@ def add_commit_listener(fn) -> None:
 
 def _notify_commit(spark: SparkSession, path: str, version: int) -> None:
     for fn in list(_COMMIT_LISTENERS):
-        fn(spark, path, version)
+        try:
+            fn(spark, path, version)
+        except Exception as exc:
+            _logger.warning(
+                "post-commit listener %s failed after version %d of %s "
+                "committed: %s",
+                getattr(fn, "__qualname__", fn), version, path, exc,
+                exc_info=True,
+            )
 
 
 # --------------------------------------------------------------------------

@@ -1155,6 +1155,19 @@ def _rows_equal(a: tuple, b: tuple) -> bool:
     return all(_canon_value(x) == _canon_value(y) for x, y in zip(a, b))
 
 
+def _cdf_file_sides(
+    part: _TxCdfPartition,
+) -> list[tuple[str, list[tuple[str, list[str]]]]]:
+    """The ``(change type, files)`` sides of a file-level split, in emit
+    order: an ``insert`` split's post files; a ``filecdf`` split's pre
+    files as ``delete`` then its post files as ``insert``. Shared by the
+    Python reader and the native change-feed manifest
+    (`core/sql_serving._native_changes_register`)."""
+    if part.kind == "insert":
+        return [("insert", part.post)]
+    return [("delete", part.pre), ("insert", part.post)]
+
+
 def _read_cdf_partition(part: _TxCdfPartition):
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1168,12 +1181,9 @@ def _read_cdf_partition(part: _TxCdfPartition):
         )
         return _read_partition(inner)
 
-    if part.kind == "insert":
-        yield from _tag_batches(_rows_of(part.post), "insert", part.version)
-        return
-    if part.kind == "filecdf":
-        yield from _tag_batches(_rows_of(part.pre), "delete", part.version)
-        yield from _tag_batches(_rows_of(part.post), "insert", part.version)
+    if part.kind in ("insert", "filecdf"):
+        for change, files in _cdf_file_sides(part):
+            yield from _tag_batches(_rows_of(files), change, part.version)
         return
     # row-keyed diff: unchanged (id, values) pairs cancel
     spark_schema = StructType.fromJson(json.loads(part.table_schema_json))
