@@ -7,11 +7,30 @@ persona ``UPDATE``/``DELETE``/``MERGE INTO``/``INSERT OVERWRITE`` by
 table name. The engine has every writer already —
 ``txlog.tx_update/tx_delete/tx_merge/tx_write`` — but until this module
 a SQL-only consumer could not express the engine's own GDPR
-point-delete. :func:`sql_dml` parses the statement head, resolves the
-catalog name back to its txlog path through the pinned-format registry,
-and dispatches to the native writer; anything it does not recognize
-passes through ``spark.sql`` unchanged, so it can serve as the single
-SQL entry point.
+point-delete. :func:`sql_dml` resolves the catalog name back to its
+txlog path through the pinned-format registry and dispatches to the
+native writer; anything it does not recognize passes through
+``spark.sql`` unchanged, so it can serve as the single SQL entry point.
+
+Parse, then dispatch: DML is parsed ONCE by Spark's own SQL parser
+(``sessionState().sqlParser().parsePlan``) and routed on the class of
+the unresolved plan — ``DeleteFromTable``, ``UpdateTable``,
+``MergeIntoTable``, ``OverwriteByExpression`` (``INSERT INTO … REPLACE
+WHERE``) and ``InsertIntoStatement``. Quotes, comments, CASE and nested
+parentheses are therefore the parser's business, never this module's.
+Source queries, subqueries and INSERT queries run as DataFrames over
+their parsed sub-plans. The text of a condition or an assignment value
+is the statement slice its expression covers: ``(min startIndex, max
+stopIndex)`` over the expression's WHOLE subtree, because Spark records
+the operator token as the start of a predicate node (``id BETWEEN 3
+AND 9`` starts at ``BETWEEN``) and the inner expression, not its
+parentheses, as the origin of a parenthesized operand. Column
+references are rewritten at the spans of their ``UnresolvedAttribute``
+nodes. Verbs Spark does not parse (``CONVERT TO TXLOG``, ``COPY
+INTO``, ``… USING txlog`` DDL, ``OPTIMIZE``, ``VACUUM``, ``DESCRIBE
+HISTORY|DETAIL``, ``RESTORE``) and the ones this engine serves itself
+(``TRUNCATE``, ``ALTER TABLE``, ``SHOW TBLPROPERTIES``, time travel)
+keep their statement-head regexes.
 
 Supported statements (``db.table`` names registered by
 ``sql_serving.register_txlog_table`` / ``register_sql``):
@@ -19,7 +38,7 @@ Supported statements (``db.table`` names registered by
 - ``DELETE FROM db.t WHERE <pred>`` — including the GDPR
   bulk-delete-by-list shape ``WHERE k IN (SELECT …) [AND …]``: small
   key sets inline to a literal IN-list (file pruning intact), large
-  ones route as a distributed merge-delete (``_delete_subquery``).
+  ones route as a distributed merge-delete (``_dml_by_subquery``).
 - ``UPDATE db.t SET c = <expr>, ... [WHERE <pred>]`` — the redact-by-
   list shape ``WHERE k IN (SELECT …)`` routes the same two tiers as
   the subquery DELETE.
@@ -35,10 +54,7 @@ Supported statements (``db.table`` names registered by
   ``WHEN NOT MATCHED [AND <cond>] THEN INSERT (cols) VALUES (exprs)``,
   ``WHEN NOT MATCHED BY SOURCE [AND <cond>] THEN DELETE | UPDATE SET …``
   — first-match clause order, expressions over both sides, the whole
-  merge one Catalyst plan. CASE expressions inside clause conditions
-  and assignments parse correctly: the splitter treats everything
-  between CASE and END as not-top-level, so a CASE's WHEN/THEN never
-  collide with the clause grammar.
+  merge one Catalyst plan.
 - ``INSERT INTO db.t [(cols)] <query|VALUES …>`` — atomic append via
   ``tx_write`` (unlike the Python-Data-Source INSERT path, this honors
   identity/default/generated columns, CHECK constraints, bloom
@@ -105,17 +121,18 @@ optimistic CAS — a racing ``tx_write`` overlapping the predicate raises
 ``tests/test_sql_dml.py``).
 
 :func:`sql_script` runs a multi-statement ``.sql`` text through the
-same router (top-level ``;`` split, ``--`` comments stripped).
+same router (comments stripped, then a top-level ``;`` split).
 """
 
 from __future__ import annotations
 
 import re
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txlog import _quoted_spans, _sub_outside_quotes  # noqa: F401
+from ..sources.txlog import _quoted_spans, _sub_outside_quotes
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"
 _TBL = rf"(?:{_IDENT})(?:\.(?:{_IDENT}))?"
@@ -181,8 +198,13 @@ def txlog_table_path(spark: SparkSession, table: str) -> tuple[str, dict] | None
 
         try:
             extra = _json.loads(props.get(_NATIVE_PROP_EXTRA) or "{}")
-        except ValueError:
-            extra = {}
+        except ValueError as e:
+            # the extra options carry the frozen / change-feed pins that
+            # _writable refuses DML on — never guess them away
+            raise SqlDmlError(
+                f"{fq}: malformed {_NATIVE_PROP_EXTRA} table property "
+                f"({e}) — re-register the table"
+            ) from e
         return tpath, extra
     pinned = _PINNED_SOURCES.get(provider)
     if pinned is None:
@@ -432,10 +454,6 @@ def _merge_range(where: dict, col: str, lo, hi) -> bool:
     return True
 
 
-_DELETE = re.compile(
-    rf"^\s*DELETE\s+FROM\s+({_TBL})\s*(?:WHERE\s+(.*))?$",
-    re.IGNORECASE | re.DOTALL,
-)
 _OPTIMIZE = re.compile(
     rf"^\s*OPTIMIZE\s+({_TBL})\s*"
     r"(?:WHERE\s+(.*?))?\s*"
@@ -495,21 +513,6 @@ _CTAS_LOCATION = re.compile(
 _CTAS_PARTITIONED = re.compile(
     rf"PARTITIONED\s+BY\s*\(((?:\s*(?:{_IDENT})\s*,?)+)\)", re.IGNORECASE
 )
-_UPDATE = re.compile(
-    rf"^\s*UPDATE\s+({_TBL})\s+SET\s+(.*)$", re.IGNORECASE | re.DOTALL
-)
-_MERGE = re.compile(
-    rf"^\s*MERGE\s+(WITH\s+SCHEMA\s+EVOLUTION\s+)?INTO\s+({_TBL})"
-    rf"(?:\s+AS)?(?:\s+({_IDENT}))?\s+USING\s+",
-    re.IGNORECASE,
-)
-_INSERT = re.compile(
-    rf"^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?({_TBL})\s*"
-    rf"(?:PARTITION\s*\(([^)]*)\)\s*)?"
-    rf"(\((?:\s*(?:{_IDENT})\s*,?)+\))?\s*(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-
 
 _COPY_INTO = re.compile(
     rf"^\s*COPY\s+INTO\s+({_TBL})\s+FROM\s+'((?:[^']|'')*)'\s+"
@@ -749,81 +752,236 @@ def sql_dml(spark: SparkSession, statement: str):
         r = _show_properties(spark, m.group(1))
         if r is not None:
             return r
-    m = _DELETE.match(stmt)
-    if m:
-        r = _delete(spark, m.group(1), m.group(2))
-        return r if r is not None else spark.sql(stmt)
-    m = _UPDATE.match(stmt)
-    if m:
-        r = _update(spark, m.group(1), m.group(2))
-        return r if r is not None else spark.sql(stmt)
-    m = _MERGE.match(stmt)
-    if m:
-        return _merge(spark, stmt, m)
-    m = _INSERT.match(stmt)
-    if m:
-        r = _insert(spark, *m.group(1, 2, 4, 5), part_spec=m.group(3))
-        return r if r is not None else spark.sql(stmt)
-    return spark.sql(stmt)
+    plan = _parse_statement(spark, stmt)
+    kind = plan.nodeName()
+    route = {
+        "DeleteFromTable": _delete,
+        "UpdateTable": _update,
+        "MergeIntoTable": _merge,
+        "OverwriteByExpression": _insert_replace_where,
+        "InsertIntoStatement": _insert,
+    }.get(kind)
+    if route is None:
+        return spark.sql(stmt)
+    merge = kind == "MergeIntoTable"
+    table, _ = _relation(plan.targetTable() if merge else plan.table())
+    pinned = txlog_table_path(spark, table) if table else None
+    if pinned is None:
+        if merge:
+            raise SqlDmlError(
+                f"MERGE INTO {table}: not a registered txlog table (MERGE "
+                "is only routable to the transactional writer)"
+            )
+        return spark.sql(stmt)  # plain tables keep Spark's own DML
+    return route(spark, stmt, plan, table, _writable(table, pinned)[0])
 
 
 def sql_script(spark: SparkSession, script: str) -> list:
     """Execute a multi-statement SQL script (the ``.sql``-file persona):
-    statements split on TOP-LEVEL semicolons (quoted literals, backquoted
-    identifiers and parenthesized subqueries keep theirs), line comments
-    (``-- …``) stripped, each statement routed through :func:`sql_dml`.
-    Returns the per-statement results in order; the first failing
-    statement raises (no savepoints — the txlog writers are each
-    atomic, so a failed script leaves every completed statement
+    comments stripped (:func:`_strip_comments`), then statements split
+    on TOP-LEVEL semicolons (quoted literals, backquoted identifiers and
+    parenthesized subqueries keep theirs), each routed through
+    :func:`sql_dml`. Returns the per-statement results in order; the
+    first failing statement raises (no savepoints — the txlog writers
+    are each atomic, so a failed script leaves every completed statement
     committed, exactly Delta's multi-statement semantics)."""
-    decommented = "\n".join(
-        _strip_line_comment(ln) for ln in script.splitlines()
-    )
     out = []
-    for stmt in _split_top(decommented, r";"):
+    for stmt in _split_top(_strip_comments(script), r";"):
         if stmt.strip():
             out.append(sql_dml(spark, stmt))
     return out
 
 
-def _strip_line_comment(line: str) -> str:
-    """Drop a ``-- comment`` tail unless the dashes sit inside a quoted
-    region."""
-    m = re.search(r"--", line)
-    while m:
-        if any(a <= m.start() < b for a, b in _quoted_spans(line)):
-            m = re.compile(r"--").search(line, m.end())
-            continue
-        return line[: m.start()]
-    return line
+def _strip_comments(text: str) -> str:
+    """Drop ``-- …`` and (nested, as Spark's lexer nests them) ``/* …
+    */`` comments in one quote-aware pass over the whole text: a comment
+    opener inside a string literal or a backquoted identifier is data,
+    and a literal may span lines. A bracketed comment becomes one space;
+    a line comment keeps its newline; optimizer hints (``/*+ … */``)
+    stay."""
+    out, i, n = [], 0, len(text)
+    while i < n:
+        c = text[i]
+        if c in "'\"`":
+            j = i + 1
+            while j < n and text[j] != c:
+                j += 2 if text[j] == "\\" and c != "`" else 1
+            out.append(text[i:j + 1])
+            i = j + 1
+        elif text.startswith("--", i):
+            j = text.find("\n", i)
+            i = n if j == -1 else j
+        elif text.startswith("/*", i) and not text.startswith("/*+", i):
+            depth, i = 1, i + 2
+            while i < n and depth:
+                step = text[i:i + 2]
+                depth += (step == "/*") - (step == "*/")
+                i += 2 if step in ("/*", "*/") else 1
+            out.append(" ")
+        else:
+            out.append(c)
+            i += 1
+    return "".join(out)
 
 
-def _has_select_outside_quotes(pred: str) -> bool:
-    """True when the predicate carries a SELECT token OUTSIDE quoted
-    literals — ``WHERE note = 'SELECT me'`` is a plain predicate, not a
-    subquery, and must not route to the subquery tier."""
-    spans = _quoted_spans(pred)
-    return any(
-        not any(a <= m.start() < b for a, b in spans)
-        for m in re.finditer(r"\bSELECT\b", pred, re.IGNORECASE)
+# ------------------------------------------------------ the parse tree
+#
+# Thin views over the JVM nodes of Spark's unresolved plan. Every
+# accessor is a py4j round trip, so an expression is mirrored into
+# Python once (class name, own origin span, children) and read there.
+
+# expression nodes that carry a query plan of their own
+_SUBQUERIES = frozenset({"ListQuery", "Exists", "ScalarSubquery"})
+
+
+def _parse_statement(spark: SparkSession, stmt: str):
+    """Spark's unresolved plan for ``stmt``; a malformed statement
+    raises pyspark's ``ParseException`` — except the REPLACE WHERE
+    variants Spark's grammar lacks, which keep the router's refusal."""
+    try:
+        return spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
+    except ParseException as e:
+        if re.match(r"\s*INSERT\b.*\bREPLACE\s+WHERE\b", stmt, re.I | re.S):
+            raise SqlDmlError(
+                "INSERT: REPLACE WHERE takes the plain `INSERT INTO t "
+                "REPLACE WHERE <pred> <query>` form (no OVERWRITE, column "
+                "list or PARTITION spec)"
+            ) from e
+        raise
+
+
+def _seq(jseq) -> list:
+    return [jseq.apply(i) for i in range(jseq.size())]
+
+
+def _opt(jopt):
+    return jopt.get() if jopt.isDefined() else None
+
+
+def _name(jattr) -> list[str]:
+    """Name parts of an ``UnresolvedAttribute`` (unquoted)."""
+    return [str(p) for p in _seq(jattr.nameParts())]
+
+
+def _df(spark: SparkSession, jplan) -> DataFrame:
+    """A DataFrame over a parsed sub-plan — what ``spark.sql`` builds
+    from that plan's own text."""
+    jvm = spark._jvm
+    return DataFrame(
+        jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, jplan
+        ),
+        spark,
     )
 
 
-def _delete(spark: SparkSession, table: str, pred: str | None):
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        return None
-    path, extra = _writable(table, pinned)
+def _relation(jplan) -> tuple[str | None, str | None]:
+    """``("db.t", alias)`` of a parsed table reference ``db.t [AS a]``;
+    the name is None when the plan is not a plain table name."""
+    alias = None
+    if jplan.nodeName() == "SubqueryAlias":
+        alias, jplan = str(jplan.alias()), jplan.child()
+    if jplan.nodeName() != "UnresolvedRelation":
+        return None, alias
+    return ".".join(str(p) for p in _seq(jplan.multipartIdentifier())), alias
+
+
+class _Expr:
+    """One parsed Catalyst expression mirrored into Python: class name,
+    its OWN origin span in ``sql``, its children (a subquery's plan is
+    not a child — ``j.plan()`` reaches it) and the JVM handle ``j``."""
+
+    __slots__ = ("j", "sql", "kind", "lo", "hi", "kids")
+
+    def __init__(self, j, sql: str):
+        self.j, self.sql, self.kind = j, sql, j.nodeName()
+        o = j.origin()
+        self.lo, self.hi = _opt(o.startIndex()), _opt(o.stopIndex())
+        if self.kind == "Literal" and j.sql() in ("true", "false"):
+            # the parser hands out shared TRUE/FALSE literal objects whose
+            # origin is that of whichever statement first built them
+            self.lo = self.hi = None
+        self.kids = [_Expr(c, sql) for c in _seq(j.children())]
+
+    def walk(self):
+        yield self
+        for k in self.kids:
+            yield from k.walk()
+
+    def span(self) -> tuple[int, int] | None:
+        """``(lo, hi)`` of the whole subtree in ``sql`` (see the module
+        docstring). A parenthesized leftmost operand's origin excludes
+        its parentheses, so a span that closes more of them than it
+        opens starts that many ``(`` earlier."""
+        spans = [(n.lo, n.hi) for n in self.walk() if n.lo is not None]
+        if not spans:
+            return None
+        lo, hi = min(a for a, _ in spans), max(b for _, b in spans)
+        seg = list(self.sql[lo:hi + 1])
+        for a, b in _quoted_spans(self.sql[lo:hi + 1]):
+            seg[a:b] = " " * (b - a)
+        depth = low = 0
+        for c in seg:
+            depth += (c == "(") - (c == ")")
+            low = min(low, depth)
+        for _ in range(-low):
+            lo = self.sql.rindex("(", 0, lo)
+        return lo, hi
+
+    @property
+    def text(self) -> str:
+        span = self.span()
+        # a bare TRUE/FALSE has no usable origin; its own SQL is exact
+        return self.j.sql() if span is None else self.sql[span[0]:span[1] + 1]
+
+    @property
+    def parts(self) -> list[str]:
+        return _name(self.j)
+
+    def conjuncts(self) -> list["_Expr"]:
+        if self.kind == "And":
+            return [c for k in self.kids for c in k.conjuncts()]
+        return [self]
+
+    def has_subquery(self) -> bool:
+        return any(n.kind in _SUBQUERIES for n in self.walk())
+
+
+def _rewrite_attrs(e: _Expr, fn) -> str:
+    """``e.text`` with every ``UnresolvedAttribute`` span replaced by
+    ``fn(name parts)``; ``fn`` returning None keeps it as written.
+    Function names, keywords, INTERVAL units and literals are not
+    attributes, so they are never touched."""
+    span = e.span()
+    if span is None:
+        return e.text
+    out, last = [], span[0]
+    attrs = (n for n in e.walk() if n.kind == "UnresolvedAttribute")
+    for n in sorted(attrs, key=lambda n: n.lo):
+        new = fn(n.parts)
+        if new is not None:
+            out += [e.sql[last:n.lo], new]
+            last = n.hi + 1
+    return "".join(out) + e.sql[last:span[1] + 1]
+
+
+def _delete(spark: SparkSession, stmt: str, plan, table: str, path: str):
     from ..sources.txlog import tx_delete
 
-    if not pred or not pred.strip():
+    pred = _Expr(plan.condition(), stmt)
+    # without WHERE the parser supplies the same shared TRUE literal an
+    # explicit `WHERE true` parses to (and `DELETE FROM t WHERE` parses
+    # WHERE as the table alias), so only the spelled-out form deletes all
+    if pred.text == "true" and not re.search(
+        r"\bWHERE\s+true\s*$", _strip_comments(stmt), re.I
+    ):
         raise SqlDmlError(
             f"DELETE FROM {table} without WHERE would truncate the table; "
             "say WHERE true to mean it"
         )
-    if _has_select_outside_quotes(pred):
-        return _delete_subquery(spark, table, path, pred)
-    where, where_equals, condition = parse_predicate(pred)
+    if pred.has_subquery():
+        return _dml_by_subquery(spark, table, path, pred)
+    where, where_equals, condition = parse_predicate(pred.text)
     return tx_delete(
         spark,
         path,
@@ -833,179 +991,127 @@ def _delete(spark: SparkSession, table: str, pred: str | None):
     )
 
 
-_IN_SUBQ = re.compile(
-    rf"^\s*({_IDENT})\s+(NOT\s+)?IN\s*\(\s*(SELECT\b.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
 # the point-DML-by-list path stays file-pruned up to this many keys;
 # larger subquery results route through the distributed merge
 _SUBQ_INLINE_MAX = 1000
 
 
-_EXISTS_CONJ = re.compile(
-    r"^\s*EXISTS\s*\(\s*(SELECT\b.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_CORR_EQ = re.compile(
-    rf"^\s*(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*=\s*"
-    rf"(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*$",
-    re.DOTALL,
-)
+def _exists_keys(
+    spark: SparkSession, table: str, verb: str, ex: _Expr
+) -> tuple[str, DataFrame]:
+    """The key set of ONE ``EXISTS (SELECT … FROM src WHERE <inner>)``
+    conjunct whose inner WHERE carries exactly one correlated equality
+    ``t.k = <src column>``: ``(k, SELECT <src column> FROM src [WHERE
+    rest])`` — the routable ``k IN (…)`` shape, semantically identical
+    for equality correlation (NULLs match neither way). The OUTER side
+    must be qualified by the target name (an unqualified name inside the
+    subquery scope binds to the source); any other outer reference, or
+    any other subquery shape, is refused loudly."""
+    parts = [p.lower() for p in table.split(".")]
+    outer = {parts[-1], ".".join(parts)}
+
+    def is_outer(n: _Expr) -> bool:
+        return (
+            n.kind == "UnresolvedAttribute"
+            and ".".join(n.parts[:-1]).lower() in outer
+        )
+
+    refusal = SqlDmlError(
+        f"{verb} {table}: this EXISTS shape is not routable — "
+        "supported: one EXISTS (SELECT … FROM src WHERE "
+        f"{parts[-1]}.k = <src column> [AND <src-only conjuncts>]); "
+        "otherwise rewrite as k IN (SELECT …) or as MERGE … WHEN MATCHED"
+    )
+    query = ex.j.plan()
+    filt = query.child() if query.nodeName() == "Project" else None
+    if filt is None or filt.nodeName() != "Filter":
+        raise refusal
+    corr, rest = None, []
+    for conj in _Expr(filt.condition(), ex.sql).conjuncts():
+        sides = conj.kids if conj.kind == "EqualTo" else []
+        if (
+            all(s.kind == "UnresolvedAttribute" for s in sides)
+            and [is_outer(s) for s in sides] in ([True, False], [False, True])
+        ):
+            if corr is not None:
+                raise refusal  # two correlated equalities
+            o, s = sides if is_outer(sides[0]) else sides[::-1]
+            corr = (o.parts[-1], s.text)
+        elif any(is_outer(n) for n in conj.walk()):
+            raise refusal  # would dangle outside the subquery
+        else:
+            rest.append(conj.text)
+    if corr is None:
+        raise refusal
+    keys = _df(spark, filt.child())
+    if rest:
+        keys = keys.where(" AND ".join(f"({c})" for c in rest))
+    return corr[0], keys.select(F.expr(corr[1]))
 
 
-def _exists_to_in(table: str, pred: str) -> str | None:
-    """Mechanically rewrite ONE top-level ``EXISTS (SELECT … FROM src
-    WHERE <inner>)`` conjunct whose inner WHERE carries exactly one
-    correlated equality ``t.k = <src side>`` (the OUTER side must be
-    qualified by the target name — an unqualified name inside the
-    subquery scope binds to the source) into the routable ``k IN
-    (SELECT <src side> FROM src [WHERE rest])`` shape — semantically
-    identical for equality correlation (NULLs match neither way).
-    Returns the rewritten predicate, or None when the shape does not
-    fit (the caller keeps the loud refusal)."""
-    parts = [_unquote(p) for p in table.split(".")]
-    outer = {parts[-1].lower(), ".".join(parts).lower()}
-
-    def is_outer(q: str | None) -> bool:
-        return q is not None and _unquote(q).lower() in outer
-
-    out_conjs: list[str] = []
-    rewrote = False
-    for conj in _split_top(pred, r"AND\b"):
-        m = _EXISTS_CONJ.match(conj)
-        if not m:
-            out_conjs.append(conj.strip())
-            continue
-        if rewrote:
-            return None  # two EXISTS conjuncts — not routable
-        halves = _split_top(m.group(1), r"WHERE\b")
-        if len(halves) != 2:
-            return None
-        head, inner_where = halves[0].strip(), halves[1]
-        fparts = _split_top(head, r"FROM\b")
-        if len(fparts) != 2:
-            return None  # select list carries its own FROM (subquery)
-        from_part = fparts[1].strip()
-        corr: tuple[str, str] | None = None
-        rest: list[str] = []
-        for ic in _split_top(inner_where, r"AND\b"):
-            cm = _CORR_EQ.match(ic)
-            if cm:
-                lq, lc, rq, rc = cm.groups()
-                if is_outer(lq) and not is_outer(rq):
-                    if corr is not None:
-                        return None  # two correlated equalities
-                    corr = (
-                        _unquote(lc),
-                        f"{rq}.{rc}" if rq else rc,
-                    )
-                    continue
-                if is_outer(rq) and not is_outer(lq):
-                    if corr is not None:
-                        return None
-                    corr = (
-                        _unquote(rc),
-                        f"{lq}.{lc}" if lq else lc,
-                    )
-                    continue
-            # any OTHER reference to the outer table inside the
-            # subquery would dangle after the rewrite — not routable.
-            # Qualifiers may be one OR two parts (t.col / db.t.col).
-            def refs_outer(txt: str) -> bool:
-                for qm in re.finditer(
-                    rf"(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*\.\s*{_IDENT}",
-                    txt,
-                ):
-                    quals = {_unquote(qm.group(2)).lower()}
-                    if qm.group(1):
-                        quals.add(
-                            f"{_unquote(qm.group(1)).lower()}"
-                            f".{_unquote(qm.group(2)).lower()}"
-                        )
-                    if quals & outer:
-                        return True
-                return False
-
-            if refs_outer(ic):
-                return None
-            rest.append(ic.strip())
-        if corr is None:
-            return None
-        sub = f"SELECT {corr[1]} FROM {from_part}"
-        if rest:
-            sub += " WHERE " + " AND ".join(rest)
-        out_conjs.append(f"{corr[0]} IN ({sub})")
-        rewrote = True
-    return " AND ".join(out_conjs) if rewrote else None
-
-
-def _parse_in_subquery(
-    table: str, verb: str, pred: str
-) -> tuple[str, str, list[str]]:
-    """Decompose ``<pred>`` into (key column, subquery SQL, residual
-    conjuncts) for the routable ``k IN (SELECT …) [AND …]`` shape, or
-    refuse loudly (OR-combined, NOT IN/NOT EXISTS, multiple
-    subqueries). A correlated-equality ``EXISTS`` rewrites onto the
-    same IN tier first (:func:`_exists_to_in`)."""
-    if len(_split_top(pred, r"OR\b")) > 1:
+def _subquery_keys(
+    spark: SparkSession, table: str, verb: str, pred: _Expr
+) -> tuple[str, DataFrame, list[str]]:
+    """Decompose a subquery-bearing WHERE into (key column, key
+    DataFrame, residual conjunct texts) for the routable ``k IN (SELECT
+    …) [AND …]`` shape, or refuse loudly (OR-combined, NOT IN/NOT
+    EXISTS, multiple subqueries). A correlated-equality ``EXISTS``
+    routes onto the same IN tier first (:func:`_exists_keys`)."""
+    if pred.kind == "Or":
         raise SqlDmlError(
             f"{verb} {table}: subquery predicates cannot combine "
             "with top-level OR — split the statement"
         )
-    if re.search(r"\bNOT\s+EXISTS\s*\(", pred, re.IGNORECASE):
+    if any(
+        n.kind == "Not" and n.kids[0].kind == "Exists" for n in pred.walk()
+    ):
         raise SqlDmlError(
             f"{verb} {table}: NOT EXISTS is refused — use MERGE … WHEN "
             "NOT MATCHED BY SOURCE for anti-join semantics"
         )
-    if re.search(r"\bEXISTS\s*\(", pred, re.IGNORECASE):
-        rewritten = _exists_to_in(table, pred)
-        if rewritten is None:
+    found, residual = [], []
+    for conj in pred.conjuncts():
+        if conj.kind == "Exists":
+            found.append(_exists_keys(spark, table, verb, conj))
+        elif conj.kind == "Not" and conj.kids[0].kind == "InSubquery":
             raise SqlDmlError(
-                f"{verb} {table}: this EXISTS shape is not routable — "
-                "supported: one EXISTS (SELECT … FROM src WHERE "
-                f"{_unquote(table.split('.')[-1])}.k = <src column> "
-                "[AND <src-only conjuncts>]); otherwise rewrite as "
-                "k IN (SELECT …) or as MERGE … WHEN MATCHED"
+                f"{verb} {table}: NOT IN (SELECT …) is refused "
+                "(NULL in the subquery silently matches nothing in "
+                "SQL) — use MERGE … WHEN NOT MATCHED BY SOURCE for "
+                "anti-join semantics"
             )
-        return _parse_in_subquery(table, verb, rewritten)
-    subq = None
-    residual: list[str] = []
-    for conj in _split_top(pred, r"AND\b"):
-        m = _IN_SUBQ.match(conj.strip())
-        if m:
-            if m.group(2):
-                raise SqlDmlError(
-                    f"{verb} {table}: NOT IN (SELECT …) is refused "
-                    "(NULL in the subquery silently matches nothing in "
-                    "SQL) — use MERGE … WHEN NOT MATCHED BY SOURCE for "
-                    "anti-join semantics"
-                )
-            if subq is not None:
-                raise SqlDmlError(
-                    f"{verb} {table}: at most one IN (SELECT …) "
-                    "conjunct is routable per statement"
-                )
-            subq = (_unquote(m.group(1)), m.group(3))
-            continue
-        if _has_select_outside_quotes(conj):
+        elif (
+            conj.kind == "InSubquery"
+            and len(conj.kids) == 2
+            and conj.kids[0].kind == "UnresolvedAttribute"
+            and len(conj.kids[0].parts) == 1
+        ):
+            key, query = conj.kids
+            found.append((key.parts[0], _df(spark, query.j.plan())))
+        elif conj.has_subquery():
             raise SqlDmlError(
                 f"{verb} {table}: cannot route subquery in "
-                f"{conj.strip()!r} (supported: one top-level "
+                f"{conj.text!r} (supported: one top-level "
                 "k IN (SELECT …) conjunct)"
             )
-        residual.append(conj.strip())
-    assert subq is not None  # caller saw SELECT; conjuncts covered it
-    return subq[0], subq[1], residual
+        else:
+            residual.append(conj.text)
+    if len(found) > 1:
+        raise SqlDmlError(
+            f"{verb} {table}: at most one IN (SELECT …) "
+            "conjunct is routable per statement"
+        )
+    return (*found[0], residual)
 
 
 def _subquery_keys_tier(
-    spark: SparkSession, table: str, verb: str, col: str, sql: str
+    spark: SparkSession, table: str, verb: str, col: str, keys_df: DataFrame
 ):
     """Run the IN-subquery once and pick the tier: returns
     ``("inline", [literal strings])`` when ≤ ``_SUBQ_INLINE_MAX``
     renderable distinct keys (file pruning stays intact), else
     ``("merge", keys_df)`` for the distributed hash semi-join path.
     An empty/all-NULL key list returns ``("empty", None)``."""
-    keys_df = spark.sql(sql)
     if len(keys_df.columns) != 1:
         raise SqlDmlError(
             f"{verb} {table}: IN subquery must produce exactly one "
@@ -1022,9 +1128,17 @@ def _subquery_keys_tier(
     return "merge", keys_df.toDF(col).distinct()
 
 
-def _delete_subquery(spark: SparkSession, table: str, path: str, pred: str):
+def _dml_by_subquery(
+    spark: SparkSession,
+    table: str,
+    path: str,
+    pred: _Expr,
+    set_items: dict[str, str] | None = None,
+):
     """``DELETE FROM t WHERE k IN (SELECT …) [AND …]`` — the GDPR
-    bulk-delete-by-list shape. Two-tier:
+    bulk-delete-by-list shape — and, with ``set_items``, ``UPDATE t SET
+    c = expr, … WHERE k IN (SELECT …) [AND …]``, the redact-by-list
+    shape. Two-tier:
 
     - ≤ ``_SUBQ_INLINE_MAX`` distinct keys: inlined as a literal IN-list
       and routed through the normal predicate path, so range-stats +
@@ -1032,88 +1146,55 @@ def _delete_subquery(spark: SparkSession, table: str, path: str, pred: str):
       bloom-indexed 100 TB table rewrites only the files that can
       contain the keys);
     - larger: routed as ``MERGE INTO t USING keys ON t.k = s.k WHEN
-      MATCHED THEN DELETE`` — a distributed hash semi-join delete, no
-      driver materialization beyond the tier probe.
+      MATCHED [AND residual] THEN DELETE | UPDATE SET …`` — a
+      distributed hash semi-join; past the tier probe no key is
+      collected. Assignments and residual conjuncts are qualified onto
+      the target side: they reference no source column, the key list
+      only selects rows.
 
-    ``NOT IN (SELECT …)`` and ``EXISTS`` are refused loudly (NOT IN's
-    null semantics are a trap; express the intent as WHEN NOT MATCHED BY
-    SOURCE THEN DELETE via MERGE)."""
-    from ..sources.txlog import current_version, tx_delete, tx_merge
+    ``NOT IN (SELECT …)`` and ``NOT EXISTS`` are refused loudly (NOT
+    IN's null semantics are a trap; express the intent as WHEN NOT
+    MATCHED BY SOURCE THEN DELETE via MERGE)."""
+    from ..sources.txlog import current_version, tx_delete, tx_merge, tx_update
 
-    col, sql, residual = _parse_in_subquery(table, "DELETE FROM", pred)
-    tier, payload = _subquery_keys_tier(spark, table, "DELETE FROM", col, sql)
+    verb = "DELETE FROM" if set_items is None else "UPDATE"
+    col, keys_df, residual = _subquery_keys(spark, table, verb, pred)
+    tier, payload = _subquery_keys_tier(spark, table, verb, col, keys_df)
     if tier == "empty":  # IN matches nothing
         return current_version(spark, path)
     if tier == "inline":
-        inlined = f"{col} IN ({', '.join(payload)})"
         where, where_equals, condition = parse_predicate(
-            " AND ".join([inlined] + residual)
+            " AND ".join(
+                [f"{col} IN ({', '.join(payload)})"]
+                + [f"({c})" for c in residual]
+            )
         )
-        return tx_delete(
-            spark, path,
-            where=where or None,
-            where_equals=where_equals or None,
-            condition=condition,
-        )
-    tgt_cols = _table_columns(spark, table) if residual else []
-    cond = (
-        " AND ".join(f"({_qualify_target(c, tgt_cols)})" for c in residual)
-        if residual
-        else None
-    )
-    return tx_merge(
-        spark, payload, path, keys=[col],
-        clauses={"matched": [{"cond": cond, "action": "delete"}]},
-    )
-
-
-def _update_subquery(
-    spark: SparkSession,
-    table: str,
-    path: str,
-    pred: str,
-    set_items: dict[str, str],
-):
-    """``UPDATE t SET c = expr, … WHERE k IN (SELECT …) [AND …]`` — the
-    GDPR redact-by-list shape, same two tiers as the subquery DELETE:
-    inline literal IN-list (file-pruned ``tx_update``) or a merge with a
-    conditional ``WHEN MATCHED THEN UPDATE SET`` clause (assignments and
-    residual conjuncts qualified onto the target side — they reference
-    no source column, the key list only selects rows)."""
-    from ..sources.txlog import current_version, tx_merge, tx_update
-
-    col, sql, residual = _parse_in_subquery(table, "UPDATE", pred)
-    tier, payload = _subquery_keys_tier(spark, table, "UPDATE", col, sql)
-    if tier == "empty":
-        return current_version(spark, path)
-    if tier == "inline":
-        inlined = f"{col} IN ({', '.join(payload)})"
-        where, where_equals, condition = parse_predicate(
-            " AND ".join([inlined] + residual)
-        )
+        spec = {
+            "where": where or None,
+            "where_equals": where_equals or None,
+            "condition": condition,
+        }
+        if set_items is None:
+            return tx_delete(spark, path, **spec)
         return tx_update(
             spark, path,
             assignments={c: F.expr(e) for c, e in set_items.items()},
-            where=where or None,
-            where_equals=where_equals or None,
-            condition=condition,
+            **spec,
         )
-    tgt_cols = _table_columns(spark, table)
-    cond = (
-        " AND ".join(f"({_qualify_target(c, tgt_cols)})" for c in residual)
-        if residual
-        else None
-    )
+    tgt_cols = spark.table(table).columns
+    clause = {
+        "cond": " AND ".join(
+            f"({_qualify_target(c, tgt_cols)})" for c in residual
+        ) or None,
+        "action": "delete",
+    }
+    if set_items is not None:
+        clause["action"] = "update"
+        clause["set"] = {
+            c: _qualify_target(e, tgt_cols) for c, e in set_items.items()
+        }
     return tx_merge(
-        spark, payload, path, keys=[col],
-        clauses={"matched": [{
-            "cond": cond,
-            "action": "update",
-            "set": {
-                c: _qualify_target(e, tgt_cols)
-                for c, e in set_items.items()
-            },
-        }]},
+        spark, payload, path, keys=[col], clauses={"matched": [clause]}
     )
 
 
@@ -1143,66 +1224,40 @@ def _render_literal(v) -> str | None:
 def _qualify_target(conj: str, tgt_cols: list[str]) -> str:
     """Qualify references to ACTUAL target-table columns of a residual
     DELETE/UPDATE conjunct onto the merge's target side (``t.``). Only
-    names present in ``tgt_cols`` are rewritten (mirroring
-    ``_make_rebinder``'s schema-membership rule) — SQL keywords,
-    function names, INTERVAL units (``INTERVAL 1 DAY``) and
-    ``extract(year FROM d)`` tokens are left as written, so valid SQL
-    that uses them never turns into bogus ``t.``-column refs. Quoted
-    regions are data."""
+    bare names present in ``tgt_cols`` are rewritten (mirroring
+    ``_make_rebinder``'s schema-membership rule); the conjunct is parsed
+    as an expression, so SQL keywords, function names, INTERVAL units
+    (``INTERVAL 1 DAY``), ``extract(year FROM d)`` fields and quoted
+    text are never column references."""
     low = {c.lower(): c for c in tgt_cols}
+    parser = SparkSession.active()._jsparkSession.sessionState().sqlParser()
 
-    def sub(m: re.Match) -> str:
-        first, dot, _second = m.group(1), m.group(2), m.group(3)
-        if dot:
-            return m.group(0)  # already qualified — leave as written
-        col = low.get(_unquote(first).lower())
-        if col is None:
-            return m.group(0)  # not a target column — keyword/unit/etc.
-        return f"t.`{col}`"
+    def sub(parts: list[str]) -> str | None:
+        col = low.get(parts[0].lower()) if len(parts) == 1 else None
+        return None if col is None else f"t.`{col}`"
 
-    def guarded(m: re.Match) -> str:
-        rest = conj[m.end():].lstrip()
-        if rest.startswith("("):
-            return m.group(0)  # function call
-        return sub(m)
-
-    return _sub_outside_quotes(_EXPR_REF, guarded, conj)
+    return _rewrite_attrs(_Expr(parser.parseExpression(conj), conj), sub)
 
 
-def _table_columns(spark: SparkSession, table: str) -> list[str]:
-    """Column names of a registered table (``db.t`` or bare), unquoted."""
-    return spark.table(
-        ".".join(_unquote(p) for p in table.split("."))
-    ).columns
-
-
-def _update(spark: SparkSession, table: str, set_and_where: str):
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        return None
-    path, extra = _writable(table, pinned)
+def _update(spark: SparkSession, stmt: str, plan, table: str, path: str):
     from ..sources.txlog import tx_update
 
-    parts = _split_top(set_and_where, r"WHERE\b")
-    set_part = parts[0]
-    pred = parts[1].strip() if len(parts) > 1 else None
-    if len(parts) > 2:
-        raise SqlDmlError(f"UPDATE {table}: more than one top-level WHERE")
     set_items: dict[str, str] = {}
-    for item in _split_top(set_part, r","):
-        m = re.match(
-            rf"^\s*({_IDENT})\s*=\s*(.+?)\s*$", item, re.DOTALL
-        )
-        if not m:
+    for a in _seq(plan.assignments()):
+        col, value = _name(a.key()), _Expr(a.value(), stmt).text
+        if len(col) != 1:
             raise SqlDmlError(
-                f"UPDATE {table}: cannot parse assignment {item.strip()!r}"
+                f"UPDATE {table}: cannot parse assignment "
+                f"{'.'.join(col) + ' = ' + value!r}"
             )
-        set_items[_unquote(m.group(1))] = m.group(2)
-    if pred and _has_select_outside_quotes(pred):
-        return _update_subquery(spark, table, path, pred, set_items)
+        set_items[col[0]] = value
+    pred = _opt(plan.condition())
+    pred = _Expr(pred, stmt) if pred is not None else None
+    if pred is not None and pred.has_subquery():
+        return _dml_by_subquery(spark, table, path, pred, set_items)
     assignments = {c: F.expr(e) for c, e in set_items.items()}
-    if pred:
-        where, where_equals, condition = parse_predicate(pred)
+    if pred is not None:
+        where, where_equals, condition = parse_predicate(pred.text)
     else:
         # SQL UPDATE without WHERE touches every row
         where, where_equals, condition = {}, {}, "true"
@@ -1216,16 +1271,7 @@ def _update(spark: SparkSession, table: str, set_and_where: str):
     )
 
 
-_MERGE_TAIL = re.compile(
-    r"^ON\s+(.*?)\s+"
-    r"WHEN\s+MATCHED\s+THEN\s+UPDATE\s+SET\s+\*\s+"
-    r"WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*\s*"
-    r"(WHEN\s+NOT\s+MATCHED\s+BY\s+SOURCE\s+THEN\s+DELETE\s*)?$",
-    re.IGNORECASE | re.DOTALL,
-)
-
-
-def _merge(spark: SparkSession, stmt: str, head: re.Match):
+def _merge(spark: SparkSession, stmt: str, plan, table: str, path: str):
     """``MERGE [WITH SCHEMA EVOLUTION] INTO t USING s ON <equi-keys>
     WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *`` —
     the upsert shape ``tx_merge`` implements (source wins on every
@@ -1234,50 +1280,36 @@ def _merge(spark: SparkSession, stmt: str, head: re.Match):
     schema (existing rows null-pad) instead of refusing — threaded as
     ``tx_merge(schema_evolution=True)``. The optional ``WHEN NOT
     MATCHED BY SOURCE THEN DELETE`` maps to
-    ``not_matched_by_source='delete'`` (full-sync semantics)."""
-    evolve = bool(head.group(1))
-    table, tgt_alias = head.group(2), head.group(3)
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        raise SqlDmlError(
-            f"MERGE INTO {table}: not a registered txlog table (MERGE is "
-            "only routable to the transactional writer)"
-        )
-    path, extra = _writable(table, pinned)
-    rest = stmt[head.end():].strip()
-    # source: `(subquery)` or a table name, optionally aliased
-    if rest.startswith("("):
-        depth, j = 0, 0
-        for j, c in enumerate(rest):
-            depth += c == "("
-            depth -= c == ")"
-            if depth == 0:
-                break
-        src_sql, rest2 = rest[1:j], rest[j + 1:]
-    else:
-        m = re.match(rf"\s*({_TBL})", rest)
-        if not m:
-            raise SqlDmlError(f"MERGE INTO {table}: cannot parse USING source")
-        src_sql, rest2 = f"SELECT * FROM {m.group(1)}", rest[m.end():]
-    m = re.match(rf"\s*(?:AS\s+)?({_IDENT})\s+(?=ON\b)", rest2, re.IGNORECASE)
-    src_alias = None
-    if m:
-        src_alias = _unquote(m.group(1))
-        rest2 = rest2[m.end():]
+    ``not_matched_by_source='delete'`` (full-sync semantics). Any other
+    clause mix goes to :func:`_merge_general`."""
     from ..sources.txlog import tx_merge
 
-    tail = _MERGE_TAIL.match(rest2.strip())
-    if tail:
+    keys = _merge_keys(table, _Expr(plan.mergeCondition(), stmt))
+    evolve = plan.withSchemaEvolution()
+    clauses = {
+        "matched": _seq(plan.matchedActions()),
+        "not_matched": _seq(plan.notMatchedActions()),
+        "not_matched_by_source": _seq(plan.notMatchedBySourceActions()),
+    }
+    shape = {
+        k: [(a.nodeName(), a.condition().isDefined()) for a in v]
+        for k, v in clauses.items()
+    }
+    source = _df(spark, plan.sourceTable())
+    if (
+        shape["matched"] == [("UpdateStarAction", False)]
+        and shape["not_matched"] == [("InsertStarAction", False)]
+        and shape["not_matched_by_source"] in ([], [("DeleteAction", False)])
+    ):
         # the upsert-all fast path (K3): source wins every column
-        on, nmbs = tail.group(1), tail.group(2)
-        keys = _merge_on_keys(on, table)
-        source = spark.sql(src_sql)
         v = tx_merge(
             spark,
             source,
             path,
             keys=keys,
-            not_matched_by_source="delete" if nmbs else None,
+            not_matched_by_source=(
+                "delete" if shape["not_matched_by_source"] else None
+            ),
             schema_evolution=evolve,
         )
         if evolve:
@@ -1286,7 +1318,7 @@ def _merge(spark: SparkSession, stmt: str, head: re.Match):
             # (same refresh ALTER TABLE ADD COLUMN performs)
             from .sql_serving import register_txlog_table
 
-            parts = [_unquote(p) for p in table.split(".")]
+            parts = table.split(".")
             db = (
                 parts[0]
                 if len(parts) == 2
@@ -1304,63 +1336,36 @@ def _merge(spark: SparkSession, stmt: str, head: re.Match):
             "ALTER TABLE ADD COLUMN first"
         )
     return _merge_general(
-        spark, table, path, rest2.strip(), src_sql, tgt_alias, src_alias
+        spark, stmt, table, path, keys, source, clauses,
+        _relation(plan.targetTable())[1], _relation(plan.sourceTable()),
     )
 
 
-def _merge_on_keys(on: str, table: str) -> list[str]:
+def _merge_keys(table: str, on: _Expr) -> list[str]:
+    """The join keys of ``ON t.k = s.k [AND …]``: every conjunct an
+    equality of two column references with the same column name."""
     keys = []
-    for conj in _split_top(on, r"AND\b"):
-        m = re.match(
-            rf"^\s*(?:({_IDENT})\.)?({_IDENT})\s*=\s*"
-            rf"(?:({_IDENT})\.)?({_IDENT})\s*$",
-            conj,
+    for conj in on.conjuncts():
+        sides = conj.kids if conj.kind == "EqualTo" else []
+        ok = len(sides) == 2 and all(
+            s.kind == "UnresolvedAttribute" and len(s.parts) <= 2
+            for s in sides
         )
-        ok = False
-        if m:
-            lq, lc, rq, rc = (
-                _unquote(g) if g else None for g in m.groups()
-            )
+        if ok:
+            lp, rp = sides[0].parts, sides[1].parts
             # same column name on both sides, and when both sides are
             # qualified they must name DIFFERENT relations (t.k = t.k
             # is a self-comparison, not a join key)
-            ok = lc == rc and not (lq is not None and lq == rq)
+            ok = lp[-1] == rp[-1] and not (
+                len(lp) == len(rp) == 2 and lp[0] == rp[0]
+            )
         if not ok:
             raise SqlDmlError(
                 f"MERGE INTO {table}: ON must be equi-join conjuncts "
-                f"t.k = s.k on the same column name (got {conj.strip()!r})"
+                f"t.k = s.k on the same column name (got {conj.text!r})"
             )
-        keys.append(lc)
+        keys.append(sides[0].parts[-1])
     return keys
-
-
-# clause HEADS (everything before the case-aware top-level THEN split):
-# conditions are greedy-safe here because the action text is gone
-_M_HEAD = re.compile(
-    r"^MATCHED(?:\s+AND\s+(?P<cond>.+))?$", re.IGNORECASE | re.DOTALL
-)
-_NMBS_HEAD = re.compile(
-    r"^NOT\s+MATCHED\s+BY\s+SOURCE(?:\s+AND\s+(?P<cond>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_NM_HEAD = re.compile(
-    r"^NOT\s+MATCHED(?:\s+BY\s+TARGET)?(?:\s+AND\s+(?P<cond>.+))?$",
-    re.IGNORECASE | re.DOTALL,
-)
-_ACT_UPDATE = re.compile(
-    r"^UPDATE\s+SET\s+(?P<set>.+)$", re.IGNORECASE | re.DOTALL
-)
-_ACT_INSERT = re.compile(
-    r"^INSERT\s+(?P<ins>.+)$", re.IGNORECASE | re.DOTALL
-)
-_INS_COLS_VALS = re.compile(
-    rf"^\((?P<cols>(?:\s*(?:{_IDENT})\s*,?)+)\)\s*"
-    r"VALUES\s*\((?P<vals>.+)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_EXPR_REF = re.compile(
-    rf"(?<![\w.`])({_IDENT})(\s*\.\s*({_IDENT}))?"
-)
 
 
 def _make_rebinder(
@@ -1371,59 +1376,60 @@ def _make_rebinder(
     src_cols: list[str],
 ):
     """Expression canonicalizer for WHEN-clause conditions/assignments:
-    alias-qualified references rewrite onto the fixed ``t.``/``s.``
-    namespace ``tx_merge`` binds; BARE references resolve by schema
-    membership (one side → qualified to it; both → refused as ambiguous;
-    neither → left alone: function names, SQL keywords, type names).
-    Quoted literals are data and never rewritten."""
+    alias-qualified references (``a.col``, ``db.t.col``) rewrite onto
+    the fixed ``t.``/``s.`` namespace ``tx_merge`` binds; BARE
+    references resolve by schema membership (one side → qualified to
+    it; both → refused as ambiguous; neither → left alone). Only
+    ``UnresolvedAttribute`` spans are rewritten."""
     t_low = {c.lower(): c for c in tgt_cols}
     s_low = {c.lower(): c for c in src_cols}
 
-    def rebind(expr: str) -> str:
-        def sub(m: re.Match) -> str:
-            first, dot, second = m.group(1), m.group(2), m.group(3)
-            rest = expr[m.end():].lstrip()
-            if dot:
-                q = _unquote(first).lower()
-                col = _unquote(second)
-                if q in tgt_names:
-                    return f"t.`{col}`"
-                if q in src_names:
-                    return f"s.`{col}`"
+    def rebind(expr: _Expr) -> str:
+        def sub(parts: list[str]) -> str | None:
+            if len(parts) > 1:
+                for k in (2, 1):  # db.t.col, then t.col
+                    q = ".".join(parts[:k]).lower()
+                    col = ".".join(
+                        "`" + p.replace("`", "``") + "`" for p in parts[k:]
+                    )
+                    if len(parts) > k and q in tgt_names:
+                        return f"t.{col}"
+                    if len(parts) > k and q in src_names:
+                        return f"s.{col}"
                 raise SqlDmlError(
-                    f"MERGE INTO {table}: unknown qualifier {q!r} in "
-                    f"{expr.strip()!r} (target: {sorted(tgt_names)}, "
-                    f"source: {sorted(src_names)})"
+                    f"MERGE INTO {table}: unknown qualifier "
+                    f"{parts[0].lower()!r} in {expr.text!r} (target: "
+                    f"{sorted(tgt_names)}, source: {sorted(src_names)})"
                 )
-            if rest.startswith("("):
-                return m.group(0)  # function call
-            name = _unquote(first)
+            name = parts[0]
             in_t, in_s = name.lower() in t_low, name.lower() in s_low
             if in_t and in_s:
                 raise SqlDmlError(
                     f"MERGE INTO {table}: reference {name!r} in "
-                    f"{expr.strip()!r} is ambiguous — qualify it with the "
+                    f"{expr.text!r} is ambiguous — qualify it with the "
                     "target or source alias"
                 )
             if in_t:
                 return f"t.`{t_low[name.lower()]}`"
             if in_s:
                 return f"s.`{s_low[name.lower()]}`"
-            return m.group(0)  # keyword / literal-adjacent token
+            return None  # not a column of either side
 
-        return _sub_outside_quotes(_EXPR_REF, sub, expr)
+        return _rewrite_attrs(expr, sub)
 
     return rebind
 
 
 def _merge_general(
     spark: SparkSession,
+    stmt: str,
     table: str,
     path: str,
-    tail_text: str,
-    src_sql: str,
+    keys: list[str],
+    source: DataFrame,
+    actions: dict[str, list],
     tgt_alias: str | None,
-    src_alias: str | None,
+    src_rel: tuple[str | None, str | None],
 ):
     """Delta's general MERGE: ``ON <equi-keys>`` followed by any mix of
     ``WHEN MATCHED [AND cond] THEN UPDATE SET col = expr, … | UPDATE SET
@@ -1435,194 +1441,103 @@ def _merge_general(
     statement's aliases; both forms canonicalize to ``t.``/``s.``."""
     from ..sources.txlog import tx_merge
 
-    pieces = _split_top(tail_text, r"WHEN\b")
-    on_part = pieces[0].strip()
-    if not on_part.upper().startswith("ON") or len(pieces) < 2:
-        raise SqlDmlError(
-            f"MERGE INTO {table}: expected ON <equi-keys> followed by "
-            "WHEN clauses"
-        )
-    keys = _merge_on_keys(on_part[2:], table)
-    source = spark.sql(src_sql)
-    tgt_parts = [_unquote(p) for p in table.split(".")]
-    tgt_names = {tgt_parts[-1].lower(), ".".join(tgt_parts).lower()}
+    tgt_names = {table.split(".")[-1].lower(), table.lower()}
     if tgt_alias:
-        tgt_names.add(_unquote(tgt_alias).lower())
-    src_names = set()
-    if src_alias:
-        src_names.add(_unquote(src_alias).lower())
-    sm = re.match(rf"^SELECT \* FROM ({_TBL})$", src_sql)
-    if sm:  # direct table source: its (unqualified) name also qualifies
-        sp = [_unquote(x) for x in sm.group(1).split(".")]
-        src_names.update({sp[-1].lower(), ".".join(sp).lower()})
+        tgt_names.add(tgt_alias.lower())
+    src_table, src_alias = src_rel
+    src_names = {src_alias.lower()} if src_alias else set()
+    if src_table:  # direct table source: its (unqualified) name also qualifies
+        src_names.update({src_table.split(".")[-1].lower(), src_table.lower()})
     overlap = tgt_names & src_names
     if overlap:
         raise SqlDmlError(
             f"MERGE INTO {table}: alias {sorted(overlap)} names both "
             "sides — give the source a distinct alias"
         )
-    tgt_cols = spark.table(".".join(tgt_parts)).columns
+    tgt_cols = spark.table(table).columns
     rebind = _make_rebinder(
         table, tgt_names, src_names, tgt_cols, source.columns
     )
     tgt_low = {c.lower(): c for c in tgt_cols}
 
-    def parse_set(set_text: str) -> dict[str, str]:
-        if set_text.strip() == "*":
+    def assigned(action, verb: str) -> dict[str, str]:
+        """Target column → rebound value of an UPDATE SET / INSERT
+        VALUES action; the ``*`` forms take every column from the
+        source."""
+        if action.nodeName().endswith("StarAction"):
             return {c: f"s.`{c}`" for c in tgt_cols}
         out: dict[str, str] = {}
-        for item in _split_top(set_text, r","):
-            m = re.match(
-                rf"^\s*(?:({_IDENT})\s*\.\s*)?({_IDENT})\s*=\s*(.+?)\s*$",
-                item,
-                re.DOTALL,
-            )
-            if not m:
-                raise SqlDmlError(
-                    f"MERGE INTO {table}: cannot parse assignment "
-                    f"{item.strip()!r}"
-                )
-            if m.group(1) and _unquote(m.group(1)).lower() not in tgt_names:
-                raise SqlDmlError(
-                    f"MERGE INTO {table}: SET target {item.strip()!r} must "
-                    "name a TARGET column"
-                )
-            col = tgt_low.get(_unquote(m.group(2)).lower())
-            if col is None:
-                raise SqlDmlError(
-                    f"MERGE INTO {table}: SET names unknown column "
-                    f"{_unquote(m.group(2))!r}"
-                )
-            out[col] = rebind(m.group(3))
+        for a in _seq(action.assignments()):
+            parts, value = _name(a.key()), _Expr(a.value(), stmt)
+            if verb == "INSERT":
+                col = tgt_low.get(".".join(parts).lower())
+                if col is None:
+                    raise SqlDmlError(
+                        f"MERGE INTO {table}: INSERT names unknown "
+                        f"column(s) {['.'.join(parts)]}"
+                    )
+            else:
+                qualifier = ".".join(parts[:-1]).lower()
+                if qualifier and qualifier not in tgt_names:
+                    item = f"{'.'.join(parts)} = {value.text}"
+                    raise SqlDmlError(
+                        f"MERGE INTO {table}: SET target {item!r} must "
+                        "name a TARGET column"
+                    )
+                col = tgt_low.get(parts[-1].lower())
+                if col is None:
+                    raise SqlDmlError(
+                        f"MERGE INTO {table}: SET names unknown column "
+                        f"{parts[-1]!r}"
+                    )
+            out[col] = rebind(value)
         return out
 
-    clauses: dict[str, list] = {
-        "matched": [], "not_matched": [], "not_matched_by_source": [],
-    }
-    for piece in pieces[1:]:
-        piece = piece.strip()
-        # the clause's own THEN is the first TOP-LEVEL one (a CASE
-        # expression's THENs belong to the CASE — _split_top skips them)
-        parts = _split_top(piece, r"THEN\b")
-        if len(parts) != 2:
-            raise SqlDmlError(
-                f"MERGE INTO {table}: expected exactly one THEN in "
-                f"{('WHEN ' + piece)[:120]!r}"
-            )
-        head, action = parts[0].strip(), parts[1].strip()
-
-        def parse_action(allow: tuple[str, ...]) -> dict:
-            if action.upper() == "DELETE" and "delete" in allow:
-                return {"action": "delete", "set": None}
-            am = _ACT_UPDATE.match(action)
-            if am and "update" in allow:
-                return {"action": "update", "set": parse_set(am.group("set"))}
-            am = _ACT_INSERT.match(action)
-            if am and "insert" in allow:
-                ins = am.group("ins").strip()
-                if ins == "*":
-                    values = {c: f"s.`{c}`" for c in tgt_cols}
-                else:
-                    cm = _INS_COLS_VALS.match(ins)
-                    if not cm:
-                        raise SqlDmlError(
-                            f"MERGE INTO {table}: INSERT clause must be "
-                            f"INSERT * or INSERT (cols) VALUES (exprs), "
-                            f"got {ins[:80]!r}"
-                        )
-                    cols = [
-                        _unquote(c)
-                        for c in _split_top(cm.group("cols"), r",")
-                    ]
-                    vals = _split_top(cm.group("vals"), r",")
-                    if len(cols) != len(vals):
-                        raise SqlDmlError(
-                            f"MERGE INTO {table}: INSERT lists {len(cols)} "
-                            f"column(s) but {len(vals)} value(s)"
-                        )
-                    unknown = [c for c in cols if c.lower() not in tgt_low]
-                    if unknown:
-                        raise SqlDmlError(
-                            f"MERGE INTO {table}: INSERT names unknown "
-                            f"column(s) {unknown}"
-                        )
-                    values = {
-                        tgt_low[c.lower()]: rebind(v)
-                        for c, v in zip(cols, vals)
-                    }
-                return {"action": "insert", "values": values}
-            raise SqlDmlError(
-                f"MERGE INTO {table}: clause action {action[:80]!r} is "
-                f"not one of {allow}"
-            )
-
-        m = _NMBS_HEAD.match(head)
-        if m:
-            clauses["not_matched_by_source"].append({
-                "cond": rebind(m.group("cond")) if m.group("cond") else None,
-                **parse_action(("delete", "update")),
-            })
-            continue
-        m = _NM_HEAD.match(head)
-        if m:
-            clauses["not_matched"].append({
-                "cond": rebind(m.group("cond")) if m.group("cond") else None,
-                **parse_action(("insert",)),
-            })
-            continue
-        m = _M_HEAD.match(head)
-        if m:
-            clauses["matched"].append({
-                "cond": rebind(m.group("cond")) if m.group("cond") else None,
-                **parse_action(("delete", "update")),
-            })
-            continue
-        raise SqlDmlError(
-            f"MERGE INTO {table}: cannot parse WHEN clause "
-            f"{('WHEN ' + piece)[:120]!r}"
-        )
-    return tx_merge(
-        spark, source, path, keys=keys,
-        clauses={k: v for k, v in clauses.items() if v},
-    )
+    clauses: dict[str, list] = {}
+    for kind, group in actions.items():
+        for action in group:
+            cond = _opt(action.condition())
+            clause = {
+                "cond": rebind(_Expr(cond, stmt)) if cond is not None else None
+            }
+            name = action.nodeName()
+            if name == "DeleteAction":
+                clause.update(action="delete", set=None)
+            elif name.startswith("Update"):
+                clause.update(action="update", set=assigned(action, "SET"))
+            else:  # the grammar allows only INSERT actions besides these
+                clause.update(
+                    action="insert", values=assigned(action, "INSERT")
+                )
+            clauses.setdefault(kind, []).append(clause)
+    return tx_merge(spark, source, path, keys=keys, clauses=clauses)
 
 
-def _insert(
-    spark: SparkSession,
-    kind: str,
-    table: str,
-    col_list: str | None,
-    query: str,
-    part_spec: str | None = None,
-):
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        return None
-    path, extra = _writable(table, pinned)
-    from ..sources import txlog as TX
-
-    query = query.strip()
-    if not query:
-        raise SqlDmlError(f"INSERT {kind.upper()} {table}: missing query")
-    rw = re.match(r"^REPLACE\s+WHERE\s+(.*)$", query, re.IGNORECASE | re.DOTALL)
-    if rw:
-        if kind.lower() != "into" or col_list or part_spec:
-            raise SqlDmlError(
-                f"INSERT {table}: REPLACE WHERE takes the plain "
-                "`INSERT INTO t REPLACE WHERE <pred> <query>` form "
-                "(no OVERWRITE, column list or PARTITION spec)"
-            )
-        return _insert_replace_where(spark, table, path, rw.group(1))
-    df = spark.sql(query)
-    cur = TX.current_version(spark, path)
-    if cur is None:
-        raise SqlDmlError(f"{table}: no committed txlog version at {path}")
-    manifest = TX.read_manifest(spark, path, cur)
+def _snapshot(spark: SparkSession, table: str, path: str):
+    """``(manifest, schema)`` of the table's current version."""
     import json
 
     from pyspark.sql.types import StructType
 
-    schema = StructType.fromJson(json.loads(manifest["schema"]))
+    from ..sources import txlog as TX
+
+    cur = TX.current_version(spark, path)
+    if cur is None:
+        raise SqlDmlError(f"{table}: no committed txlog version at {path}")
+    manifest = TX.read_manifest(spark, path, cur)
+    return manifest, StructType.fromJson(json.loads(manifest["schema"]))
+
+
+def _insert(spark: SparkSession, stmt: str, plan, table: str, path: str):
+    from ..sources import txlog as TX
+
+    if plan.byName() or plan.ifPartitionNotExists():
+        raise SqlDmlError(
+            f"INSERT {table}: BY NAME and IF NOT EXISTS are not routable "
+            "— list the columns instead"
+        )
+    df = _df(spark, plan.query())
+    manifest, schema = _snapshot(spark, table, path)
     target_cols = [f.name for f in schema.fields]
     types = {f.name: f.dataType for f in schema.fields}
     # partition columns are TABLE metadata (property-recorded, survives
@@ -1631,40 +1546,33 @@ def _insert(
     # static/dynamic PARTITION spec: `PARTITION (p = v [, q])` pins the
     # static columns to literals (the query must NOT produce them) and
     # declares the rest dynamic; the spec must name exactly the table's
-    # partition columns (Spark/Hive static-partition INSERT semantics)
+    # partition columns (Spark/Hive static-partition INSERT semantics).
+    # The parser hands static values over as strings; the cast to the
+    # column type below types them.
     static: dict[str, object] = {}
-    if part_spec is not None:
-        dyn: list[str] = []
-        for item in _split_top(part_spec, r","):
-            item = item.strip()
-            if not item:
-                continue
-            pm = re.match(rf"^({_IDENT})\s*=\s*(.+)$", item, re.DOTALL)
-            if pm:
-                v = _parse_literal(pm.group(2))
-                if v is None:
-                    raise SqlDmlError(
-                        f"INSERT {table} PARTITION: cannot parse literal "
-                        f"{pm.group(2).strip()!r}"
-                    )
-                static[_unquote(pm.group(1))] = v
-            elif re.fullmatch(_IDENT, item):
-                dyn.append(_unquote(item))
-            else:
-                raise SqlDmlError(
-                    f"INSERT {table} PARTITION: cannot parse spec item "
-                    f"{item!r} (expected col = literal, or col for dynamic)"
-                )
+    dyn: list[str] = []
+    spec = plan.partitionSpec().iterator()
+    while spec.hasNext():
+        item = spec.next()
+        col, value = str(item._1()), item._2()
+        if not value.isDefined():
+            dyn.append(col)
+        elif value.get() is None:
+            raise SqlDmlError(
+                f"INSERT {table} PARTITION: cannot parse literal 'NULL'"
+            )
+        else:
+            static[col] = value.get()
+    if static or dyn:
         spec_cols = sorted(list(static) + dyn)
         if spec_cols != sorted(partition_by):
             raise SqlDmlError(
                 f"INSERT {table} PARTITION: spec names {spec_cols} but "
                 f"the table's partition columns are {sorted(partition_by)}"
             )
+    col_list = [str(c) for c in _seq(plan.userSpecifiedCols())]
     if col_list:
-        names = [
-            _unquote(c) for c in _split_top(col_list.strip()[1:-1], r",")
-        ]
+        names = col_list
         unknown = [c for c in names if c not in target_cols]
         if unknown:
             raise SqlDmlError(
@@ -1706,7 +1614,7 @@ def _insert(
             )
         )
         names = [c for c in target_cols if c in provided]
-    if kind.lower() == "into":
+    if not plan.overwrite():
         mode = "append"
     elif partition_by:
         # K1 by name: replace ONLY the partitions present in the rows
@@ -1894,23 +1802,8 @@ def _convert(
     return v
 
 
-def _split_replace_where(table: str, text: str) -> tuple[str, str]:
-    """Split ``<pred> <query>`` at the FIRST top-level SELECT / VALUES /
-    WITH / TABLE keyword — none of which can open a predicate conjunct
-    (subquery SELECTs sit inside parentheses, which the scanner skips)."""
-    parts = _split_top(text, r"(?:SELECT|VALUES|WITH|TABLE)\b")
-    if len(parts) < 2 or not parts[0].strip():
-        raise SqlDmlError(
-            f"INSERT INTO {table} REPLACE WHERE: expected "
-            "<pred> followed by SELECT/VALUES/WITH/TABLE"
-        )
-    pred = parts[0].strip()
-    query = text[len(parts[0]):].strip()
-    return pred, query
-
-
 def _insert_replace_where(
-    spark: SparkSession, table: str, path: str, text: str
+    spark: SparkSession, stmt: str, plan, table: str, path: str
 ):
     """``INSERT INTO db.t REPLACE WHERE <pred> <query>`` — Delta's
     arbitrary-predicate atomic overwrite (`tx_replace_where`): one
@@ -1918,22 +1811,14 @@ def _insert_replace_where(
     query's rows, which must all SATISFY the predicate."""
     from ..sources import txlog as TX
 
-    pred, query = _split_replace_where(table, text)
-    if re.search(r"\bSELECT\b", pred, re.IGNORECASE):
+    pred = _Expr(plan.deleteExpr(), stmt)
+    if pred.has_subquery():
         raise SqlDmlError(
             f"INSERT INTO {table} REPLACE WHERE: subqueries in the "
             "replace predicate are not routable"
         )
-    df = spark.sql(query)
-    cur = TX.current_version(spark, path)
-    if cur is None:
-        raise SqlDmlError(f"{table}: no committed txlog version at {path}")
-    manifest = TX.read_manifest(spark, path, cur)
-    import json as _json
-
-    from pyspark.sql.types import StructType
-
-    schema = StructType.fromJson(_json.loads(manifest["schema"]))
+    df = _df(spark, plan.query())
+    manifest, schema = _snapshot(spark, table, path)
     target_cols = [f.name for f in schema.fields]
     if len(df.columns) != len(target_cols):
         raise SqlDmlError(
@@ -1946,7 +1831,7 @@ def _insert_replace_where(
             for f in schema.fields
         )
     )
-    where, where_equals, condition = parse_predicate(pred)
+    where, where_equals, condition = parse_predicate(pred.text)
     return TX.tx_replace_where(
         spark, aligned, path,
         where=where or None,

@@ -587,13 +587,11 @@ def _refresh_native_serving(spark, path: str, version: int) -> None:
     back to the Python source when the commit made it ineligible). A
     registration whose refresh fails is invalidated; the first error is
     re-raised once every registration had its turn."""
-    if spark is None:
-        return
-    try:
-        app = spark.sparkContext.applicationId
-    except Exception:
-        return
-    regs = _SERVING_BY_PATH.get((app, path.rstrip("/")))
+    if spark is None or spark.sparkContext._jsc is None:
+        return  # no session, or a stopped one: nothing serves the table
+    regs = _SERVING_BY_PATH.get(
+        (spark.sparkContext.applicationId, path.rstrip("/"))
+    )
     failed: Exception | None = None
     for db, name in sorted(regs or ()):
         try:

@@ -3658,8 +3658,8 @@ GROUP BY lang
 
 def q_sql_delete_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``DELETE FROM t WHERE EXISTS (SELECT … WHERE t.k = s.k AND …)``
-    (`core/sql_dml._exists_to_in`): the correlated-equality EXISTS shape
-    rewrites mechanically onto the same two-tier IN machinery — the
+    (`core/sql_dml._exists_keys`): the correlated-equality EXISTS shape
+    routes onto the same two-tier IN machinery — the
     statement here also carries an OUTER residual conjunct that must
     keep applying after the rewrite. DuckDB replays the EXISTS delete
     natively (no rewrite), so a rewrite bug cannot hide."""
@@ -3724,7 +3724,7 @@ FROM fin GROUP BY lang
 
 def q_sql_delete_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``DELETE FROM t WHERE k IN (SELECT …) AND <residual>`` — the GDPR
-    bulk-delete-by-list shape (`core/sql_dml.py` `_delete_subquery`).
+    bulk-delete-by-list shape (`core/sql_dml.py` `_dml_by_subquery`).
     Two-tier by construction: a small key set inlines to a literal
     IN-list and stays FILE-PRUNED (range stats + Bloom); a large one
     routes as a distributed merge-delete (hash semi-join). Both tiers

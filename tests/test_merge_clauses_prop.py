@@ -9,8 +9,10 @@ unless a NOT MATCHED BY SOURCE clause acts."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import ParseException
 
 from cdk_datalake_analytics_comercial_spark.sources import txlog as TX
 
@@ -136,3 +138,73 @@ def test_clause_merge_matches_reference(spark, tmp_path_factory, case):
         (r.id, r.v, r.x) for r in TX.tx_read(spark, p).collect()
     )
     assert got == _reference(tgt, src, clauses), (tgt, src, clauses)
+
+
+def _merge_sql(table: str, source: str, clauses: dict) -> str:
+    """A clause spec rendered as Delta's MERGE text (groups in the
+    order the router reads them; clause order kept inside each)."""
+    out = [f"MERGE INTO {table} t USING {source} s ON t.id = s.id"]
+    heads = {
+        "matched": "MATCHED",
+        "not_matched": "NOT MATCHED",
+        "not_matched_by_source": "NOT MATCHED BY SOURCE",
+    }
+    for group, head in heads.items():
+        for cl in clauses.get(group, []):
+            cond = f" AND {cl['cond']}" if cl.get("cond") else ""
+            if cl["action"] == "delete":
+                act = "DELETE"
+            elif cl["action"] == "update":
+                act = "UPDATE SET " + ", ".join(
+                    f"{c} = {e}" for c, e in cl["set"].items()
+                )
+            else:
+                act = (
+                    f"INSERT ({', '.join(cl['values'])}) "
+                    f"VALUES ({', '.join(cl['values'].values())})"
+                )
+            out.append(f"WHEN {head}{cond} THEN {act}")
+    return "\n".join(out)
+
+
+# the SQL face of the same property: the MERGE text, parsed by Spark and
+# routed by core.sql_dml, lands exactly what tx_merge(clauses=…) lands
+@given(_case())
+@settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.too_slow],
+)
+def test_sql_merge_text_matches_clause_merge(spark, tmp_path_factory, case):
+    from cdk_datalake_analytics_comercial_spark.core.sql_dml import sql_dml
+    from cdk_datalake_analytics_comercial_spark.core.sql_serving import (
+        register_txlog_table,
+    )
+
+    tgt, src, clauses = case
+    if not clauses or not tgt:
+        return
+    root = tmp_path_factory.mktemp("msql")
+    tgt_df = spark.createDataFrame(tgt, "id long, v string, x long")
+    src_df = spark.createDataFrame(src, "id long, v string, x long")
+    api, sql = str(root / "api"), str(root / "sql")
+    for p in (api, sql):
+        TX.tx_write(spark, tgt_df, p)
+    TX.tx_merge(spark, src_df, api, keys=["id"], clauses=clauses)
+    src_df.createOrReplaceTempView("msql_src")
+    name = register_txlog_table(spark, "mpropdb", "msql_t", sql)
+    text = _merge_sql(name, "msql_src", clauses)
+    if any(
+        cl.get("cond") is None
+        for group in clauses.values()
+        for cl in group[:-1]
+    ):
+        # SQL refuses an unconditional clause that is not the last of its
+        # kind (the ones after it could never fire); the API allows it
+        with pytest.raises(ParseException, match="OMIT_CONDITION"):
+            sql_dml(spark, text)
+        return
+    sql_dml(spark, text)
+    want = sorted(tuple(r) for r in TX.tx_read(spark, api).collect())
+    got = sorted(tuple(r) for r in TX.tx_read(spark, sql).collect())
+    assert got == want, (tgt, src, clauses)

@@ -2314,3 +2314,96 @@ def test_exists_db_qualified_outer_ref_refused(spark, tmp_path):
             "(SELECT 1 FROM dbex_keys WHERE dbex.id = dbex_keys.kid "
             "AND dmldb.dbex.g = 1)",
         )
+
+
+# ------------------------------------------- statements on Spark's parse tree
+
+_ROUTED = [
+    # a ')' inside a string literal of the MERGE source query
+    (
+        "MERGE INTO dmldb.{t} AS t USING (SELECT CAST(1 AS BIGINT) AS id, "
+        "')' AS v, CAST(9 AS BIGINT) AS g) AS s ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        {1: (1, ")", 9)},
+    ),
+    # a 'SELECT' literal in the REPLACE WHERE predicate is no subquery
+    (
+        "INSERT INTO dmldb.{t} REPLACE WHERE v = 'SELECT' "
+        "SELECT CAST(50 AS BIGINT), 'SELECT', CAST(2 AS BIGINT)",
+        {50: (50, "SELECT", 2)},
+    ),
+    # a comment that spells WHERE inside an UPDATE
+    (
+        "UPDATE dmldb.{t} SET v = 'u' /* WHERE id = 0 */ WHERE id = 1",
+        {1: (1, "u", 1)},
+    ),
+    # a comment between the table and its WHERE
+    (
+        "DELETE FROM dmldb.{t} /* purge */ -- one row\nWHERE id = 2",
+        {2: None},
+    ),
+]
+
+
+@pytest.mark.parametrize(
+    "stmt, changed",
+    _ROUTED,
+    ids=["merge-source-paren", "replace-where-select", "update-comment",
+         "delete-comment"],
+)
+def test_router_shapes_route_on_the_parse_tree(spark, tmp_path, stmt, changed):
+    """Shapes a clause grammar over statement text gets wrong route to
+    the txlog writers with the expected rows: each is ONE new commit."""
+    name = tmp_path.name
+    p = _table(spark, tmp_path, name)
+    register_txlog_table(spark, "dmldb", name, p)
+    v0 = TX.current_version(spark, p)
+    expected = {i: (i, f"v{i}", i % 3) for i in range(12)}
+    expected.update(changed)
+    assert sql_dml(spark, stmt.format(t=name)) == v0 + 1
+    assert rows(spark.sql(f"SELECT id, v, g FROM dmldb.{name}")) == sorted(
+        r for r in expected.values() if r is not None
+    )
+
+
+def test_malformed_dml_raises_parse_exception(spark, tmp_path):
+    from pyspark.errors import ParseException
+
+    p = _table(spark, tmp_path, "malformed")
+    register_txlog_table(spark, "dmldb", "malformed", p)
+    v0 = TX.current_version(spark, p)
+    for stmt in (
+        "DELETE FROM dmldb.malformed WHERE id =",
+        "UPDATE dmldb.malformed SET WHERE id = 1",
+        "MERGE INTO dmldb.malformed USING (SELECT 1 AS id) s ON",
+    ):
+        with pytest.raises(ParseException):
+            sql_dml(spark, stmt)
+    # Spark parses a dangling WHERE as the table's alias: still no WHERE
+    with pytest.raises(SqlDmlError, match="WHERE true"):
+        sql_dml(spark, "DELETE FROM dmldb.malformed WHERE")
+    assert TX.current_version(spark, p) == v0
+
+
+def test_sql_script_comment_markers_inside_literals(spark, tmp_path):
+    """Comments are stripped over the whole script, quote-aware: a
+    `--` or `/*` inside a (multi-line) string literal is data, and a
+    comment's `;` never splits a statement."""
+    from cdk_datalake_analytics_comercial_spark.core.sql_dml import sql_script
+
+    p = _table(spark, tmp_path, "scriptlit")
+    register_txlog_table(spark, "dmldb", "scriptlit", p)
+    sql_script(
+        spark,
+        "UPDATE dmldb.scriptlit SET v = 'a\n-- b' WHERE id = 1;\n"
+        "/* a comment; with a semicolon */\n"
+        "UPDATE dmldb.scriptlit SET v = '/* c */' WHERE id = 3; -- trailing\n"
+        "DELETE FROM dmldb.scriptlit WHERE id = 2;",
+    )
+    got = {
+        r.id: r.v
+        for r in spark.sql("SELECT id, v FROM dmldb.scriptlit").collect()
+    }
+    assert got[1] == "a\n-- b"
+    assert got[3] == "/* c */"
+    assert 2 not in got and got[4] == "v4"

@@ -577,3 +577,51 @@ def test_router_raises_when_table_metadata_read_fails(spark, table):
     assert {r.id for r in spark.table(fq).collect()} == {1, 2, 3}
     # a name the catalog does not know is still "not a txlog table"
     assert txlog_table_path(spark, "natdb.no_such_table") is None
+
+
+def test_malformed_extra_property_refuses_dml(spark, table):
+    """The extra-options property carries the frozen / change-feed pins
+    DML is refused on: a malformed one raises instead of reading as
+    "no pins" and letting DML write the live table."""
+    from cdk_datalake_analytics_comercial_spark.core.sql_dml import SqlDmlError
+    from cdk_datalake_analytics_comercial_spark.core.sql_serving import (
+        _NATIVE_PROP_EXTRA,
+    )
+
+    fq = register_txlog_table(
+        spark, "natdb", "badextra", table, version=1, read_optimized=True
+    )
+    assert _provider(spark, fq) == "parquet"
+    spark.sql(
+        f"ALTER TABLE {fq} "
+        f"SET TBLPROPERTIES ('{_NATIVE_PROP_EXTRA}' = '{{nope')"
+    )
+    v0 = TX.current_version(spark, table)
+    with pytest.raises(SqlDmlError, match="malformed"):
+        txlog_table_path(spark, fq)
+    with pytest.raises(SqlDmlError, match="malformed"):
+        sql_dml(spark, f"DELETE FROM {fq} WHERE id = 2")
+    assert TX.current_version(spark, table) == v0
+
+
+def test_refresh_listener_skips_only_a_stopped_context():
+    from types import SimpleNamespace
+
+    from cdk_datalake_analytics_comercial_spark.core.sql_serving import (
+        _refresh_native_serving,
+    )
+
+    stopped = SimpleNamespace(sparkContext=SimpleNamespace(_jsc=None))
+    assert _refresh_native_serving(stopped, "/t", 3) is None
+
+    class _Broken:
+        _jsc = object()
+
+        @property
+        def applicationId(self):
+            raise RuntimeError("context state unreadable")
+
+    with pytest.raises(RuntimeError, match="unreadable"):
+        _refresh_native_serving(
+            SimpleNamespace(sparkContext=_Broken()), "/t", 3
+        )
