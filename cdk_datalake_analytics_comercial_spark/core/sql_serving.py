@@ -52,6 +52,7 @@ import uuid
 from pyspark.sql import SparkSession
 
 from .catalog import Catalog, Layer
+from .publish import publish_once
 
 _NAME_OK = re.compile(r"[^a-z0-9_]")
 
@@ -349,29 +350,22 @@ def _build_native_manifest(
             )
         ).encode()
     ).hexdigest()[:10]
-    vdir = os.path.join(_serving_root(path), f"{key}_{content}")
-    if os.path.isdir(vdir):
-        return vdir
-    tmp = f"{vdir}.build-{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    for f, segs in files:
-        full, bd = TX._resolve_file(root, f["path"])
-        if full.startswith("file:"):
-            full = full[len("file:"):]
-        rel = full[len(bd):].lstrip("/") if full.startswith(bd) else ""
-        part_dirs = [seg for seg in rel.split("/")[:-1] if "=" in seg]
-        d = os.path.join(tmp, *part_dirs, *segs)
-        os.makedirs(d, exist_ok=True)
-        link = "f" + hashlib.sha1(full.encode()).hexdigest()[:16] + ".parquet"
-        os.symlink(full, os.path.join(d, link))
-    try:
-        os.rename(tmp, vdir)
-    except OSError:
-        # lost a build race: the winner's dir is content-identical
-        shutil.rmtree(tmp, ignore_errors=True)
-        if not os.path.isdir(vdir):
-            raise
-    return vdir
+
+    def build(tmp: str) -> None:
+        for f, segs in files:
+            full, bd = TX._resolve_file(root, f["path"])
+            if full.startswith("file:"):
+                full = full[len("file:"):]
+            rel = full[len(bd):].lstrip("/") if full.startswith(bd) else ""
+            part_dirs = [seg for seg in rel.split("/")[:-1] if "=" in seg]
+            d = os.path.join(tmp, *part_dirs, *segs)
+            os.makedirs(d, exist_ok=True)
+            link = "f" + hashlib.sha1(full.encode()).hexdigest()[:16] + ".parquet"
+            os.symlink(full, os.path.join(d, link))
+
+    return publish_once(
+        os.path.join(_serving_root(path), f"{key}_{content}"), build
+    )
 
 
 def _snapshot_version(dirname: str) -> int:

@@ -2,12 +2,16 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..core.publish import publish_once
 
 
 def ensure_package_on_workers(spark: SparkSession) -> None:
@@ -53,6 +57,44 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # driver's own SparkSession gets it too).
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+
+
+def corpus_fixture_path(sf_dir: str, table: str, name: str, tag: str) -> str:
+    """``<tempdir>/spark_graft_<name>_<key>``: the scratch dir of a fixture
+    built from testdata ``table``. The key hashes each file's (basename,
+    size, ``mtime_ns``) plus ``tag`` (the fixture's build recipe), so a
+    corpus regenerated in place — even at the same size within the same
+    second — never reuses a fixture built from the old bytes."""
+    src = os.path.join(os.path.abspath(sf_dir), f"{table}.parquet")
+    files = (
+        sorted(os.path.join(src, f) for f in os.listdir(src))
+        if os.path.isdir(src)
+        else [src]
+    )
+    parts = []
+    for p in files:
+        st = os.stat(p)
+        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
+    key = hashlib.sha1(
+        f"{src}|{'|'.join(parts)}|{tag}".encode()
+    ).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{key}")
+
+
+def corpus_fixture(
+    sf_dir: str, table: str, name: str, tag: str, build: Callable[[str], object]
+) -> str:
+    """The fixture dir of :func:`corpus_fixture_path`, built once by
+    ``build(tmp)`` and published atomically (``core.publish.publish_once``).
+    A cold, build-inclusive run points ``TMPDIR`` at an empty dir."""
+    return publish_once(corpus_fixture_path(sf_dir, table, name, tag), build)
+
+
+def lake_db(sf_dir: str) -> str:
+    """The serving database of one testdata directory."""
+    return "lake_" + hashlib.sha1(
+        os.path.abspath(sf_dir).encode()
+    ).hexdigest()[:8]
 
 
 def period_yyyymm(col: Column | str) -> Column:

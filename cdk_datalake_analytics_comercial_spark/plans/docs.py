@@ -23,7 +23,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, graph, text
 from ..operators import multimodal
-from .common import t
+from .common import corpus_fixture, corpus_fixture_path, lake_db, t
 from ..core.barrier import shared_barrier
 
 # Shared SQL fragments for the oracle side (DuckDB), mirroring operators.text.
@@ -332,49 +332,13 @@ def incremental_index_file_counts(n_rows: int) -> tuple[int, int]:
     )
 
 
+_MHIDX_TAG = "mh=64|b=16|k=3|v2"
+
+
 def _incremental_index_path(sf_dir: str) -> str:
-    """Deterministic scratch dir for the persisted dedup index, keyed by
-    a content fingerprint of the documents parquet (size + mtime per
-    file) — a regenerated corpus must never reuse a stale index."""
-    import hashlib
-    import os
-    import tempfile
-
-    doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    files = (
-        sorted(os.path.join(doc, f) for f in os.listdir(doc))
-        if os.path.isdir(doc)
-        else [doc]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        # nanosecond mtime: a same-size corpus regenerated within the same
-        # SECOND must still change the key (1s granularity reused a stale
-        # index in exactly that window)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{doc}|{'|'.join(parts)}|mh=64|b=16|k=3|v2".encode()
-    ).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"spark_graft_mhidx_{key}")
-
-
-def _publish_index_dir(tmp: str, path: str, ready_marker: str) -> None:
-    """Atomically publish a built scratch index: rename tmp -> path. A
-    failed rename is only acceptable when a concurrent builder already
-    published a COMPLETE index (ready marker present) — any other failure
-    re-raises instead of leaving no index and a confusing downstream read
-    error. The loser's tmp tree is always removed (it used to leak)."""
-    import os
-    import shutil
-
-    try:
-        os.rename(tmp, path)
-    except OSError:
-        if not os.path.exists(os.path.join(path, ready_marker)):
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        shutil.rmtree(tmp, ignore_errors=True)
+    """Scratch dir of the persisted dedup index, keyed by the documents
+    corpus content — a regenerated corpus never reuses a stale index."""
+    return corpus_fixture_path(sf_dir, "documents", "mhidx", _MHIDX_TAG)
 
 
 def q_dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -389,14 +353,11 @@ def q_dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     index inside the measured window. Results are identical — the query
     shares `dedup_incremental`'s oracle."""
     import os
-    import tempfile
 
     d = t(spark, sf_dir, "documents")
     new = d.filter(F.col("doc_id") % 2 == 1)
-    path = _incremental_index_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS_ALL")):
-        import math
 
+    def build(tmp: str) -> None:
         old = d.filter(F.col("doc_id") % 2 == 0)
         # ONE fingerprint pass feeds the row count, the feats write and the
         # banded write (3 consumers — unbarriered, the md5+MinHash kernel
@@ -413,7 +374,6 @@ def q_dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         # metadata-sized work; at corpus scale the same formulas yield
         # thousands of right-sized files.
         feat_files, band_files = incremental_index_file_counts(n_idx)
-        tmp = tempfile.mkdtemp(prefix="spark_graft_mhidx_build_")
         idx.repartition(feat_files).write.mode("overwrite").parquet(
             os.path.join(tmp, "feats")
         )
@@ -422,8 +382,8 @@ def q_dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         dedup.band_keys(idx, portable=True).repartition(
             band_files, "band", "band_hash"
         ).write.mode("overwrite").parquet(os.path.join(tmp, "banded"))
-        open(os.path.join(tmp, "_SUCCESS_ALL"), "w").close()
-        _publish_index_dir(tmp, path, "_SUCCESS_ALL")
+
+    path = corpus_fixture(sf_dir, "documents", "mhidx", _MHIDX_TAG, build)
     feats = spark.read.parquet(os.path.join(path, "feats"))
     banded = spark.read.parquet(os.path.join(path, "banded"))
     surv, _ = dedup.minhash_dedup_incremental(
@@ -1149,49 +1109,19 @@ def q_emb_ivfpq_search_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     and reused (build-once-search-many is the production shape, and it is
     what repeated bench passes should measure); the build is atomic via
     build-into-tmp + rename, so a crashed build is never half-reused."""
-    import hashlib
-    import os
-    import tempfile
-
     from ..operators.similarity import ivf_pq_build_index, ivf_pq_search_index
-    from ..sources.txlog import is_txlog_table
 
     e = t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 20)
-    # the cache key folds in a cheap content fingerprint (size + mtime of
-    # the embeddings parquet) — a regenerated corpus at the SAME path must
-    # not silently reuse a stale index built from the old vectors
-    emb = os.path.join(os.path.abspath(sf_dir), "embeddings.parquet")
-    files = (
-        sorted(os.path.join(emb, f) for f in os.listdir(emb))
-        if os.path.isdir(emb)
-        else [emb]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{emb}|{'|'.join(parts)}|dim=64|c=8|s=16|k=16|v1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_ivfpq_{key}")
-    if not is_txlog_table(spark, f"{path}/codes"):
-        import shutil
-
-        tmp = tempfile.mkdtemp(prefix="spark_graft_ivfpq_build_")
-        ivf_pq_build_index(
+    path = corpus_fixture(
+        sf_dir,
+        "embeddings",
+        "ivfpq",
+        "dim=64|c=8|s=16|k=16|v1",
+        lambda tmp: ivf_pq_build_index(
             spark, e, tmp, dim=64, n_cells=8, n_sub=16, n_cent=16
-        )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            # acceptable only when a concurrent builder already published
-            # a COMPLETE index; otherwise re-raise rather than leave no
-            # index and a confusing downstream read failure
-            if not is_txlog_table(spark, f"{path}/codes"):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
+        ),
+    )
     return ivf_pq_search_index(spark, q, path, k=5)
 
 
@@ -2580,36 +2510,16 @@ def q_sql_txlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     per corpus, then a row-level DELETE committed on it) is registered in
     the session catalog under a layer database and aggregated by NAME
     with pure ``spark.sql`` — the full Athena-twin path for the engine's
-    own table format. The SQL read resolves the CURRENT snapshot at plan
-    time through the pinned Python Data Source
-    (`streaming/source.TxLogBatchReader`), so the feed reflects the
-    delete; the oracle replays the same subset + delete predicate on the
-    raw parquet. Build-once cache keyed by corpus content
-    (size + mtime_ns), atomic publish via rename."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    own table format. The registration is read-optimized: the current
+    snapshot is served as a native parquet catalog table over a symlink
+    manifest of its live files (`core/sql_serving`), so the read plans as
+    a ``FileScan parquet`` that reflects the delete; the oracle replays
+    the same subset + delete predicate on the raw parquet. Build-once
+    fixture keyed by corpus content (`plans/common.corpus_fixture`)."""
     from ..core.sql_serving import register_txlog_table
-    from ..sources.txlog import is_txlog_table, tx_delete, tx_write
+    from ..sources.txlog import tx_delete, tx_write
 
-    doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    files = (
-        sorted(os.path.join(doc, f) for f in os.listdir(doc))
-        if os.path.isdir(doc)
-        else [doc]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{doc}|{'|'.join(parts)}|txdocs|v1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_txdocs_{key}")
-    if not is_txlog_table(spark, path):
-        tmp = tempfile.mkdtemp(prefix="spark_graft_txdocs_build_")
+    def build(tmp: str) -> None:
         d = t(spark, sf_dir, "documents")
         tx_write(
             spark,
@@ -2620,16 +2530,9 @@ def q_sql_txlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # a committed row-level DELETE the SQL read must reflect
         tx_delete(spark, tmp, where={"lang": ("de", "de")})
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not is_txlog_table(spark, path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    db = "lake_" + hashlib.sha1(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:8]
+
+    path = corpus_fixture(sf_dir, "documents", "txdocs", "txdocs|v1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_tx", path, read_optimized=True
     )
@@ -2643,45 +2546,24 @@ def q_sql_txlog_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sql_generated_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GENERATED-COLUMN PARTITION PRUNING BY NAME (SURVEY §4a lifted to
-    the SQL face): a period-partitioned table whose partition column is
+    """GENERATED-COLUMN PARTITION LAYOUT BY NAME (SURVEY §4a on the SQL
+    face): a period-partitioned table whose partition column is
     ``p GENERATED ALWAYS AS date_format(od, 'yyyyMM')`` is queried with
-    a WHERE on the BASE date column only. `pushFilters` hands the date
-    bounds to `txlog._derive_generated_hints`, which derives
-    ``p ∈ [f(lo), f(hi)]`` (monotone format), so the scan opens ONLY the
-    three matching month partitions — at 100 TB the difference between
-    reading a quarter and reading years (file counts asserted in
-    `tests/test_generated_pruning.py`; results oracle-matched because
-    pruning is advisory). Routed DML prunes through the same derivation.
-    Build-once cache keyed by the orders corpus, atomic publish."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    a WHERE on the BASE date column only. The registration is
+    read-optimized, so Spark plans a native ``FileScan parquet`` over the
+    symlink manifest, and that face does NOT derive ``p`` bounds from the
+    base-column predicate: the scan has no partition filter and lists
+    every month partition. The derivation (`txlog._derive_generated_hints`,
+    ``p ∈ [f(lo), f(hi)]`` for a monotone format) prunes to the three
+    matching months only on ``tx_read``, the Python Data Source reader
+    and routed DML (file counts asserted in
+    `tests/test_generated_pruning.py`). Results are oracle-matched either
+    way, because pruning is advisory. Build-once fixture keyed by the
+    orders corpus (`plans/common.corpus_fixture`)."""
     from ..core.sql_serving import register_txlog_table
-    from ..sources.txlog import (
-        is_txlog_table,
-        tx_add_generated_column,
-        tx_write,
-    )
+    from ..sources.txlog import tx_add_generated_column, tx_write
 
-    src = os.path.join(os.path.abspath(sf_dir), "orders.parquet")
-    files = (
-        sorted(os.path.join(src, f) for f in os.listdir(src))
-        if os.path.isdir(src)
-        else [src]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{src}|{'|'.join(parts)}|txgpv1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_txgp_{key}")
-    if not is_txlog_table(spark, path):
-        tmp = tempfile.mkdtemp(prefix="spark_graft_txgp_build_")
+    def build(tmp: str) -> None:
         o = t(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 4 == 0)
         df = o.select(
             "o_orderkey",
@@ -2690,14 +2572,9 @@ def q_sql_generated_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).withColumn("p", F.date_format("od", "yyyyMM"))
         tx_write(spark, df, tmp, partition_by=["p"], stats_for=["o_orderkey"])
         tx_add_generated_column(spark, tmp, "p", "date_format(od, 'yyyyMM')")
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not is_txlog_table(spark, path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    db = _lake_db(sf_dir)
+
+    path = corpus_fixture(sf_dir, "orders", "txgp", "txgpv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "orders_gp", path, read_optimized=True
     )
@@ -2729,38 +2606,19 @@ def q_sql_pushdown_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-PUSHDOWN SQL lookup over a txlog table: the corpus subset
     is written range-clustered on ``doc_id`` (8 files with disjoint
     ranges, per-file min/max stats), registered by name, and queried
-    with a pure ``spark.sql`` range predicate. The WHERE clause reaches
-    `streaming/source.TxLogBatchReader.pushFilters`, which prunes the
-    scan to the files whose stat range intersects [40, 260] — at 100 TB
-    this is the difference between opening 2 files and opening every
-    live file (SCALE.md round-10). The oracle recomputes the aggregate
-    from the raw parquet; results must match exactly because pruning is
-    advisory (Spark still filters row-level). Build-once cache keyed by
-    corpus content, atomic publish via rename."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
+    with a pure ``spark.sql`` range predicate. The registration is
+    read-optimized, so Spark plans a native ``FileScan parquet`` over the
+    symlink manifest with ``doc_id`` in its PushedFilters: the scan lists
+    all 8 files and skips by parquet footer statistics, not by the
+    manifest's per-file stats (those prune on ``tx_read(where=…)`` and
+    the Python Data Source's ``pushFilters``). The oracle recomputes the
+    aggregate from the raw parquet; results must match exactly because
+    pruning is advisory (Spark still filters row-level). Build-once
+    fixture keyed by corpus content (`plans/common.corpus_fixture`)."""
     from ..core.sql_serving import register_txlog_table
-    from ..sources.txlog import is_txlog_table, tx_write
+    from ..sources.txlog import tx_write
 
-    doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    files = (
-        sorted(os.path.join(doc, f) for f in os.listdir(doc))
-        if os.path.isdir(doc)
-        else [doc]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{doc}|{'|'.join(parts)}|txpd|v1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_txpd_{key}")
-    if not is_txlog_table(spark, path):
-        tmp = tempfile.mkdtemp(prefix="spark_graft_txpd_build_")
+    def build(tmp: str) -> None:
         d = t(spark, sf_dir, "documents")
         tx_write(
             spark,
@@ -2770,16 +2628,9 @@ def q_sql_pushdown_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
             tmp,
             stats_for=["doc_id"],
         )
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not is_txlog_table(spark, path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    db = "lake_" + hashlib.sha1(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:8]
+
+    path = corpus_fixture(sf_dir, "documents", "txpd", "txpd|v1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_pd", path, read_optimized=True
     )
@@ -2819,16 +2670,13 @@ def q_txlog_changes_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     emits precisely its touched rows as pre/post pairs — so DuckDB can
     recompute every group closed-form from the raw corpus. The starting
     version is pinned in a sidecar meta file at build time (never
-    inferred from the current version). Cache keyed by corpus content,
-    atomic publish via rename."""
-    import hashlib
+    inferred from the current version). Build-once fixture keyed by
+    corpus content (`plans/common.corpus_fixture`)."""
     import json as _json
     import os
-    import shutil
-    import tempfile
 
     from ..sources.txlog import (
-        is_txlog_table,
+        current_version,
         tx_delete,
         tx_enable_row_tracking,
         tx_update,
@@ -2836,23 +2684,7 @@ def q_txlog_changes_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from ..streaming.source import read_txlog_changes
 
-    doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    files = (
-        sorted(os.path.join(doc, f) for f in os.listdir(doc))
-        if os.path.isdir(doc)
-        else [doc]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{doc}|{'|'.join(parts)}|txchanges|v1".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_txchg_{key}")
-    meta_p = os.path.join(path, "graft_query_meta.json")
-    if not is_txlog_table(spark, path):
-        tmp = tempfile.mkdtemp(prefix="spark_graft_txchg_build_")
+    def build(tmp: str) -> None:
         d = t(spark, sf_dir, "documents")
         tx_write(
             spark,
@@ -2862,8 +2694,6 @@ def q_txlog_changes_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             tmp,
         )
         tx_enable_row_tracking(spark, tmp)
-        from ..sources.txlog import current_version
-
         v_before_dml = current_version(spark, tmp)
         tx_delete(spark, tmp, where={"lang": ("de", "de")})
         tx_write(
@@ -2882,14 +2712,9 @@ def q_txlog_changes_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         with open(os.path.join(tmp, "graft_query_meta.json"), "w") as fh:
             _json.dump({"v_start": v_before_dml + 1}, fh)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not is_txlog_table(spark, path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    with open(meta_p) as fh:
+
+    path = corpus_fixture(sf_dir, "documents", "txchg", "txchanges|v1", build)
+    with open(os.path.join(path, "graft_query_meta.json")) as fh:
         v_start = _json.load(fh)["v_start"]
     ch = read_txlog_changes(
         spark, path, starting_version=v_start, row_keyed=True
@@ -2938,54 +2763,13 @@ GROUP BY lang, source
 """
 
 
-def _corpus_tx_fixture(spark, sf_dir: str, tag: str, build):
-    """Build-once txlog fixture keyed by corpus content (file sizes +
-    mtimes): ``build(tmp_dir)`` constructs the table (writes + DML) in a
-    scratch dir, which is atomically published via rename. Returns the
-    published path. The same cache pattern as the older ``txdocs`` /
-    ``txpd`` fixtures; bench.py's min-of-N keeps cold builds out of the
-    reported numbers."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from ..sources.txlog import is_txlog_table
-
-    doc = os.path.join(os.path.abspath(sf_dir), "documents.parquet")
-    files = (
-        sorted(os.path.join(doc, f) for f in os.listdir(doc))
-        if os.path.isdir(doc)
-        else [doc]
-    )
-    parts = []
-    for p in files:
-        st = os.stat(p)
-        parts.append(f"{os.path.basename(p)}:{st.st_size}:{st.st_mtime_ns}")
-    key = hashlib.sha1(
-        f"{doc}|{'|'.join(parts)}|{tag}".encode()
-    ).hexdigest()[:16]
-    path = os.path.join(tempfile.gettempdir(), f"spark_graft_{tag}_{key}")
-    if not is_txlog_table(spark, path):
-        tmp = tempfile.mkdtemp(prefix=f"spark_graft_{tag}_build_")
-        build(tmp)
-        try:
-            os.rename(tmp, path)
-        except OSError:
-            if not is_txlog_table(spark, path):
-                shutil.rmtree(tmp, ignore_errors=True)
-                raise
-            shutil.rmtree(tmp, ignore_errors=True)
-    return path
-
-
-def _lake_db(sf_dir: str) -> str:
-    import hashlib
-    import os
-
-    return "lake_" + hashlib.sha1(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:8]
+def _corpus_tx_fixture(sf_dir: str, tag: str, build) -> str:
+    """The build-once txlog fixture ``tag`` of the documents corpus:
+    ``build(tmp_dir)`` constructs the table (writes + DML) and
+    `plans/common.corpus_fixture` publishes it. Timed runs reuse a
+    published fixture; a cold, build-inclusive run points ``TMPDIR`` at
+    an empty dir."""
+    return corpus_fixture(sf_dir, "documents", tag, tag, build)
 
 
 def q_sql_txlog_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3037,8 +2821,8 @@ def q_sql_txlog_dml(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_dml_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txdmlv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txdmlv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_dml", path, read_optimized=True
     )
@@ -3120,8 +2904,8 @@ def q_sql_insert_overwrite_dynamic(
         )
         spark.sql("DROP TABLE IF EXISTS lake_dyn_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txdynv2", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txdynv2", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_dyn", path, read_optimized=True
     )
@@ -3183,8 +2967,8 @@ def q_sql_ddl_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_ddl_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txddlv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txddlv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_ddl", path, read_optimized=True
     )
@@ -3256,8 +3040,8 @@ def q_sql_merge_conditional(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_mc_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txmcv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txmcv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_mc", path, read_optimized=True
     )
@@ -3347,8 +3131,8 @@ def q_sql_merge_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_me_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txmev1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txmev1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_me", path, read_optimized=True
     )
@@ -3396,8 +3180,6 @@ def q_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicate rows — that is the contract under test). CSV strings cast
     to the table's declared types by name. DuckDB replays the ingested
     subset closed-form from the raw corpus."""
-    import tempfile
-
     from ..core.sql_dml import sql_dml
     from ..core.sql_serving import register_txlog_table
     from ..sources.txlog import tx_write
@@ -3406,7 +3188,7 @@ def q_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         import shutil
 
         d = t(spark, sf_dir, "documents")
-        drop = tempfile.mkdtemp(prefix="spark_graft_copydrop_")
+        drop = f"{tmp}.copydrop"  # the staged source files, gone after
         try:
             (
                 d.filter(F.col("doc_id") % 7 == 0)
@@ -3439,8 +3221,8 @@ def q_sql_copy_into(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             shutil.rmtree(drop, ignore_errors=True)
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txciv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txciv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_ci", path, read_optimized=True
     )
@@ -3502,8 +3284,8 @@ def q_sql_widening_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_wl_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txwlv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txwlv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_wl", path, read_optimized=True
     )
@@ -3569,8 +3351,8 @@ def q_sql_replace_where(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_rw_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txrwv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txrwv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_rw", path, read_optimized=True
     )
@@ -3630,8 +3412,8 @@ def q_sql_convert_in_place(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_conv_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txconvv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txconvv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_conv", path, read_optimized=True
     )
@@ -3688,8 +3470,8 @@ def q_sql_delete_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_dex_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txdexv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txdexv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_dex", path, read_optimized=True
     )
@@ -3755,8 +3537,8 @@ def q_sql_delete_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_dsq_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txdsqv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txdsqv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_dsq", path, read_optimized=True
     )
@@ -3820,8 +3602,8 @@ def q_sql_zorder_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         spark.sql("DROP TABLE IF EXISTS lake_z_build.t")
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txzv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txzv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_z", path, read_optimized=True
     )
@@ -3868,8 +3650,8 @@ def q_sql_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         tx_delete(spark, tmp, where={"lang": ("en", "en")})
 
-    path = _corpus_tx_fixture(spark, sf_dir, "txttv1", build)
-    db = _lake_db(sf_dir)
+    path = _corpus_tx_fixture(sf_dir, "txttv1", build)
+    db = lake_db(sf_dir)
     register_txlog_table(
         spark, db, "documents_tt", path, read_optimized=True
     )

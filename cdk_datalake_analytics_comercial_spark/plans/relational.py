@@ -20,7 +20,7 @@ from ..functions.transforms import (
     fn_transform_Concatenate,
 )
 from ..operators.relational import rolling_range_join, rolling_window, top1_per_group
-from .common import period_yyyymm, dmul2, dsum, dsum_to_double, t
+from .common import period_yyyymm, dmul2, dsum, dsum_to_double, lake_db, t
 from ..core.barrier import shared_barrier
 
 # --------------------------------------------------------------------------
@@ -2914,14 +2914,9 @@ def _serving_db(spark: SparkSession, sf_dir: str) -> str:
     """Register the testdata tables of ``sf_dir`` as external tables in a
     per-directory database; returns the database name. Idempotent and
     metadata-only — re-registration never touches data."""
-    import hashlib
-    import os
-
     from ..core.sql_serving import register_sql_dir
 
-    db = "lake_" + hashlib.sha1(
-        os.path.abspath(sf_dir).encode()
-    ).hexdigest()[:8]
+    db = lake_db(sf_dir)
     register_sql_dir(spark, sf_dir, db)
     return db
 

@@ -3294,9 +3294,7 @@ def tx_read(
     kept = [
         f
         for f in manifest["files"]
-        if not (p_where and not _file_overlaps(f, p_where))
-        and not (bloom_probes and _bloom_rejects(f, bloom_probes))
-        and not _partition_rejects(f, p_where, p_equals, part_types)
+        if _file_can_match(f, p_where, bloom_probes, part_types, p_equals)
     ]
     out = _read_files(spark, path, kept, manifest["schema"])
     # project onto the schema whenever the files carry anything else:
@@ -4858,7 +4856,8 @@ def _file_can_match(
     part_types: dict | None = None,
     part_equals: dict | None = None,
 ) -> bool:
-    """Combined skip test for reads and DML: range stats, bloom, and —
+    """The one file-skip test of ``tx_read``, the DML rewrites and the
+    Python Data Source's pushed filters: range stats, bloom, and —
     when ``part_types`` is given — hive partition values (``where`` may
     carry derived generated-column hints; ``part_equals`` is the full
     equality probe set, wider than the bloom-eligible subset)."""

@@ -237,13 +237,6 @@ class _TxFilesPartition(InputPartition):
         self.dv = dv or {}
 
 
-def _hive_dec(seg: str):
-    """Decode one ``k=v`` partition VALUE the way Spark escapes it
-    (inverse of ``txlog._hive_enc``) — single implementation lives in
-    txlog; this alias keeps the executor-side reader import-light."""
-    return TX._hive_dec(seg)
-
-
 def _ref_local(root: str, ref: str) -> str:
     """A manifest file ref as a local filesystem path: refs are
     table-root-relative normally; SHALLOW CLONES reference the source's
@@ -298,7 +291,7 @@ def _read_partition(part: _TxFilesPartition) -> Iterator:
                 )
         n = table.num_rows
         part_vals = {
-            k: _hive_dec(v) for k, v in TX._partition_of(rel).items()
+            k: TX._hive_dec(v) for k, v in TX._partition_of(rel).items()
         }
         cols = []
         for field in target:
@@ -464,57 +457,6 @@ class TxLogStreamReader(DataSourceStreamReader):
         return _read_partition(partition)
 
 
-def _typed_partition_value(raw: str, type_json):
-    """A hive partition value decoded to the column's declared type for
-    ordered comparison against a pushed-filter bound (delegates to the
-    txlog implementation; kept for the module's callers)."""
-    return TX._typed_partition_value(raw, type_json)
-
-
-def _prune_files(
-    files: list[dict],
-    ranges: dict[str, tuple],
-    equals: dict,
-    mapping: dict[str, str],
-    schema_json: str,
-) -> list[dict]:
-    """File-skipping for pushed filters: drop manifest entries whose
-    per-file min/max stats, Bloom bitsets, or hive partition values
-    PROVABLY miss the predicates. Sound by construction — every check
-    only ever removes files that cannot contain a matching row, and any
-    uninterpretable stat/value keeps the file."""
-    p_where = {mapping.get(c, c): rng for c, rng in ranges.items()}
-    bloom_probes: dict = {}
-    if equals:
-        try:
-            bloom_probes = {
-                mapping.get(c, c): v
-                for c, v in TX._bloomable_probes(schema_json, equals).items()
-            }
-        except Exception:
-            bloom_probes = {}
-    part_types = TX._partition_types(schema_json) if schema_json else {}
-    p_equals = {mapping.get(c, c): v for c, v in (equals or {}).items()}
-
-    def keep(f: dict) -> bool:
-        if p_where:
-            try:
-                if not TX._file_overlaps(f, p_where):
-                    return False
-            except TypeError:
-                pass  # bound not orderable against the stat tag: keep
-        if bloom_probes and TX._bloom_rejects(f, bloom_probes):
-            return False
-        # single implementation of the hive partition-value skip —
-        # shared with tx_read and the DML paths, so a semantics fix
-        # lands everywhere at once
-        if TX._partition_rejects(f, p_where, p_equals, part_types):
-            return False
-        return True
-
-    return [f for f in files if keep(f)]
-
-
 class TxLogBatchReader(DataSourceReader):
     """Snapshot batch read through the Python Data Source — the
     NAME-ADDRESSABLE SQL path: ``CREATE TABLE db.t USING txlog LOCATION
@@ -646,9 +588,26 @@ class TxLogBatchReader(DataSourceReader):
             ranges = TX._derive_generated_hints(
                 manifest, self._ranges, self._equals
             )
-            files = _prune_files(
-                files, ranges, self._equals, mapping, manifest["schema"]
-            )
+            where = TX._map_keys(ranges, mapping)
+            equals = TX._map_keys(self._equals, mapping)
+            try:
+                probes = TX._map_keys(
+                    TX._bloomable_probes(manifest["schema"], self._equals),
+                    mapping,
+                )
+            except TypeError:
+                probes = {}  # a probe typed unlike its column: no bloom skip
+            part_types = TX._partition_types(manifest["schema"])
+
+            def can_match(f: dict) -> bool:
+                try:
+                    return TX._file_can_match(
+                        f, where, probes, part_types, equals
+                    )
+                except TypeError:
+                    return True  # bound not orderable against a stat tag
+
+            files = [f for f in files if can_match(f)]
         parts = [
             _TxFilesPartition(
                 self.path,
