@@ -12,12 +12,16 @@ txlog path through the pinned-format registry and dispatches to the
 native writer; anything it does not recognize passes through
 ``spark.sql`` unchanged, so it can serve as the single SQL entry point.
 
-Parse, then dispatch: DML is parsed ONCE by Spark's own SQL parser
-(``sessionState().sqlParser().parsePlan``) and routed on the class of
-the unresolved plan — ``DeleteFromTable``, ``UpdateTable``,
+Parse, then dispatch: DML and table DDL are parsed ONCE by Spark's own
+SQL parser (``sessionState().sqlParser().parsePlan``) and routed on the
+class of the unresolved plan — ``DeleteFromTable``, ``UpdateTable``,
 ``MergeIntoTable``, ``OverwriteByExpression`` (``INSERT INTO … REPLACE
-WHERE``) and ``InsertIntoStatement``. Quotes, comments, CASE and nested
-parentheses are therefore the parser's business, never this module's.
+WHERE``) and ``InsertIntoStatement``; ``TruncateTable``,
+``ShowTableProperties`` and the ALTER TABLE plans (``AddColumns``,
+``RenameColumn``, ``DropColumns``, ``AddCheckConstraint``,
+``DropConstraint``, ``SetTableProperties``, ``AlterColumns``). Quotes,
+comments, CASE and nested parentheses are therefore the parser's
+business, never this module's.
 Source queries, subqueries and INSERT queries run as DataFrames over
 their parsed sub-plans. The text of a condition or an assignment value
 is the statement slice its expression covers: ``(min startIndex, max
@@ -28,9 +32,9 @@ parentheses, as the origin of a parenthesized operand. Column
 references are rewritten at the spans of their ``UnresolvedAttribute``
 nodes. Verbs Spark does not parse (``CONVERT TO TXLOG``, ``COPY
 INTO``, ``… USING txlog`` DDL, ``OPTIMIZE``, ``VACUUM``, ``DESCRIBE
-HISTORY|DETAIL``, ``RESTORE``) and the ones this engine serves itself
-(``TRUNCATE``, ``ALTER TABLE``, ``SHOW TBLPROPERTIES``, time travel)
-keep their statement-head regexes.
+HISTORY|DETAIL``, ``RESTORE``) keep their statement-head regexes, and so
+does time travel: Spark refuses ``VERSION AS OF`` on a MERGE source
+with an alias, which the rewrite onto frozen twins serves.
 
 Supported statements (``db.table`` names registered by
 ``sql_serving.register_txlog_table`` / ``register_sql``):
@@ -78,12 +82,16 @@ Supported statements (``db.table`` names registered by
   (snapshot facts: version, files, bytes, live rows, partitioning,
   properties), ``TRUNCATE TABLE db.t`` (an all-rows delete COMMIT —
   time-travelable/undoable, properties and constraints survive).
-- DDL by name: ``ALTER TABLE db.t ADD COLUMN(s) … | RENAME COLUMN a TO
-  b | DROP COLUMN c | ADD CONSTRAINT n CHECK (…) | DROP CONSTRAINT n |
-  ALTER COLUMN c SET NOT NULL | DROP NOT NULL | SET DEFAULT <expr> |
-  DROP DEFAULT | SET TBLPROPERTIES (…)`` — the metadata-only schema writers, with
+- DDL by name: ``ALTER TABLE db.t ADD COLUMN(S) … [NOT NULL] [DEFAULT
+  <expr>] | RENAME COLUMN a TO b | DROP COLUMN(S) c | ADD CONSTRAINT n
+  CHECK (…) | DROP CONSTRAINT n | ALTER COLUMN c TYPE <wider> | SET NOT
+  NULL | DROP NOT NULL | SET DEFAULT <expr> | DROP DEFAULT | SET
+  TBLPROPERTIES (…)`` — the metadata-only schema writers, with
   automatic catalog re-registration so SELECT sees the new shape; and
-  ``SHOW TBLPROPERTIES db.t`` served from the txlog property record.
+  ``SHOW TBLPROPERTIES db.t [('key')]`` served from the txlog property
+  record. Spark's ADD COLUMN grammar has no GENERATED / IDENTITY /
+  CHECK column options (a ``ParseException``): ``tx_add_generated_column``,
+  ``tx_add_identity`` and ``ADD CONSTRAINT`` add those.
 - ``CREATE [OR REPLACE] TABLE db.t USING txlog [LOCATION '…']
   [PARTITIONED BY (…)] AS <query>`` — CTAS, external or managed; and
   the empty-table DDL form ``CREATE TABLE db.t (col TYPE, …) USING
@@ -105,15 +113,19 @@ Supported statements (``db.table`` names registered by
   a table reference appears — rewritten onto auto-registered frozen
   catalog twins.
 
-Scale: the WHERE clause is decomposed into top-level conjuncts;
-sargable ones (``col = lit``, ``col >|>=|<|<= lit``, ``col BETWEEN a
-AND b``, ``col IN (lits)``) become the structured ``where``/
-``where_equals`` specs that drive FILE PRUNING (range stats + Bloom
-bitsets — a point DELETE on a bloom-indexed 100 TB table rewrites only
-the files that can contain the key), and the FULL predicate text rides
-along as the row-level ``condition``. Non-sargable predicates still
-execute correctly — they just scan every live file, exactly Delta's
-behavior for an unselective DELETE.
+Scale: the parsed WHERE expression is decomposed into its top-level
+``And`` conjuncts; sargable ones (``col = lit``, ``col >|>=|<|<= lit``
+with the literal on either side, ``col BETWEEN a AND b``, ``col IN
+(lits)``) become the structured ``where``/``where_equals`` specs that
+drive FILE PRUNING (range stats + Bloom bitsets — a point DELETE on a
+bloom-indexed 100 TB table rewrites only the files that can contain the
+key), and the FULL predicate text rides along as the row-level
+``condition``. Literal values come from the parser's ``Literal`` nodes,
+so a hint holds exactly the value Spark's own WHERE compares with — a
+TIMESTAMP is the instant the session time zone gives it, whatever the
+Python process's zone. Non-sargable predicates still execute correctly
+— they just scan every live file, exactly Delta's behavior for an
+unselective DELETE.
 
 Concurrency: every dispatched statement inherits the writer's
 optimistic CAS — a racing ``tx_write`` overlapping the predicate raises
@@ -128,11 +140,11 @@ from __future__ import annotations
 
 import re
 
-from pyspark.errors import ParseException
+from pyspark.errors import AnalysisException, ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.txlog import _quoted_spans, _sub_outside_quotes
+from ..sources.txlog import _merge_range, _quoted_spans, _sub_outside_quotes
 
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*|`[^`]+`"
 _TBL = rf"(?:{_IDENT})(?:\.(?:{_IDENT}))?"
@@ -218,15 +230,10 @@ def txlog_table_path(spark: SparkSession, table: str) -> tuple[str, dict] | None
 
 
 def _split_top(text: str, sep: str) -> list[str]:
-    """Split on a top-level keyword/char ``sep`` (regex, case-insens.),
-    respecting single-quoted strings, backquoted identifiers and
-    parentheses. ``BETWEEN … AND …`` keeps its AND; anything inside a
-    ``CASE … END`` expression is NOT top-level (its WHEN/THEN/AND/OR
-    belong to the CASE, never to the surrounding clause grammar)."""
+    """Split on the one-character separator ``sep`` (``,`` or ``;``)
+    where it is top-level: outside single/double-quoted strings,
+    backquoted identifiers and parentheses."""
     out, depth, last, i = [], 0, 0, 0
-    between = 0
-    case_depth = 0
-    rx = re.compile(sep, re.IGNORECASE)
     n = len(text)
     while i < n:
         c = text[i]
@@ -245,74 +252,21 @@ def _split_top(text: str, sep: str) -> list[str]:
             j = text.find("`", i + 1)
             i = (j if j != -1 else n) + 1
             continue
-        if c == "(":
-            depth += 1
-            i += 1
-            continue
-        if c == ")":
-            depth -= 1
-            i += 1
-            continue
-        if _at_word_boundary(text, i):
-            m = re.match(r"CASE\b", text[i:], re.IGNORECASE)
-            if m:
-                case_depth += 1
-                i += m.end()
-                continue
-            m = re.match(r"END\b", text[i:], re.IGNORECASE)
-            if m and case_depth > 0:
-                case_depth -= 1
-                i += m.end()
-                continue
-        if depth == 0 and case_depth == 0:
-            m = re.match(r"BETWEEN\b", text[i:], re.IGNORECASE)
-            if m and _at_word_boundary(text, i):
-                between += 1
-                i += m.end()
-                continue
-            m = rx.match(text, i)
-            if m and (
-                not m.group()[:1].isalpha() or _at_word_boundary(text, i)
-            ):
-                if between and re.match(r"AND\b", text[i:], re.IGNORECASE):
-                    between -= 1  # the AND belongs to BETWEEN
-                    i = m.end()
-                    continue
-                out.append(text[last:i])
-                last = m.end()
-                i = m.end()
-                continue
+        depth += (c == "(") - (c == ")")
+        if c == sep and depth == 0:
+            out.append(text[last:i])
+            last = i + 1
         i += 1
     out.append(text[last:])
     return out
 
 
-def _at_word_boundary(text: str, i: int) -> bool:
-    return i == 0 or not (text[i - 1].isalnum() or text[i - 1] in "_`")
-
-
 def _parse_literal(tok: str):
-    """A SQL literal as a Python value, or the sentinel None for
-    'not a literal' (NULL itself is not sargable for pruning)."""
+    """A RESTORE / time-travel ``AS OF`` literal as a Python value, or
+    None when it is not one."""
     tok = tok.strip()
     if re.fullmatch(r"-?\d+", tok):
         return int(tok)
-    m = re.fullmatch(r"(?is)date\s*'(\d{4}-\d{2}-\d{2})'", tok)
-    if m:
-        import datetime as _dt
-
-        try:
-            return _dt.date.fromisoformat(m.group(1))
-        except ValueError:  # calendar-invalid (DATE '2023-02-30')
-            return None
-    m = re.fullmatch(r"(?is)timestamp\s*'([^']+)'", tok)
-    if m:
-        import datetime as _dt
-
-        try:
-            return _dt.datetime.fromisoformat(m.group(1).strip())
-        except ValueError:
-            return None
     if re.fullmatch(r"-?\d*\.\d+([eE][+-]?\d+)?|-?\d+[eE][+-]?\d+", tok):
         return float(tok)
     if (
@@ -321,137 +275,145 @@ def _parse_literal(tok: str):
         and tok.endswith("'")
         and "'" not in tok[1:-1].replace("''", "")
     ):
-        if "\\" in tok:
-            # F.expr treats backslash as an escape; mirroring its full
-            # escape table here is fragile, and a MISMATCHED value in a
-            # pruning/equality probe silently loses rows — so a
-            # backslash-bearing literal is simply not sargable (the
-            # conjunct rides as the row-level condition, scan-all)
-            return None
         return tok[1:-1].replace("''", "'")
     return None
 
 
-_CMP = re.compile(
-    rf"^\s*({_IDENT})\s*(=|>=|<=|>|<)\s*(.+?)\s*$", re.DOTALL
-)
-_BETWEEN = re.compile(
-    rf"^\s*({_IDENT})\s+BETWEEN\s+(.+?)\s+AND\s+(.+?)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_IN = re.compile(
-    rf"^\s*({_IDENT})\s+IN\s*\((.+)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-
-
-def parse_predicate(pred: str) -> tuple[dict, dict, str | None]:
+def parse_predicate(pred: _Expr | str) -> tuple[dict, dict, str | None]:
     """Decompose a WHERE clause into file-pruning hints + the residual
     row-level condition: ``(where ranges, where_equals probes,
-    condition)``. Sargable top-level conjuncts feed the hints; the FULL
-    predicate is returned as ``condition`` unless every conjunct was
-    captured structurally (then ``None`` — the structured spec alone is
-    complete, and keeps working on column-mapped tables where free-form
-    text cannot be soundly rebound)."""
-    if len(_split_top(pred, r"OR\b")) > 1:
+    condition)``. ``pred`` is a parsed expression, or text that the
+    active session's SQL parser parses. Sargable top-level conjuncts feed
+    the hints; the FULL predicate text is returned as ``condition``
+    unless every conjunct was captured structurally (then ``None`` — the
+    structured spec alone is complete, and keeps working on
+    column-mapped tables where free-form text cannot be soundly
+    rebound)."""
+    if isinstance(pred, str):
+        state = SparkSession.active()._jsparkSession.sessionState()
+        text = pred
+        pred = _Expr(state.sqlParser().parseExpression(text), text)
+    else:
+        text = pred.text
+    if pred.kind == "Or":
         # SQL precedence: AND binds tighter than OR, so NO top-level-AND
         # conjunct of an OR-bearing clause is unconditional — `a OR b AND
         # c` means `a OR (b AND c)`, and pruning on `c` alone would lose
-        # `a`-rows. Any top-level OR therefore suppresses ALL hints: file
+        # `a`-rows. A top-level OR therefore suppresses ALL hints: file
         # pruning degrades to scan-every-live-file (sound, just
         # unselective) and the whole clause rides as the row condition.
-        return {}, {}, pred
+        return {}, {}, text
     where: dict[str, tuple] = {}
     where_equals: dict = {}
-    all_sargable = True
-    for conj in _split_top(pred, r"AND\b"):
-        conj = conj.strip()
-        while (
-            conj.startswith("(")
-            and conj.endswith(")")
-            and _balanced(conj[1:-1])  # parens wrap the WHOLE conjunct
-        ):
-            conj = conj[1:-1].strip()
-        m = _BETWEEN.match(conj)
-        if m:
-            col, lo, hi = _unquote(m.group(1)), *m.group(2, 3)
-            lo_v, hi_v = _parse_literal(lo), _parse_literal(hi)
-            if lo_v is not None and hi_v is not None:
-                if not _merge_range(where, col, lo_v, hi_v):
-                    all_sargable = False
-                continue
-            all_sargable = False
-            continue
-        m = _IN.match(conj)
-        if m:
-            col = _unquote(m.group(1))
-            vals = [_parse_literal(v) for v in _split_top(m.group(2), r",")]
-            if vals and all(v is not None for v in vals):
-                try:
-                    # the [min, max] ENVELOPE is a pruning hint only —
-                    # it over-keeps, so the IN itself must always stay
-                    # in the row-level residual condition
-                    _merge_range(where, col, min(vals), max(vals))
-                except TypeError:
-                    pass
-            all_sargable = False
-            continue
-        m = _CMP.match(conj)
-        if m:
-            col, op, rhs = _unquote(m.group(1)), m.group(2), m.group(3)
-            v = _parse_literal(rhs)
-            if v is not None:
-                if op == "=":
-                    prior = where_equals.setdefault(col, v)
-                    if prior != v or not _merge_range(where, col, v, v):
-                        # conflicting equality probes (a = 1 AND a = 'x'):
-                        # same-type conflicts leave an empty range that
-                        # prunes soundly, but MIXED-type ones cannot merge
-                        # — keep the full predicate row-level so the
-                        # original (vacuous) semantics are re-applied
-                        all_sargable = False
-                elif op in (">", ">="):
-                    # strict treated as inclusive: sound (over-keeps),
-                    # but the residual condition must then re-apply it
-                    if not _merge_range(where, col, v, None):
-                        all_sargable = False
-                    all_sargable = all_sargable and op == ">="
-                elif op in ("<", "<="):
-                    if not _merge_range(where, col, None, v):
-                        all_sargable = False
-                    all_sargable = all_sargable and op == "<="
-                continue
-        all_sargable = False  # unparsed conjunct stays row-level only
-    condition = None if all_sargable and (where or where_equals) else pred
+    captured = _hints(pred.conjuncts(), where, where_equals)
+    condition = None if captured and (where or where_equals) else text
     return where, where_equals, condition
 
 
-def _balanced(s: str) -> bool:
-    d = 0
-    for c in s:
-        d += c == "("
-        d -= c == ")"
-        if d < 0:
-            return False
-    return d == 0
+# comparison node → the node of the same comparison with its sides swapped
+_FLIP = {
+    "EqualTo": "EqualTo",
+    "GreaterThan": "LessThan",
+    "GreaterThanOrEqual": "LessThanOrEqual",
+    "LessThan": "GreaterThan",
+    "LessThanOrEqual": "GreaterThanOrEqual",
+}
 
 
-def _merge_range(where: dict, col: str, lo, hi) -> bool:
-    """Intersect ``[lo, hi]`` into ``where[col]``. Returns False when the
-    bounds are type-incomparable with the existing ones (mixed-type
-    conjuncts): the first bound is kept as an over-keeping hint, and the
-    CALLER must then demote the clause to row-level-only — the structured
-    spec alone no longer captures the predicate."""
-    cur = where.setdefault(col, (None, None))
-    new_lo, new_hi = cur
-    try:
-        if lo is not None and (new_lo is None or lo > new_lo):
-            new_lo = lo
-        if hi is not None and (new_hi is None or hi < new_hi):
-            new_hi = hi
-    except TypeError:
-        return False  # mixed types across conjuncts: keep the first bound
-    where[col] = (new_lo, new_hi)
-    return True
+def _hints(conjuncts: list[_Expr], where: dict, where_equals: dict) -> bool:
+    """Fold the sargable conjuncts into ``where`` / ``where_equals``;
+    True when every conjunct is captured exactly (the structured spec
+    then stands for the predicate). Sargable: ``col <op> lit`` with the
+    literal on either side, ``col BETWEEN lit AND lit`` and ``col IN
+    (lits)``; an IN prunes by its [min, max] ENVELOPE, which over-keeps,
+    so it always stays in the row-level condition too."""
+    captured = True
+    for conj in conjuncts:
+        kind, kids = conj.kind, conj.kids
+        if kind == "In":
+            col, vals = _column(kids[0]), [_literal(k) for k in kids[1:]]
+            if col is not None and vals and None not in vals:
+                try:
+                    _merge_range(where, col, min(vals), max(vals))
+                except TypeError:
+                    pass
+            captured = False
+            continue
+        if kind == "UnresolvedFunction" and len(kids) == 3 and [
+            str(p).lower() for p in _seq(conj.j.nameParts())
+        ] == ["between"]:
+            col, lo, hi = _column(kids[0]), *map(_literal, kids[1:])
+            captured = (
+                col is not None and lo is not None and hi is not None
+                and _merge_range(where, col, lo, hi) and captured
+            )
+            continue
+        if kind not in _FLIP:
+            captured = False  # not a sargable shape: row-level only
+            continue
+        if _column(kids[0]) is None:  # `lit <op> col`
+            kind, kids = _FLIP[kind], kids[::-1]
+        col, v = _column(kids[0]), _literal(kids[1])
+        if col is None or v is None:
+            captured = False
+        elif kind == "EqualTo":
+            # conflicting equality probes (a = 1 AND a = 'x'): mixed-type
+            # ones cannot merge — keep the full predicate row-level so the
+            # original (vacuous) semantics are re-applied
+            captured = (
+                where_equals.setdefault(col, v) == v
+                and _merge_range(where, col, v, v) and captured
+            )
+        elif kind.startswith("Greater"):
+            # strict treated as inclusive: sound (over-keeps), but the
+            # residual condition must then re-apply it
+            captured = (
+                _merge_range(where, col, v, None) and captured
+                and kind.endswith("OrEqual")
+            )
+        else:
+            captured = (
+                _merge_range(where, col, None, v) and captured
+                and kind.endswith("OrEqual")
+            )
+    return captured
+
+
+def _column(e: _Expr) -> str | None:
+    """The column a bare one-part reference names, else None."""
+    if e.kind == "UnresolvedAttribute" and len(e.parts) == 1:
+        return e.parts[0]
+    return None
+
+
+def _literal(e: _Expr):
+    """The value of a parsed literal, typed the way the file stats and
+    ``F.lit`` compare it, or None when it is not a sargable literal
+    (NULL, booleans, NaN and other types). DATE arrives as days since
+    the epoch and TIMESTAMP as microseconds since the epoch — the parser
+    read its text in the session time zone — so the timestamp becomes a
+    UTC-aware ``datetime`` that means the same instant in any process
+    time zone."""
+    import datetime as _dt
+    import decimal
+
+    if e.kind != "Literal":
+        return None
+    t, v = e.j.dataType().typeName(), e.j.value()
+    if t in ("integer", "long", "short", "byte"):
+        return int(v)
+    if t == "double":
+        return v if v == v else None  # NaN orders against nothing
+    if t == "string":
+        return v.toString()
+    if t.startswith("decimal"):
+        return decimal.Decimal(v.toString())
+    if t == "date":
+        return _dt.date(1970, 1, 1) + _dt.timedelta(days=v)
+    if t == "timestamp":
+        epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+        return epoch + _dt.timedelta(microseconds=v)
+    return None
 
 
 _OPTIMIZE = re.compile(
@@ -471,19 +433,10 @@ _HISTORY = re.compile(
 _DETAIL = re.compile(
     rf"^\s*DESCRIBE\s+DETAIL\s+({_TBL})\s*$", re.IGNORECASE
 )
-_TRUNCATE = re.compile(
-    rf"^\s*TRUNCATE\s+TABLE\s+({_TBL})\s*$", re.IGNORECASE
-)
 _RESTORE = re.compile(
     rf"^\s*RESTORE\s+(?:TABLE\s+)?({_TBL})\s+TO\s+(VERSION|TIMESTAMP)"
     r"\s+AS\s+OF\s+(\d+|'(?:[^']|'')*')\s*$",
     re.IGNORECASE,
-)
-_ALTER = re.compile(
-    rf"^\s*ALTER\s+TABLE\s+({_TBL})\s+(.*)$", re.IGNORECASE | re.DOTALL
-)
-_SHOW_PROPS = re.compile(
-    rf"^\s*SHOW\s+TBLPROPERTIES\s+({_TBL})\s*$", re.IGNORECASE
 )
 _CONVERT = re.compile(
     rf"^\s*CONVERT\s+TO\s+TXLOG\s+"
@@ -524,7 +477,7 @@ _COPY_INTO = re.compile(
 def _parse_option_list(table: str, clause: str, body: str) -> dict:
     """``'k' = 'v', …`` inside FORMAT_OPTIONS/COPY_OPTIONS parens."""
     out: dict[str, str] = {}
-    for item in _split_top(body, r","):
+    for item in _split_top(body, ","):
         if not item.strip():
             continue
         m = re.match(
@@ -706,11 +659,11 @@ def sql_dml(spark: SparkSession, statement: str):
     m = _CREATE_EMPTY.match(stmt)
     if m:
         ddl_parts, col_opts = _parse_create_columns(
-            m.group(2), _split_top(m.group(3), r",")
+            m.group(2), _split_top(m.group(3), ",")
         )
         try:
             empty = spark.createDataFrame([], ", ".join(ddl_parts))
-        except Exception as e:
+        except AnalysisException as e:
             raise SqlDmlError(
                 f"CREATE TABLE {m.group(2)}: cannot parse column list "
                 f"{m.group(3)!r} as a DDL schema ({e})"
@@ -737,21 +690,6 @@ def sql_dml(spark: SparkSession, statement: str):
         r = _detail(spark, m.group(1))
         if r is not None:
             return r
-    m = _TRUNCATE.match(stmt)
-    if m:
-        r = _truncate(spark, m.group(1))
-        if r is not None:
-            return r
-    m = _ALTER.match(stmt)
-    if m:
-        r = _alter(spark, m.group(1), m.group(2))
-        if r is not None:
-            return r
-    m = _SHOW_PROPS.match(stmt)
-    if m:
-        r = _show_properties(spark, m.group(1))
-        if r is not None:
-            return r
     plan = _parse_statement(spark, stmt)
     kind = plan.nodeName()
     route = {
@@ -762,7 +700,11 @@ def sql_dml(spark: SparkSession, statement: str):
         "InsertIntoStatement": _insert,
     }.get(kind)
     if route is None:
-        return spark.sql(stmt)
+        table = _ddl_table(plan)
+        pinned = txlog_table_path(spark, table) if table else None
+        if pinned is None:
+            return spark.sql(stmt)
+        return _ddl(spark, stmt, plan, table, pinned)
     merge = kind == "MergeIntoTable"
     table, _ = _relation(plan.targetTable() if merge else plan.table())
     pinned = txlog_table_path(spark, table) if table else None
@@ -786,7 +728,7 @@ def sql_script(spark: SparkSession, script: str) -> list:
     are each atomic, so a failed script leaves every completed statement
     committed, exactly Delta's multi-statement semantics)."""
     out = []
-    for stmt in _split_top(_strip_comments(script), r";"):
+    for stmt in _split_top(_strip_comments(script), ";"):
         if stmt.strip():
             out.append(sql_dml(spark, stmt))
     return out
@@ -841,6 +783,8 @@ def _parse_statement(spark: SparkSession, stmt: str):
     try:
         return spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
     except ParseException as e:
+        if e.getCondition() == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY":
+            return _set_reserved_properties(spark, stmt)
         if re.match(r"\s*INSERT\b.*\bREPLACE\s+WHERE\b", stmt, re.I | re.S):
             raise SqlDmlError(
                 "INSERT: REPLACE WHERE takes the plain `INSERT INTO t "
@@ -848,6 +792,32 @@ def _parse_statement(spark: SparkSession, stmt: str):
                 "list or PARTITION spec)"
             ) from e
         raise
+
+
+def _set_reserved_properties(spark: SparkSession, stmt: str):
+    """The ``SetTableProperties`` plan of an ``ALTER TABLE … SET
+    TBLPROPERTIES`` that names a key Spark reserves for its own catalog
+    (``owner``, ``location``, ``provider``): Spark's parser refuses it
+    after reading the pairs, but in a txlog table's record these are
+    plain properties. The plan is rebuilt from Spark's own parse tree —
+    its lexer, grammar and ``visitPropertyKeyValues`` — without the
+    reserved-key check; on any other table ``spark.sql`` refuses it."""
+    C, A = spark._jvm.org.apache.spark.sql.catalyst, spark._jvm.org.antlr.v4
+    chars = A.runtime.CharStreams.fromString(stmt)
+    lexer = C.parser.SqlBaseLexer(C.parser.UpperCaseCharStream(chars))
+    tokens = A.runtime.CommonTokenStream(lexer)
+    tree = C.parser.SqlBaseParser(tokens).singleStatement().statement()
+    build = spark._jsparkSession.sessionState().sqlParser().astBuilder()
+    table = C.analysis.UnresolvedTable(
+        build.visitMultipartIdentifier(
+            tree.identifierReference().multipartIdentifier()
+        ),
+        "ALTER TABLE ... SET TBLPROPERTIES",
+        True,
+    )
+    return C.plans.logical.SetTableProperties(
+        table, build.visitPropertyKeyValues(tree.propertyList())
+    )
 
 
 def _seq(jseq) -> list:
@@ -981,7 +951,7 @@ def _delete(spark: SparkSession, stmt: str, plan, table: str, path: str):
         )
     if pred.has_subquery():
         return _dml_by_subquery(spark, table, path, pred)
-    where, where_equals, condition = parse_predicate(pred.text)
+    where, where_equals, condition = parse_predicate(pred)
     return tx_delete(
         spark,
         path,
@@ -1051,9 +1021,9 @@ def _exists_keys(
 
 def _subquery_keys(
     spark: SparkSession, table: str, verb: str, pred: _Expr
-) -> tuple[str, DataFrame, list[str]]:
+) -> tuple[str, DataFrame, list[_Expr]]:
     """Decompose a subquery-bearing WHERE into (key column, key
-    DataFrame, residual conjunct texts) for the routable ``k IN (SELECT
+    DataFrame, residual conjuncts) for the routable ``k IN (SELECT
     …) [AND …]`` shape, or refuse loudly (OR-combined, NOT IN/NOT
     EXISTS, multiple subqueries). A correlated-equality ``EXISTS``
     routes onto the same IN tier first (:func:`_exists_keys`)."""
@@ -1095,7 +1065,7 @@ def _subquery_keys(
                 "k IN (SELECT …) conjunct)"
             )
         else:
-            residual.append(conj.text)
+            residual.append(conj)
     if len(found) > 1:
         raise SqlDmlError(
             f"{verb} {table}: at most one IN (SELECT …) "
@@ -1108,10 +1078,14 @@ def _subquery_keys_tier(
     spark: SparkSession, table: str, verb: str, col: str, keys_df: DataFrame
 ):
     """Run the IN-subquery once and pick the tier: returns
-    ``("inline", [literal strings])`` when ≤ ``_SUBQ_INLINE_MAX``
-    renderable distinct keys (file pruning stays intact), else
-    ``("merge", keys_df)`` for the distributed hash semi-join path.
-    An empty/all-NULL key list returns ``("empty", None)``."""
+    ``("inline", [key values])`` when ≤ ``_SUBQ_INLINE_MAX`` renderable
+    distinct keys (file pruning stays intact), else ``("merge",
+    keys_df)`` for the distributed hash semi-join path. An
+    empty/all-NULL key list returns ``("empty", None)``."""
+    import datetime as _dt
+
+    from pyspark.sql.types import TimestampType
+
     if len(keys_df.columns) != 1:
         raise SqlDmlError(
             f"{verb} {table}: IN subquery must produce exactly one "
@@ -1122,9 +1096,12 @@ def _subquery_keys_tier(
     if len(sample) <= _SUBQ_INLINE_MAX:
         if not vals:
             return "empty", None
-        lits = [_render_literal(v) for v in vals]
-        if all(s is not None for s in lits):
-            return "inline", lits
+        if isinstance(keys_df.schema[0].dataType, TimestampType):
+            # collected timestamps are naive process-local times, but a
+            # rendered TIMESTAMP literal is read in the session zone
+            vals = [v.astimezone(_dt.timezone.utc) for v in vals]
+        if all(_render_literal(v) is not None for v in vals):
+            return "inline", vals
     return "merge", keys_df.toDF(col).distinct()
 
 
@@ -1163,16 +1140,19 @@ def _dml_by_subquery(
     if tier == "empty":  # IN matches nothing
         return current_version(spark, path)
     if tier == "inline":
-        where, where_equals, condition = parse_predicate(
-            " AND ".join(
-                [f"{col} IN ({', '.join(payload)})"]
-                + [f"({c})" for c in residual]
-            )
-        )
+        # the IN envelope comes from the keys themselves, the other hints
+        # from the residual conjuncts; the IN stays row-level
+        where: dict[str, tuple] = {}
+        where_equals: dict = {}
+        _merge_range(where, col, min(payload), max(payload))
+        _hints(residual, where, where_equals)
         spec = {
-            "where": where or None,
+            "where": where,
             "where_equals": where_equals or None,
-            "condition": condition,
+            "condition": " AND ".join(
+                [f"{col} IN ({', '.join(map(_render_literal, payload))})"]
+                + [f"({c.text})" for c in residual]
+            ),
         }
         if set_items is None:
             return tx_delete(spark, path, **spec)
@@ -1184,7 +1164,7 @@ def _dml_by_subquery(
     tgt_cols = spark.table(table).columns
     clause = {
         "cond": " AND ".join(
-            f"({_qualify_target(c, tgt_cols)})" for c in residual
+            f"({_qualify_target(c.text, tgt_cols)})" for c in residual
         ) or None,
         "action": "delete",
     }
@@ -1257,7 +1237,7 @@ def _update(spark: SparkSession, stmt: str, plan, table: str, path: str):
         return _dml_by_subquery(spark, table, path, pred, set_items)
     assignments = {c: F.expr(e) for c, e in set_items.items()}
     if pred is not None:
-        where, where_equals, condition = parse_predicate(pred.text)
+        where, where_equals, condition = parse_predicate(pred)
     else:
         # SQL UPDATE without WHERE touches every row
         where, where_equals, condition = {}, {}, "true"
@@ -1753,7 +1733,7 @@ def _convert(
         # Delta's CONVERT spec declares partition TYPES (the hive
         # dirs carry only strings): `PARTITIONED BY (g BIGINT)`
         cols = []
-        for item in _split_top(part_spec, r","):
+        for item in _split_top(part_spec, ","):
             pm = re.match(
                 rf"^\s*({_IDENT})(?:\s+(.+?))?\s*$", item, re.DOTALL
             )
@@ -1779,7 +1759,7 @@ def _convert(
     fq = ".".join(parts)
     try:
         rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fq}").collect()
-    except Exception as e:
+    except AnalysisException as e:
         raise SqlDmlError(
             f"CONVERT TO TXLOG {table}: cannot describe ({e})"
         )
@@ -1831,7 +1811,7 @@ def _insert_replace_where(
             for f in schema.fields
         )
     )
-    where, where_equals, condition = parse_predicate(pred.text)
+    where, where_equals, condition = parse_predicate(pred)
     return TX.tx_replace_where(
         spark, aligned, path,
         where=where or None,
@@ -1916,7 +1896,7 @@ def _ctas(
     mloc = _CTAS_LOCATION.search(opts_text)
     mpart = _CTAS_PARTITIONED.search(opts_text)
     partition_by = (
-        [_unquote(c) for c in _split_top(mpart.group(1), r",")]
+        [_unquote(c) for c in _split_top(mpart.group(1), ",")]
         if mpart
         else None
     )
@@ -1975,226 +1955,156 @@ def _ctas(
     return register_txlog_table(spark, db, name, path)
 
 
-_ALTER_FORMS = [
-    (
-        re.compile(
-            r"^ADD\s+COLUMNS?\s+(.*)$", re.IGNORECASE | re.DOTALL
-        ),
-        "add_column",
-    ),
-    (
-        re.compile(
-            rf"^RENAME\s+COLUMN\s+({_IDENT})\s+TO\s+({_IDENT})\s*$",
-            re.IGNORECASE,
-        ),
-        "rename_column",
-    ),
-    (
-        re.compile(
-            rf"^DROP\s+COLUMN\s+({_IDENT})\s*$", re.IGNORECASE
-        ),
-        "drop_column",
-    ),
-    (
-        re.compile(
-            rf"^ADD\s+CONSTRAINT\s+({_IDENT})\s+CHECK\s*\((.*)\)\s*$",
-            re.IGNORECASE | re.DOTALL,
-        ),
-        "add_constraint",
-    ),
-    (
-        re.compile(
-            rf"^DROP\s+CONSTRAINT\s+({_IDENT})\s*$", re.IGNORECASE
-        ),
-        "drop_constraint",
-    ),
-    (
-        re.compile(
-            r"^SET\s+TBLPROPERTIES\s*\((.*)\)\s*$",
-            re.IGNORECASE | re.DOTALL,
-        ),
-        "set_properties",
-    ),
-    (
-        re.compile(
-            rf"^ALTER\s+COLUMN\s+({_IDENT})\s+SET\s+NOT\s+NULL\s*$",
-            re.IGNORECASE,
-        ),
-        "set_not_null",
-    ),
-    (
-        re.compile(
-            rf"^ALTER\s+COLUMN\s+({_IDENT})\s+DROP\s+NOT\s+NULL\s*$",
-            re.IGNORECASE,
-        ),
-        "drop_not_null",
-    ),
-    (
-        re.compile(
-            rf"^ALTER\s+COLUMN\s+({_IDENT})\s+SET\s+DEFAULT\s+(.+?)\s*$",
-            re.IGNORECASE | re.DOTALL,
-        ),
-        "set_default",
-    ),
-    (
-        re.compile(
-            rf"^ALTER\s+COLUMN\s+({_IDENT})\s+DROP\s+DEFAULT\s*$",
-            re.IGNORECASE,
-        ),
-        "drop_default",
-    ),
-    (
-        re.compile(
-            rf"^ALTER\s+COLUMN\s+({_IDENT})\s+TYPE\s+(.+?)\s*$",
-            re.IGNORECASE | re.DOTALL,
-        ),
-        "widen_type",
-    ),
-]
+# table DDL served from the txlog record; every other ALTER TABLE plan on
+# a txlog table is refused
+_DDL = frozenset({
+    "AddColumns",
+    "RenameColumn",
+    "DropColumns",
+    "AddCheckConstraint",
+    "DropConstraint",
+    "SetTableProperties",
+    "AlterColumns",
+    "TruncateTable",
+    "ShowTableProperties",
+})
 
 
-def _alter(spark: SparkSession, table: str, action: str):
-    """``ALTER TABLE db.t <action>`` routed to the metadata-only DDL
-    writers: ADD COLUMN(s) (null-padded on read, zero files moved),
-    RENAME/DROP COLUMN (column mapping — physical names immutable),
-    ADD/DROP CONSTRAINT (full-table validation then persisted
-    ``check.<name>``), SET TBLPROPERTIES. Schema-changing forms
-    RE-REGISTER the catalog entry afterwards (the Python Data Source
-    captures the schema at CREATE time), so ``SELECT`` by name sees the
-    new shape immediately. Non-txlog targets return None → Spark's own
-    ALTER handles external parquet tables."""
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
+def _ddl_table(plan) -> str | None:
+    """The table a TRUNCATE / SHOW TBLPROPERTIES / ALTER TABLE plan
+    names (ADD CONSTRAINT's sits under the validating ``Filter`` Spark
+    builds over it), or None for any other plan."""
+    leaves = _seq(plan.collectLeaves())
+    if len(leaves) != 1:
         return None
-    path, extra = _writable(table, pinned)
+    leaf = leaves[0]
+    if plan.nodeName() not in _DDL and not (
+        leaf.nodeName() in ("UnresolvedTable", "UnresolvedTableOrView")
+        and str(leaf.commandName()).startswith("ALTER TABLE")
+    ):
+        return None
+    return ".".join(str(p) for p in _seq(leaf.multipartIdentifier()))
+
+
+def _ddl(spark: SparkSession, stmt: str, plan, table: str, pinned):
+    """TRUNCATE, SHOW TBLPROPERTIES and ALTER TABLE on a txlog table.
+    ``SHOW TBLPROPERTIES db.t [('key')]`` is served from the TXLOG
+    property record (the catalog's own store drops properties for
+    Python data source tables). ``TRUNCATE TABLE db.t`` commits one
+    version with zero live rows — a normal (undoable, time-travelable)
+    all-rows delete, never a log wipe, so table properties, constraints
+    and identity state survive."""
+    from ..sources import txlog as TX
+
+    kind = plan.nodeName()
+    if kind == "ShowTableProperties":
+        key = _opt(plan.propertyKey())
+        props = TX.tx_properties(spark, pinned[0])
+        rows = [(str(k), str(v)) for k, v in props.items() if key in (None, k)]
+        return spark.createDataFrame(sorted(rows), "key string, value string")
+    path = _writable(table, pinned)[0]
+    if kind == "TruncateTable":
+        return TX.tx_delete(spark, path, condition="true")
+    return _alter(spark, stmt, plan, table, path)
+
+
+def _alter(spark: SparkSession, stmt: str, plan, table: str, path: str):
+    """``ALTER TABLE db.t <action>`` routed by plan class to the
+    metadata-only DDL writers: ADD COLUMN(S) [DEFAULT] (null-padded on
+    read, zero files moved), RENAME/DROP COLUMN(S) (column mapping —
+    physical names immutable), ADD CONSTRAINT … CHECK (full-table
+    validation then persisted ``check.<name>``), DROP CONSTRAINT, SET
+    TBLPROPERTIES and ALTER COLUMN TYPE (lossless widening only) | SET /
+    DROP NOT NULL | SET / DROP DEFAULT. Schema-changing forms RE-REGISTER
+    the catalog entry afterwards (the Python Data Source captures the
+    schema at CREATE time), so ``SELECT`` by name sees the new shape
+    immediately."""
     from ..sources import txlog as TX
     from .sql_serving import register_txlog_table
 
-    action = action.strip().rstrip(";")
-    for rx, kind in _ALTER_FORMS:
-        m = rx.match(action)
-        if not m:
-            continue
-        reregister = True
-        if kind == "add_column":
-            spec = m.group(1).strip()
-            if spec.startswith("(") and spec.endswith(")"):
-                spec = spec[1:-1]
-            # column items accept the same declarative options as CREATE
-            # (DEFAULT / GENERATED … / IDENTITY / CHECK); NOT NULL is NOT
-            # among them — adding a NOT NULL column to a non-empty table
-            # is unsatisfiable and tx_add_column refuses it
-            ddl_parts, col_opts = _parse_create_columns(
-                table, _split_top(spec, r",")
-            )
-            v = None
-            for item in ddl_parts:
-                cm = re.match(
-                    rf"^\s*({_IDENT})\s+(.+?)\s*$", item, re.DOTALL
-                )
-                if not cm:
-                    raise SqlDmlError(
-                        f"ALTER TABLE {table} ADD COLUMN: cannot parse "
-                        f"{item.strip()!r} (expected: name type)"
-                    )
-                v = TX.tx_add_column(
-                    spark, path, _unquote(cm.group(1)), cm.group(2)
-                )
-            if v is None and not col_opts:
-                raise SqlDmlError(
-                    f"ALTER TABLE {table} ADD COLUMN: empty column list"
-                )
-            if col_opts:
-                _apply_create_options(spark, f"{table}", col_opts)
-                v = TX.current_version(spark, path)
-        elif kind == "rename_column":
-            v = TX.tx_rename_column(
-                spark, path, _unquote(m.group(1)), _unquote(m.group(2))
-            )
-        elif kind == "drop_column":
-            v = TX.tx_drop_column(spark, path, _unquote(m.group(1)))
-        elif kind == "add_constraint":
-            v = TX.tx_add_constraint(
-                spark, path, _unquote(m.group(1)), m.group(2).strip()
-            )
-            reregister = False
-        elif kind == "drop_constraint":
-            v = TX.tx_drop_constraint(spark, path, _unquote(m.group(1)))
-            reregister = False
-        elif kind == "set_not_null":
-            # Delta's NOT NULL is a validated invariant: full-table check
-            # then enforced on every write, exactly a named CHECK
-            col = _unquote(m.group(1))
-            v = TX.tx_add_constraint(
-                spark, path, f"notnull_{col}", f"{col} IS NOT NULL"
-            )
-            reregister = False
-        elif kind == "drop_not_null":
-            v = TX.tx_drop_constraint(
-                spark, path, f"notnull_{_unquote(m.group(1))}"
-            )
-            reregister = False
-        elif kind == "set_default":
-            v = TX.tx_set_default(
-                spark, path, _unquote(m.group(1)), m.group(2)
-            )
-            reregister = False
-        elif kind == "drop_default":
-            v = TX.tx_drop_default(spark, path, _unquote(m.group(1)))
-            reregister = False
-        elif kind == "widen_type":
-            # Delta's type widening: metadata-only, lossless widenings
-            # only (tx_widen_column refuses narrowing/cross-family)
-            v = TX.tx_widen_column(
-                spark, path, _unquote(m.group(1)), m.group(2)
-            )
-        else:  # set_properties
-            props = {}
-            for item in _split_top(m.group(1), r","):
-                pm = re.match(
-                    r"^\s*'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'\s*$",
-                    item,
-                )
-                if not pm:
-                    raise SqlDmlError(
-                        f"ALTER TABLE {table} SET TBLPROPERTIES: cannot "
-                        f"parse {item.strip()!r} (expected 'k' = 'v')"
-                    )
-                props[pm.group(1).replace("''", "'")] = pm.group(2).replace(
-                    "''", "'"
-                )
-            v = TX.tx_set_properties(spark, path, props)
-            reregister = False
-        if reregister:
-            parts = [_unquote(p) for p in table.split(".")]
-            db = (
-                parts[0]
-                if len(parts) == 2
-                else spark.catalog.currentDatabase()
-            )
-            register_txlog_table(spark, db, parts[-1], path)
-        return v
-    raise SqlDmlError(
-        f"ALTER TABLE {table}: unsupported action {action!r} (supported: "
+    refusal = SqlDmlError(
+        f"ALTER TABLE {table}: unsupported action in {stmt!r} (supported: "
         "ADD COLUMN, RENAME COLUMN, DROP COLUMN, ADD CONSTRAINT name "
-        "CHECK (expr), DROP CONSTRAINT, SET TBLPROPERTIES)"
+        "CHECK (expr), DROP CONSTRAINT, SET TBLPROPERTIES, ALTER COLUMN "
+        "TYPE | SET/DROP NOT NULL | SET/DROP DEFAULT)"
     )
 
+    def field(jfield) -> str:
+        parts = [str(p) for p in _seq(jfield.name())]
+        if len(parts) != 1:
+            raise refusal  # nested struct fields
+        return parts[0]
 
-def _show_properties(spark: SparkSession, table: str) -> DataFrame | None:
-    """``SHOW TBLPROPERTIES db.t`` served from the TXLOG property record
-    (the catalog's own store drops properties for Python data source
-    tables)."""
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        return None
-    from ..sources.txlog import tx_properties
-
-    props = tx_properties(spark, pinned[0])
-    return spark.createDataFrame(
-        sorted((str(k), str(v)) for k, v in props.items()),
-        "key string, value string",
-    )
+    kind = plan.nodeName()
+    reregister = kind in ("AddColumns", "RenameColumn", "DropColumns")
+    v = None
+    if kind == "AddColumns":
+        for c in _seq(plan.columnsToAdd()):
+            extras = (c.path(), c.comment(), c.position())
+            if any(o.isDefined() for o in extras):
+                raise refusal  # nested fields, COMMENT, FIRST / AFTER
+            v = TX.tx_add_column(
+                spark, path, c.colName(), c.dataType().catalogString(),
+                nullable=c.nullable(),
+            )
+            default = _opt(c.default())
+            if default is not None:
+                v = TX.tx_set_default(
+                    spark, path, c.colName(), default.originalSQL()
+                )
+    elif kind == "RenameColumn":
+        v = TX.tx_rename_column(
+            spark, path, field(plan.column()), plan.newName()
+        )
+    elif kind == "DropColumns" and not plan.ifExists():
+        for c in _seq(plan.columnsToDrop()):
+            v = TX.tx_drop_column(spark, path, field(c))
+    elif kind == "AddCheckConstraint":
+        # Spark refuses NOT ENFORCED on a CHECK; [NO]RELY is a planner hint
+        check = plan.checkConstraint()
+        v = TX.tx_add_constraint(spark, path, check.name(), check.condition())
+    elif kind == "DropConstraint":
+        v = TX.tx_drop_constraint(spark, path, plan.name())
+    elif kind == "SetTableProperties":
+        props, pairs = {}, plan.properties().iterator()
+        while pairs.hasNext():
+            kv = pairs.next()
+            props[kv._1()] = kv._2()
+        v = TX.tx_set_properties(spark, path, props)
+    elif kind == "AlterColumns":
+        for spec in _seq(plan.specs()):
+            if spec.newComment().isDefined() or spec.newPosition().isDefined():
+                raise refusal  # COMMENT, FIRST / AFTER
+            col = field(spec.column())
+            new_type = _opt(spec.newDataType())
+            nullable = _opt(spec.newNullability())
+            default = _opt(spec.newDefaultExpression())
+            if new_type is not None:
+                # Delta's type widening: metadata-only, lossless widenings
+                # only (tx_widen_column refuses narrowing/cross-family)
+                v = TX.tx_widen_column(
+                    spark, path, col, new_type.catalogString()
+                )
+                reregister = True
+            if nullable is False:
+                # Delta's NOT NULL is a validated invariant: full-table
+                # check then enforced on every write, exactly a named CHECK
+                v = TX.tx_add_constraint(
+                    spark, path, f"notnull_{col}", f"{col} IS NOT NULL"
+                )
+            elif nullable is True:
+                v = TX.tx_drop_constraint(spark, path, f"notnull_{col}")
+            if default is not None:
+                v = TX.tx_set_default(spark, path, col, default.originalSQL())
+            if spec.dropDefault():
+                v = TX.tx_drop_default(spark, path, col)
+    else:
+        raise refusal
+    if reregister:
+        parts = [_unquote(p) for p in table.split(".")]
+        db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
+        register_txlog_table(spark, db, parts[-1], path)
+    return v
 
 
 def _require_txlog(spark: SparkSession, table: str, what: str) -> str:
@@ -2237,7 +2147,7 @@ def _optimize(
             )
         partition_where = eq
     if zorder_cols:
-        cols = [_unquote(c) for c in _split_top(zorder_cols, r",")]
+        cols = [_unquote(c) for c in _split_top(zorder_cols, ",")]
         return TX.tx_compact(
             spark, path, cluster_by=cols, zorder=len(cols) >= 2,
             partition_where=partition_where,
@@ -2354,20 +2264,6 @@ def _detail(spark: SparkSession, table: str) -> DataFrame | None:
         "size_bytes long, num_rows long, partition_columns string, "
         "properties string",
     )
-
-
-def _truncate(spark: SparkSession, table: str):
-    """``TRUNCATE TABLE db.t``: one committed version with zero live
-    rows — a normal (undoable, time-travelable) delete commit, never a
-    log wipe. Routed as an all-rows delete so table properties,
-    constraints and identity state survive."""
-    pinned = txlog_table_path(spark, table)
-    if pinned is None:
-        return None
-    path, _ = _writable(table, pinned)
-    from ..sources.txlog import tx_delete
-
-    return tx_delete(spark, path, condition="true")
 
 
 def _restore(spark: SparkSession, table: str, kind: str, lit: str) -> int:

@@ -287,10 +287,6 @@ _SNAPSHOT_DIR = re.compile(r"v(\d+)_[0-9a-f]+")
 _CDF_DIR_PREFIX = "cdf_"
 
 
-def _native_serving_enabled() -> bool:
-    return os.environ.get("SPARK_GRAFT_SQL_NATIVE", "1") != "0"
-
-
 def _serving_root(path: str) -> str:
     key = hashlib.sha1(os.path.abspath(path).encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), "spark_graft_serving", key)
@@ -617,9 +613,9 @@ def register_txlog_table(
     by catalog name — Delta's SQL travel; :func:`sql` rewrites the
     literal syntax onto this).
 
-    ``read_optimized=True`` (opt-in; env ``SPARK_GRAFT_SQL_NATIVE=0``
-    forces it off) serves eligible snapshots through a NATIVE parquet
-    relation over a symlink manifest instead of the Python Data Source —
+    ``read_optimized=True`` (opt-in) serves eligible snapshots through a
+    NATIVE parquet relation over a symlink manifest instead of the Python
+    Data Source —
     see the block comment above ``_native_register`` for the freshness
     contract and the fallback rules. DML by name still routes to the
     transactional writers (TBLPROPERTIES carry the storage path); do NOT
@@ -650,20 +646,19 @@ def register_txlog_table(
     # fast path and keeps the relation cache warm.
     from ..sources.txlog import current_version, version_at_timestamp
 
-    native = read_optimized and _native_serving_enabled()
     desc = (
         "txlog",
         path.rstrip("/"),
         tuple(sorted(extra.items())),
         current_version(spark, path),
-        native,
+        read_optimized,
     )
     if _reg_fresh(spark, db, name, desc):
         return f"{db}.{name}"
     frozen = version is not None or timestamp is not None
     if not frozen:
-        _subscribe_serving(spark, db, name, path, wanted=native)
-    if native:
+        _subscribe_serving(spark, db, name, path, wanted=read_optimized)
+    if read_optimized:
         pin = version
         if pin is None and timestamp is not None:
             pin = version_at_timestamp(spark, path, timestamp)
@@ -707,8 +702,8 @@ def register_txlog_changes_table(
     A bounded file-level range (``ending_version`` given, not
     ``row_keyed``) whose files are all eligible serves instead as a
     NATIVE parquet table over a change-feed symlink manifest (see the
-    read-optimized block comment above; ``SPARK_GRAFT_SQL_NATIVE=0``
-    turns it off). Re-registering the same range is a cache hit."""
+    read-optimized block comment above). Re-registering the same range
+    is a cache hit."""
     from ..streaming.source import pinned_txlog_source
 
     extra = {
@@ -720,7 +715,7 @@ def register_txlog_changes_table(
     if row_keyed:
         extra["rowkeyed"] = "true"
     bounded = ending_version is not None and not row_keyed
-    if bounded and _native_serving_enabled():
+    if bounded:
         fq = _native_changes_register(spark, db, name, path, extra)
         if fq is not None:
             return fq

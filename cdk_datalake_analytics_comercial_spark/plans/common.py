@@ -21,31 +21,47 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     closures BY MODULE REFERENCE, so a worker must be able to import
     ``cdk_datalake_analytics_comercial_spark``. That import works for free when the driver's
     cwd is the repo (workers inherit it on local mode) but breaks for a
-    harness that imports ``__spark_entry__`` from elsewhere. Zipping the
-    package once per session and ``addPyFile``-ing it makes the contract
+    harness that imports ``__spark_entry__`` from elsewhere. Shipping the
+    package zip (:func:`package_zip`) once per session makes the contract
     location-independent; repeated calls are no-ops."""
     sc = spark.sparkContext
     if getattr(sc, "_spark_graft_pkg_shipped", False):
         return
+    sc.addPyFile(package_zip())
+    sc._spark_graft_pkg_shipped = True
+
+
+def package_zip() -> str:
+    """A zip of the package's ``.py`` files, built once per content under
+    ``<tempdir>/cdk_datalake_analytics_comercial_spark_pkg_<key>`` (the
+    key hashes each file's relative path, size and ``mtime_ns``), so
+    sessions over an unchanged checkout share one zip."""
     import cdk_datalake_analytics_comercial_spark as pkg
 
     pkg_dir = os.path.dirname(os.path.abspath(pkg.__file__))
-    fd, zpath = tempfile.mkstemp(
-        prefix="cdk_datalake_analytics_comercial_spark_pkg_", suffix=".zip"
+    name = os.path.basename(pkg_dir)
+    files = sorted(
+        os.path.relpath(os.path.join(root, f), pkg_dir)
+        for root, _dirs, names in os.walk(pkg_dir)
+        for f in names
+        if f.endswith(".py")
     )
-    os.close(fd)
-    with zipfile.ZipFile(zpath, "w", zipfile.ZIP_STORED) as zf:
-        for root, _dirs, files in os.walk(pkg_dir):
-            for f in files:
-                if not f.endswith(".py"):
-                    continue
-                full = os.path.join(root, f)
-                rel = os.path.join(
-                    os.path.basename(pkg_dir), os.path.relpath(full, pkg_dir)
-                )
-                zf.write(full, rel)
-    sc.addPyFile(zpath)
-    sc._spark_graft_pkg_shipped = True
+    key = hashlib.sha1()
+    for rel in files:
+        st = os.stat(os.path.join(pkg_dir, rel))
+        key.update(f"{rel}:{st.st_size}:{st.st_mtime_ns}|".encode())
+
+    def build(tmp: str) -> None:
+        with zipfile.ZipFile(
+            os.path.join(tmp, f"{name}.zip"), "w", zipfile.ZIP_STORED
+        ) as zf:
+            for rel in files:
+                zf.write(os.path.join(pkg_dir, rel), os.path.join(name, rel))
+
+    final = os.path.join(
+        tempfile.gettempdir(), f"{name}_pkg_{key.hexdigest()[:16]}"
+    )
+    return os.path.join(publish_once(final, build), f"{name}.zip")
 
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -58,6 +58,7 @@ import re
 import time
 import uuid
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1215,7 +1216,7 @@ def tx_widen_column(
     nt = re.sub(r"\s+", "", nt)
     try:
         StructType.fromDDL(f"x {new_type}")
-    except Exception:
+    except ParseException:
         raise ValueError(
             f"widen_column: cannot parse type {new_type!r}"
         )
@@ -4847,6 +4848,25 @@ def _enforce_checks(df: DataFrame, checks: dict[str, str]) -> None:
             "CHECK constraint(s) violated, nothing committed: "
             + ", ".join(f"{n} ({c} rows)" for n, c in sorted(bad.items()))
         )
+
+
+def _merge_range(where: dict, col: str, lo, hi) -> bool:
+    """Intersect ``[lo, hi]`` (either end may be None) into
+    ``where[col]``. Returns False when the bounds are type-incomparable
+    with the existing ones (mixed-type conjuncts): the first bound is
+    kept as an over-keeping hint, and a caller that needs an exact spec
+    must then demote the clause to row-level-only."""
+    cur = where.setdefault(col, (None, None))
+    new_lo, new_hi = cur
+    try:
+        if lo is not None and (new_lo is None or lo > new_lo):
+            new_lo = lo
+        if hi is not None and (new_hi is None or hi < new_hi):
+            new_hi = hi
+    except TypeError:
+        return False  # mixed types across conjuncts: keep the first bound
+    where[col] = (new_lo, new_hi)
+    return True
 
 
 def _file_can_match(

@@ -510,22 +510,12 @@ class TxLogBatchReader(DataSourceReader):
             StringStartsWith,
         )
 
-        ranges: dict[str, list] = {}
+        ranges: dict[str, tuple] = {}
         # Rebuild BOTH pruning states from scratch: if Spark re-invokes
         # pushFilters with a different predicate set, stale equality
         # probes from the previous call must not Bloom-prune files the
         # new predicates still need.
         self._equals = {}
-
-        def bound(col, lo=None, hi=None):
-            cur = ranges.setdefault(col, [None, None])
-            try:
-                if lo is not None and (cur[0] is None or lo > cur[0]):
-                    cur[0] = lo
-                if hi is not None and (cur[1] is None or hi < cur[1]):
-                    cur[1] = hi
-            except TypeError:
-                pass  # mixed bound types across filters: keep the first
 
         for f in filters:
             attr = getattr(f, "attribute", None)
@@ -534,25 +524,27 @@ class TxLogBatchReader(DataSourceReader):
             col = attr[0]
             if isinstance(f, (EqualTo, EqualNullSafe)):
                 if f.value is not None:
-                    bound(col, f.value, f.value)
+                    TX._merge_range(ranges, col, f.value, f.value)
                     self._equals.setdefault(col, f.value)
             elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
                 # strict > treated as >= : sound (over-keeps, never drops)
-                bound(col, lo=f.value)
+                TX._merge_range(ranges, col, f.value, None)
             elif isinstance(f, (LessThan, LessThanOrEqual)):
-                bound(col, hi=f.value)
+                TX._merge_range(ranges, col, None, f.value)
             elif isinstance(f, In):
                 vals = [v for v in f.value if v is not None]
                 if vals:
                     try:
-                        bound(col, min(vals), max(vals))
+                        TX._merge_range(ranges, col, min(vals), max(vals))
                     except TypeError:
                         pass
             elif isinstance(f, IsNotNull):
-                bound(col)  # all-null files (stats min=max=null) prune
+                # all-null files (stats min=max=null) prune
+                TX._merge_range(ranges, col, None, None)
             elif isinstance(f, StringStartsWith):
-                bound(col, lo=f.value)  # prefix is a sound lower bound
-        self._ranges = {k: (v[0], v[1]) for k, v in ranges.items()}
+                # the prefix is a sound lower bound
+                TX._merge_range(ranges, col, f.value, None)
+        self._ranges = ranges
         return filters
 
     def partitions(self) -> Sequence[InputPartition]:

@@ -1,5 +1,6 @@
-"""Build-once publication (`core/publish.publish_once`) and the corpus
-fingerprint every query fixture is keyed by (`plans/common`)."""
+"""Build-once publication (`core/publish.publish_once`), the corpus
+fingerprint every query fixture is keyed by, and the worker package zip
+(`plans/common`)."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 import sys
 import tempfile
 import threading
+import zipfile
 
 import pytest
 
@@ -15,6 +17,7 @@ from cdk_datalake_analytics_comercial_spark.core.publish import publish_once
 from cdk_datalake_analytics_comercial_spark.plans.common import (
     corpus_fixture,
     corpus_fixture_path,
+    package_zip,
 )
 
 
@@ -129,3 +132,17 @@ def test_racing_builds_share_one_published_dir(scratch):
     assert results == [final] * n
     assert os.listdir(scratch) == [os.path.basename(final)]
     assert os.listdir(final) == ["data"]
+
+
+def test_package_zip_built_once_per_content(scratch):
+    """Sessions over an unchanged checkout share one package zip: two
+    builds leave exactly one content-keyed dir and no loose zip."""
+    first, second = package_zip(), package_zip()
+    assert first == second
+    entries = sorted(os.listdir(scratch))
+    assert entries == [os.path.basename(os.path.dirname(first))]
+    assert entries[0].startswith("cdk_datalake_analytics_comercial_spark_pkg_")
+    with zipfile.ZipFile(first) as zf:
+        names = zf.namelist()
+    assert "cdk_datalake_analytics_comercial_spark/plans/common.py" in names
+    assert all(n.endswith(".py") for n in names)

@@ -42,7 +42,7 @@ def _table(spark, tmp_path, name="t", **kw):
 # ---------------------------------------------------------------- predicate
 
 
-def test_parse_predicate_sargable_shapes():
+def test_parse_predicate_sargable_shapes(spark):
     w, eq, cond = parse_predicate("id = 7")
     assert (w, eq, cond) == ({"id": (7, 7)}, {"id": 7}, None)
     w, eq, cond = parse_predicate("id >= 3 AND id <= 9")
@@ -60,7 +60,7 @@ def test_parse_predicate_sargable_shapes():
     assert w == {"id": (2, 8)} and cond is not None
 
 
-def test_parse_predicate_residuals_never_lost():
+def test_parse_predicate_residuals_never_lost(spark):
     # strict bounds prune inclusively but must re-apply row-level
     w, eq, cond = parse_predicate("id > 3")
     assert w == {"id": (3, None)} and cond == "id > 3"
@@ -120,10 +120,18 @@ TRICKY_PREDICATES = [
     # the conjunct must ride row-level, never as a mismatched probe
     r"v = 'a\\b' AND id >= 0",
     r"v <> 'v1\\' OR id = 2",
+    # --- hints read off the parse tree: a literal on the left, negated
+    # BETWEEN / IN, AND inside CASE, DATE and TIMESTAMP literals
+    "3 = id",
+    "id NOT BETWEEN 3 AND 9",
+    "NOT id IN (1, 2)",
+    "id = 7 AND CASE WHEN g = 1 AND v = 'v1' THEN 1 ELSE 0 END = 1",
+    "date_from_unix_date(id) <= DATE '1970-01-04' AND g >= 1",
+    "timestamp_seconds(id) >= TIMESTAMP '1970-01-01 00:00:05' AND id < 9",
 ]
 
 
-def test_parse_predicate_or_suppresses_all_hints():
+def test_parse_predicate_or_suppresses_all_hints(spark):
     """Top-level OR means NO conjunct is unconditional: zero hints, the
     whole clause rides row-level (file pruning degrades to scan-all)."""
     for pred in (
@@ -137,7 +145,7 @@ def test_parse_predicate_or_suppresses_all_hints():
     assert eq == {"g": 1} and cond is not None
 
 
-def test_parse_predicate_mixed_type_conflict_demotes():
+def test_parse_predicate_mixed_type_conflict_demotes(spark):
     """`a = 1 AND a = 'x'` (mixed types): the range bounds cannot merge,
     so the clause MUST stay row-level — under ANSI SQL the original
     predicate errs (or matches nothing, non-ANSI); silently routing it
@@ -1483,29 +1491,6 @@ def test_sql_merge_case_expressions_in_clauses(spark, tmp_path):
     assert got[4] == "big"    # inserted via CASE value (x=4)
 
 
-def test_split_top_case_awareness():
-    from cdk_datalake_analytics_comercial_spark.core.sql_dml import _split_top
-
-    # AND inside CASE is not a conjunct boundary
-    parts = _split_top(
-        "a = 1 AND CASE WHEN b AND c THEN 1 ELSE 2 END = 1", r"AND\b"
-    )
-    assert len(parts) == 2, parts
-    # WHEN inside CASE is not a clause boundary
-    parts = _split_top(
-        "MATCHED AND CASE WHEN x THEN 1 END = 1 THEN DELETE", r"WHEN\b"
-    )
-    assert len(parts) == 1, parts
-    # THEN inside CASE is not the clause's THEN
-    parts = _split_top(
-        "MATCHED AND CASE WHEN x THEN 1 END = 1 THEN DELETE", r"THEN\b"
-    )
-    assert len(parts) == 2 and parts[1].strip() == "DELETE", parts
-
-
-# --------------------------------- CONVERT / empty CREATE / RESTORE ts
-
-
 def test_sql_convert_to_txlog_in_place(spark, tmp_path):
     """CONVERT TO TXLOG parquet.`/path` (Delta's CONVERT TO DELTA):
     metadata-only, in-place — v1 references the existing files where
@@ -2290,15 +2275,17 @@ def test_subquery_residual_with_select_literal_routable(spark, tmp_path):
     assert rows(spark.sql("SELECT id FROM dmldb.selres")) == [(2,), (3,)]
 
 
-def test_invalid_date_literal_degrades_not_crashes():
+def test_invalid_date_literal_degrades_not_crashes(spark):
+    from pyspark.errors import ParseException
+
     from cdk_datalake_analytics_comercial_spark.core.sql_dml import (
         _parse_literal,
         parse_predicate,
     )
 
     assert _parse_literal("DATE '2023-02-30'") is None
-    w, eq, cond = parse_predicate("d = DATE '2023-02-30'")
-    assert cond is not None  # rides row-level; Spark reports the error
+    with pytest.raises(ParseException, match="INVALID_TYPED_LITERAL"):
+        parse_predicate("d = DATE '2023-02-30'")
 
 
 def test_exists_db_qualified_outer_ref_refused(spark, tmp_path):
@@ -2407,3 +2394,85 @@ def test_sql_script_comment_markers_inside_literals(spark, tmp_path):
     assert got[1] == "a\n-- b"
     assert got[3] == "/* c */"
     assert 2 not in got and got[4] == "v4"
+
+
+# ------------------------------------ typed literals and DDL by plan class
+
+
+def test_timestamp_literal_dml_independent_of_process_tz(
+    spark, tmp_path, monkeypatch
+):
+    """A TIMESTAMP literal means the instant the session time zone (UTC
+    here) gives it, whatever the Python process's own zone is: the
+    pruning hint and the structured row probe of DELETE / UPDATE, and
+    the literal IN-list the subquery tier renders from collected keys,
+    all select the row Spark's own WHERE selects — with the process in
+    America/Lima (UTC-5)."""
+    import time
+
+    p = str(tmp_path / "lima")
+    for ts in ("2024-02-01 10:30", "2024-02-01 12:00", "2024-03-01 08:00"):
+        TX.tx_write(
+            spark,
+            spark.sql(f"SELECT 1 AS n, TIMESTAMP '{ts}' AS ts, 'a' AS v"),
+            p,
+            mode="append",
+            stats_for=["ts"],
+        )
+    register_txlog_table(spark, "dmldb", "lima", p)
+    spark.sql(
+        "SELECT TIMESTAMP '2024-03-01 08:00:00' AS k"
+    ).createOrReplaceTempView("lima_keys")
+
+    def left():
+        got = spark.sql("SELECT ts, v FROM dmldb.lima").collect()
+        return sorted((str(r.ts), r.v) for r in got)
+
+    monkeypatch.setenv("TZ", "America/Lima")
+    time.tzset()
+    try:
+        sql_dml(
+            spark,
+            "DELETE FROM dmldb.lima "
+            "WHERE ts = TIMESTAMP '2024-02-01 10:30:00'",
+        )
+        sql_dml(
+            spark,
+            "UPDATE dmldb.lima SET v = 'b' "
+            "WHERE ts >= TIMESTAMP '2024-02-01 12:00:00' "
+            "AND ts < TIMESTAMP '2024-02-01 12:00:01'",
+        )
+        sql_dml(
+            spark,
+            "DELETE FROM dmldb.lima WHERE ts IN (SELECT k FROM lima_keys)",
+        )
+        got = spark.sql(
+            "SELECT count(*) AS n, max(v) AS v FROM dmldb.lima"
+        ).collect()[0]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert (got.n, got.v) == (1, "b"), left()
+
+
+def test_alter_truncate_on_plain_parquet_table_go_to_spark(spark, tmp_path):
+    """ALTER / TRUNCATE / SHOW TBLPROPERTIES on a plain parquet catalog
+    table are Spark's own DDL, not the txlog writers'."""
+    from cdk_datalake_analytics_comercial_spark.core.sql_dml import (
+        txlog_table_path,
+    )
+
+    spark.sql("CREATE DATABASE IF NOT EXISTS dmldb")
+    spark.sql("CREATE TABLE dmldb.plainp (id BIGINT, v STRING) USING parquet")
+    spark.sql("INSERT INTO dmldb.plainp VALUES (1, 'a'), (2, 'b')")
+    assert txlog_table_path(spark, "dmldb.plainp") is None
+    sql_dml(spark, "ALTER TABLE dmldb.plainp ADD COLUMNS (z STRING)")
+    sql_dml(spark, "ALTER TABLE dmldb.plainp SET TBLPROPERTIES ('k' = 'v')")
+    assert spark.table("dmldb.plainp").columns == ["id", "v", "z"]
+    props = {
+        r.key: r.value
+        for r in sql_dml(spark, "SHOW TBLPROPERTIES dmldb.plainp").collect()
+    }
+    assert props["k"] == "v"
+    sql_dml(spark, "TRUNCATE TABLE dmldb.plainp")
+    assert spark.table("dmldb.plainp").count() == 0

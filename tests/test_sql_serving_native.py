@@ -46,17 +46,6 @@ def test_native_registration_serves_snapshot(spark, table):
     assert _provider(spark, fq) == "parquet"
     got = {tuple(r) for r in spark.sql(f"SELECT id, v FROM {fq}").collect()}
     assert got == {(1, "a"), (2, "b"), (3, "c")}
-    # env kill-switch forces the Python source
-    import os
-
-    os.environ["SPARK_GRAFT_SQL_NATIVE"] = "0"
-    try:
-        fq2 = register_txlog_table(
-            spark, "natdb", "t1_off", table, read_optimized=True
-        )
-        assert _provider(spark, fq2).startswith("txlog")
-    finally:
-        del os.environ["SPARK_GRAFT_SQL_NATIVE"]
 
 
 def test_commit_refreshes_native_table(spark, table):
@@ -362,8 +351,6 @@ def test_native_change_feed_equals_python_unpartitioned(spark, tmp_path):
 
 
 def test_ineligible_change_ranges_stay_on_python_source(spark, tmp_path):
-    import os
-
     from cdk_datalake_analytics_comercial_spark.core.sql_serving import (
         register_txlog_changes_table as reg,
     )
@@ -399,11 +386,6 @@ def test_ineligible_change_ranges_stay_on_python_source(spark, tmp_path):
         reg(spark, "cfinel", "rk", p, app, row_keyed=True, ending_version=app)
     )
     python_scan(reg(spark, "cfinel", "open", p, app))
-    os.environ["SPARK_GRAFT_SQL_NATIVE"] = "0"
-    try:
-        python_scan(reg(spark, "cfinel", "off", p, app, ending_version=app))
-    finally:
-        del os.environ["SPARK_GRAFT_SQL_NATIVE"]
     # the same name flips to native once the range is eligible
     fq = reg(spark, "cfinel", "dv", p, app, ending_version=app)
     assert _provider(spark, fq) == "parquet"
