@@ -121,11 +121,12 @@ drive FILE PRUNING (range stats + Bloom bitsets — a point DELETE on a
 bloom-indexed 100 TB table rewrites only the files that can contain the
 key), and the FULL predicate text rides along as the row-level
 ``condition``. Literal values come from the parser's ``Literal`` nodes,
-so a hint holds exactly the value Spark's own WHERE compares with — a
-TIMESTAMP is the instant the session time zone gives it, whatever the
-Python process's zone. Non-sargable predicates still execute correctly
-— they just scan every live file, exactly Delta's behavior for an
-unselective DELETE.
+so a hint holds the value Spark's own WHERE compares with: a TIMESTAMP
+is the instant the session time zone gives it, and a DATE bound on a
+timestamp column is its UTC midnight (the session zone ``core/session``
+pins), whatever the Python process's zone. Non-sargable predicates
+still execute correctly — they just scan every live file, exactly
+Delta's behavior for an unselective DELETE.
 
 Concurrency: every dispatched statement inherits the writer's
 optimistic CAS — a racing ``tx_write`` overlapping the predicate raises
@@ -784,7 +785,9 @@ def _parse_statement(spark: SparkSession, stmt: str):
         return spark._jsparkSession.sessionState().sqlParser().parsePlan(stmt)
     except ParseException as e:
         if e.getCondition() == "UNSUPPORTED_FEATURE.SET_TABLE_PROPERTY":
-            return _set_reserved_properties(spark, stmt)
+            plan = _set_reserved_properties(spark, stmt)
+            if plan is not None:
+                return plan
         if re.match(r"\s*INSERT\b.*\bREPLACE\s+WHERE\b", stmt, re.I | re.S):
             raise SqlDmlError(
                 "INSERT: REPLACE WHERE takes the plain `INSERT INTO t "
@@ -801,12 +804,26 @@ def _set_reserved_properties(spark: SparkSession, stmt: str):
     after reading the pairs, but in a txlog table's record these are
     plain properties. The plan is rebuilt from Spark's own parse tree —
     its lexer, grammar and ``visitPropertyKeyValues`` — without the
-    reserved-key check; on any other table ``spark.sql`` refuses it."""
+    reserved-key check; on any other table ``spark.sql`` refuses it.
+    None for every other statement Spark refuses this way (``CREATE
+    TABLE … TBLPROPERTIES ('owner' …)``, ``ALTER VIEW``): its caller
+    re-raises Spark's own error."""
     C, A = spark._jvm.org.apache.spark.sql.catalyst, spark._jvm.org.antlr.v4
     chars = A.runtime.CharStreams.fromString(stmt)
     lexer = C.parser.SqlBaseLexer(C.parser.UpperCaseCharStream(chars))
     tokens = A.runtime.CommonTokenStream(lexer)
-    tree = C.parser.SqlBaseParser(tokens).singleStatement().statement()
+    parser = C.parser.SqlBaseParser(tokens)
+    # the session's parser flags (double-quoted identifiers, ANSI
+    # keywords) and error listeners, as Spark's own parsePlan sets them
+    C.parser.AbstractParser.configureParser(
+        parser, stmt, tokens, spark._jsparkSession.sessionState().conf()
+    )
+    tree = parser.singleStatement().statement()
+    if (
+        tree.getClass().getSimpleName() != "SetTablePropertiesContext"
+        or tree.VIEW() is not None
+    ):
+        return None
     build = spark._jsparkSession.sessionState().sqlParser().astBuilder()
     table = C.analysis.UnresolvedTable(
         build.visitMultipartIdentifier(
@@ -2134,6 +2151,10 @@ def _optimize(
     from ..sources import txlog as TX
 
     path = _require_txlog(spark, table, "OPTIMIZE")
+    cur = TX.current_version(spark, path)
+    if cur is None:
+        raise SqlDmlError(f"{table}: no committed txlog version at {path}")
+    manifest = TX.read_manifest(spark, path, cur)
     partition_where = None
     if where:
         w, eq, cond = parse_predicate(where)
@@ -2145,7 +2166,7 @@ def _optimize(
                 f"OPTIMIZE {table} WHERE: only equality predicates on "
                 f"partition columns are supported (got {where.strip()!r})"
             )
-        partition_where = eq
+        partition_where = _partition_values(spark, manifest, eq)
     if zorder_cols:
         cols = [_unquote(c) for c in _split_top(zorder_cols, ",")]
         return TX.tx_compact(
@@ -2155,10 +2176,6 @@ def _optimize(
     # size-targeted bin count (Delta's binPacking): the under-threshold
     # bytes decide how many right-sized outputs the rewrite packs into
     thr = 128 << 20
-    cur = TX.current_version(spark, path)
-    if cur is None:
-        raise SqlDmlError(f"{table}: no committed txlog version at {path}")
-    manifest = TX.read_manifest(spark, path, cur)
     scope = manifest["files"]
     if partition_where:
         pcols = TX.table_partition_columns(manifest)
@@ -2184,6 +2201,37 @@ def _optimize(
         spark, path, small_bytes=thr, n_files=n_files,
         partition_where=partition_where,
     )
+
+
+def _partition_values(spark: SparkSession, manifest: dict, eq: dict) -> dict:
+    """The equality probes of ``OPTIMIZE … WHERE`` as the values Spark
+    writes into the partition path (matched through ``_hive_enc``): a
+    literal against a double column is a float (``1`` → ``1.0``, the
+    DECIMAL ``0.10`` → ``0.1``), and a timestamp is its wall-clock time
+    in the session zone."""
+    import datetime as _dt
+    import decimal
+    import json
+
+    types = {
+        f["name"]: f["type"] for f in json.loads(manifest["schema"])["fields"]
+    }
+    out = {}
+    for col, v in eq.items():
+        t = types.get(col)
+        if t in ("double", "float") and isinstance(v, (int, decimal.Decimal)):
+            v = float(v)
+        elif t == "timestamp" and isinstance(v, _dt.datetime) and v.tzinfo:
+            jvm = spark._jvm
+            zone = jvm.org.apache.spark.sql.catalyst.util.DateTimeUtils.getZoneId(
+                spark.conf.get("spark.sql.session.timeZone")
+            )
+            offset = zone.getRules().getOffset(
+                jvm.java.time.Instant.ofEpochSecond(int(v.timestamp()))
+            ).getTotalSeconds()
+            v = (v + _dt.timedelta(seconds=offset)).replace(tzinfo=None)
+        out[col] = v
+    return out
 
 
 def _vacuum(

@@ -2305,7 +2305,11 @@ def _coerce_bound(tag: str, v):
         if isinstance(v, _dt.datetime):
             return _ts_micros(v)
         if isinstance(v, _dt.date):
-            return _ts_micros(_dt.datetime.combine(v, _dt.time.min))
+            # a date means its midnight in the session zone (UTC, pinned
+            # by core/session), not in the Python process's own zone
+            return _ts_micros(
+                _dt.datetime.combine(v, _dt.time.min, _dt.timezone.utc)
+            )
     elif tag == "date":
         if isinstance(v, _dt.datetime):
             return v.date().toordinal()
@@ -2907,6 +2911,17 @@ def _typed_partition_value(raw: str, type_json):
     return None
 
 
+def _partition_bound(val, bound):
+    """``bound`` in the terms of the decoded partition value ``val``: a
+    decimal bound (SQL reads ``0.1`` as DECIMAL) against a float/double
+    partition compares as the double Spark casts it to — an exact
+    Decimal compare would find ``0.1 > Decimal('0.1')`` and prune the
+    partition that matches."""
+    if isinstance(val, float) and isinstance(bound, _decimal.Decimal):
+        return float(bound)
+    return bound
+
+
 def _partition_rejects(
     f: dict, where: dict | None, where_equals: dict | None,
     part_types: dict | None,
@@ -2933,6 +2948,7 @@ def _partition_rejects(
             continue
         if val is None:
             continue
+        lo, hi = _partition_bound(val, lo), _partition_bound(val, hi)
         try:
             if lo is not None and val < lo:
                 return True
@@ -2953,6 +2969,7 @@ def _partition_rejects(
             continue
         if val is None:
             continue
+        want = _partition_bound(val, want)
         # a probe whose Python TYPE differs from the decoded value
         # (string literal against a date/double column — SQL would cast
         # and match) must KEEP the file: `!=` never raises across types,

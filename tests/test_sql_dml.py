@@ -2476,3 +2476,119 @@ def test_alter_truncate_on_plain_parquet_table_go_to_spark(spark, tmp_path):
     assert props["k"] == "v"
     sql_dml(spark, "TRUNCATE TABLE dmldb.plainp")
     assert spark.table("dmldb.plainp").count() == 0
+
+
+def test_date_literal_on_timestamp_column_independent_of_process_tz(
+    spark, tmp_path, monkeypatch
+):
+    """A DATE bound on a TIMESTAMP column is the date's midnight in the
+    session zone (UTC), as Spark casts it — not in the Python process's
+    zone: under America/Lima a 02:00 UTC row on the bound's day is
+    still deleted by ``ts >= DATE …``, whose pruning hint alone decides
+    (``>=`` leaves no row-level re-check)."""
+    import time
+
+    p = str(tmp_path / "limad")
+    for ts in ("2024-02-29 23:00", "2024-03-01 02:00"):
+        TX.tx_write(
+            spark,
+            spark.sql(f"SELECT TIMESTAMP '{ts}' AS ts"),
+            p,
+            mode="append",
+            stats_for=["ts"],
+        )
+    register_txlog_table(spark, "dmldb", "limad", p)
+    monkeypatch.setenv("TZ", "America/Lima")
+    time.tzset()
+    try:
+        sql_dml(spark, "DELETE FROM dmldb.limad WHERE ts >= DATE '2024-03-01'")
+        got = [str(r.ts) for r in spark.sql("SELECT ts FROM dmldb.limad").collect()]
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert len(got) == 1 and got[0].startswith("2024-02-29"), got
+
+
+def test_decimal_literal_on_double_partition(spark, tmp_path):
+    """SQL reads ``0.1`` as a DECIMAL literal; against a DOUBLE partition
+    column it compares as the double Spark casts it to, so DELETE /
+    UPDATE hints keep the ``p=0.1`` partition and OPTIMIZE WHERE finds
+    it."""
+    p = str(tmp_path / "dblp")
+    for i in range(2):
+        TX.tx_write(
+            spark,
+            spark.createDataFrame(
+                [(j, f"v{j}", 0.1 * (j % 3 + 1)) for j in range(6)],
+                "id long, v string, p double",
+            ),
+            p,
+            mode="append" if i else "overwrite",
+            partition_by=["p"],
+        )
+    register_txlog_table(spark, "dmldb", "dblp", p)
+
+    def n(where):
+        return spark.sql(
+            f"SELECT count(*) AS n FROM dmldb.dblp WHERE {where}"
+        ).collect()[0].n
+
+    assert n("p = 0.1") == 4
+    sql_dml(spark, "UPDATE dmldb.dblp SET v = 'u' WHERE p <= 0.1")
+    assert n("v = 'u'") == 4
+    before = {
+        f["path"]
+        for f in TX.read_manifest(spark, p, TX.current_version(spark, p))["files"]
+    }
+    sql_dml(spark, "OPTIMIZE dmldb.dblp WHERE p = 0.1")
+    scoped = [
+        f
+        for f in TX.read_manifest(spark, p, TX.current_version(spark, p))["files"]
+        if f["path"] not in before
+    ]
+    assert scoped and {f["partition"]["p"] for f in scoped} == {"0.1"}
+    sql_dml(spark, "DELETE FROM dmldb.dblp WHERE p BETWEEN 0.0 AND 0.1")
+    assert n("p = 0.1") == 0 and n("true") == 8
+    sql_dml(spark, "DELETE FROM dmldb.dblp WHERE p = 0.2")
+    assert n("true") == 4
+
+
+def test_optimize_where_timestamp_partition(spark, tmp_path):
+    """OPTIMIZE WHERE on a TIMESTAMP partition column matches the
+    partition Spark wrote: the probe is the literal's wall-clock time in
+    the session zone."""
+    p = str(tmp_path / "tsp")
+    for i in range(2):
+        TX.tx_write(
+            spark,
+            spark.sql(
+                "SELECT id, TIMESTAMP '2024-02-01 10:30:00' + "
+                "make_interval(0, 0, 0, 0, CAST(id % 2 AS INT)) AS ts "
+                "FROM range(4)"
+            ),
+            p,
+            mode="append" if i else "overwrite",
+            partition_by=["ts"],
+        )
+    register_txlog_table(spark, "dmldb", "tsp", p)
+    m0 = TX.read_manifest(spark, p, TX.current_version(spark, p))
+    sql_dml(spark, "OPTIMIZE dmldb.tsp WHERE ts = TIMESTAMP '2024-02-01 10:30:00'")
+    m1 = TX.read_manifest(spark, p, TX.current_version(spark, p))
+    old = {f["path"] for f in m0["files"]}
+    new = [f for f in m1["files"] if f["path"] not in old]
+    assert len(new) == 1 and "10%3A30" in new[0]["partition"]["ts"]
+    assert TX.tx_read(spark, p).count() == 8
+
+
+def test_reserved_property_fallback_only_for_alter_set(spark):
+    """The reserved-key route rebuilds only ``ALTER TABLE … SET
+    TBLPROPERTIES``: any other statement Spark refuses for a reserved
+    property keeps Spark's own ParseException."""
+    from pyspark.errors import ParseException
+
+    with pytest.raises(ParseException, match="SET_TABLE_PROPERTY"):
+        sql_dml(
+            spark,
+            "CREATE TABLE dmldb.own (id BIGINT) USING parquet "
+            "TBLPROPERTIES ('owner' = 'x')",
+        )
