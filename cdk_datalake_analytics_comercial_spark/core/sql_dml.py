@@ -19,7 +19,9 @@ class of the unresolved plan — ``DeleteFromTable``, ``UpdateTable``,
 WHERE``) and ``InsertIntoStatement``; ``TruncateTable``,
 ``ShowTableProperties`` and the ALTER TABLE plans (``AddColumns``,
 ``RenameColumn``, ``DropColumns``, ``AddCheckConstraint``,
-``DropConstraint``, ``SetTableProperties``, ``AlterColumns``). Quotes,
+``DropConstraint``, ``SetTableProperties``, ``AlterColumns``);
+``CreateTable``, ``CreateTableAsSelect``, ``ReplaceTable`` and
+``ReplaceTableAsSelect`` whose provider is ``txlog``. Quotes,
 comments, CASE and nested parentheses are therefore the parser's
 business, never this module's.
 Source queries, subqueries and INSERT queries run as DataFrames over
@@ -30,8 +32,8 @@ the operator token as the start of a predicate node (``id BETWEEN 3
 AND 9`` starts at ``BETWEEN``) and the inner expression, not its
 parentheses, as the origin of a parenthesized operand. Column
 references are rewritten at the spans of their ``UnresolvedAttribute``
-nodes. Verbs Spark does not parse (``CONVERT TO TXLOG``, ``COPY
-INTO``, ``… USING txlog`` DDL, ``OPTIMIZE``, ``VACUUM``, ``DESCRIBE
+nodes. Verbs Spark does not parse (``SHALLOW CLONE``, ``CONVERT TO
+TXLOG``, ``COPY INTO``, ``OPTIMIZE``, ``VACUUM``, ``DESCRIBE
 HISTORY|DETAIL``, ``RESTORE``) keep their statement-head regexes, and so
 does time travel: Spark refuses ``VERSION AS OF`` on a MERGE source
 with an alias, which the rewrite onto frozen twins serves.
@@ -92,16 +94,15 @@ Supported statements (``db.table`` names registered by
   record. Spark's ADD COLUMN grammar has no GENERATED / IDENTITY /
   CHECK column options (a ``ParseException``): ``tx_add_generated_column``,
   ``tx_add_identity`` and ``ADD CONSTRAINT`` add those.
-- ``CREATE [OR REPLACE] TABLE db.t USING txlog [LOCATION '…']
-  [PARTITIONED BY (…)] AS <query>`` — CTAS, external or managed; and
-  the empty-table DDL form ``CREATE TABLE db.t (col TYPE, …) USING
-  txlog [LOCATION '…'] [PARTITIONED BY (…)]`` (version 1 commits the
-  schema with zero rows) — column items accept the full Delta DDL
-  surface: ``NOT NULL``, ``DEFAULT <expr>``, ``GENERATED {ALWAYS|BY
-  DEFAULT} AS IDENTITY [(START WITH n [INCREMENT BY s])]``,
-  ``GENERATED ALWAYS AS (expr)`` and table-level ``CONSTRAINT name
-  CHECK (expr)``, each applied as a metadata commit so the invariants
-  hold from the first INSERT.
+- ``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] db.t USING txlog
+  [LOCATION '…'] [PARTITIONED BY (…)] AS <query>`` — CTAS, external or
+  managed; and the empty-table DDL form ``CREATE TABLE db.t (col TYPE,
+  …) USING txlog …`` (version 1 commits the schema with zero rows) —
+  column definitions take Spark's DDL surface (``NOT NULL``, ``DEFAULT``,
+  ``COMMENT``, ``GENERATED … AS IDENTITY``, ``GENERATED ALWAYS AS
+  (expr)``, ``CHECK``), each option analyzed before version 1 and then
+  applied as a metadata commit so the invariants hold from the first
+  INSERT.
 - ``CONVERT TO TXLOG parquet.`/path`` [PARTITIONED BY (cols)]`` —
   Delta's CONVERT TO DELTA: in-place, metadata-only conversion of an
   existing parquet directory (files referenced where they sit, rows
@@ -451,23 +452,6 @@ _CLONE = re.compile(
     r"(?:\s+LOCATION\s+'((?:[^']|'')*)')?\s*$",
     re.IGNORECASE,
 )
-_CTAS = re.compile(
-    rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+({_TBL})\s+USING\s+txlog\b"
-    r"(.*?)\s+AS\s+(SELECT|WITH|VALUES|TABLE)\b(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CREATE_EMPTY = re.compile(
-    rf"^\s*CREATE\s+(OR\s+REPLACE\s+)?TABLE\s+({_TBL})\s*"
-    r"\((.*)\)\s*USING\s+txlog\b(.*)$",
-    re.IGNORECASE | re.DOTALL,
-)
-_CTAS_LOCATION = re.compile(
-    r"LOCATION\s+'((?:[^']|'')*)'", re.IGNORECASE
-)
-_CTAS_PARTITIONED = re.compile(
-    rf"PARTITIONED\s+BY\s*\(((?:\s*(?:{_IDENT})\s*,?)+)\)", re.IGNORECASE
-)
-
 _COPY_INTO = re.compile(
     rf"^\s*COPY\s+INTO\s+({_TBL})\s+FROM\s+'((?:[^']|'')*)'\s+"
     r"FILEFORMAT\s*=\s*(\w+)\s*(.*)$",
@@ -648,33 +632,6 @@ def sql_dml(spark: SparkSession, statement: str):
     m = _CLONE.match(stmt)
     if m:
         return _clone(spark, *m.group(1, 2, 3, 4))
-    m = _CTAS.match(stmt)
-    if m:
-        return _ctas(
-            spark,
-            bool(m.group(1)),
-            m.group(2),
-            m.group(3),
-            m.group(4) + m.group(5),
-        )
-    m = _CREATE_EMPTY.match(stmt)
-    if m:
-        ddl_parts, col_opts = _parse_create_columns(
-            m.group(2), _split_top(m.group(3), ",")
-        )
-        try:
-            empty = spark.createDataFrame([], ", ".join(ddl_parts))
-        except AnalysisException as e:
-            raise SqlDmlError(
-                f"CREATE TABLE {m.group(2)}: cannot parse column list "
-                f"{m.group(3)!r} as a DDL schema ({e})"
-            )
-        fq = _ctas(
-            spark, bool(m.group(1)), m.group(2), m.group(4), None, df=empty
-        )
-        if col_opts:
-            _apply_create_options(spark, fq, col_opts)
-        return fq
     m = _OPTIMIZE.match(stmt)
     if m:
         return _optimize(spark, m.group(1), m.group(3), m.group(2))
@@ -693,6 +650,9 @@ def sql_dml(spark: SparkSession, statement: str):
             return r
     plan = _parse_statement(spark, stmt)
     kind = plan.nodeName()
+    if re.fullmatch("(Create|Replace)Table(AsSelect)?", kind):
+        if str(_opt(plan.tableSpec().provider())).lower() == "txlog":
+            return _ctas(spark, plan)
     route = {
         "DeleteFromTable": _delete,
         "UpdateTable": _update,
@@ -1310,18 +1270,9 @@ def _merge(spark: SparkSession, stmt: str, plan, table: str, path: str):
             schema_evolution=evolve,
         )
         if evolve:
-            # the catalog relation pins the registration-time schema —
-            # re-register so a new column is immediately visible by name
-            # (same refresh ALTER TABLE ADD COLUMN performs)
-            from .sql_serving import register_txlog_table
-
-            parts = table.split(".")
-            db = (
-                parts[0]
-                if len(parts) == 2
-                else spark.catalog.currentDatabase()
-            )
-            register_txlog_table(spark, db, parts[-1], path)
+            # a new column is immediately visible by name (same refresh
+            # ALTER TABLE ADD COLUMN performs)
+            _reregister(spark, table, path)
         return v
     if evolve:
         # tx_merge refuses clauses+schema_evolution (explicit column
@@ -1644,92 +1595,6 @@ def _insert(spark: SparkSession, stmt: str, plan, table: str, path: str):
     )
 
 
-_GEN_IDENTITY = re.compile(
-    r"\bGENERATED\s+(ALWAYS|BY\s+DEFAULT)\s+AS\s+IDENTITY"
-    r"(?:\s*\(\s*START\s+WITH\s+(-?\d+)(?:\s+INCREMENT\s+BY\s+(-?\d+))?"
-    r"\s*\))?",
-    re.IGNORECASE,
-)
-_GEN_EXPR = re.compile(
-    r"\bGENERATED\s+ALWAYS\s+AS\s*\((.*)\)\s*$", re.IGNORECASE | re.DOTALL
-)
-_COL_DEFAULT = re.compile(
-    r"\bDEFAULT\s+(.+?)\s*$", re.IGNORECASE | re.DOTALL
-)
-_TBL_CHECK = re.compile(
-    rf"^\s*CONSTRAINT\s+({_IDENT})\s+CHECK\s*\((.*)\)\s*$",
-    re.IGNORECASE | re.DOTALL,
-)
-_COL_HEAD = re.compile(rf"^\s*({_IDENT})\s+", re.DOTALL)
-
-
-def _parse_create_columns(
-    table: str, items: list[str]
-) -> tuple[list[str], list[tuple]]:
-    """Split CREATE TABLE column items into the plain DDL parts Spark's
-    schema parser accepts (``name type [NOT NULL]``) and the declarative
-    options applied as metadata commits after version 1: ``GENERATED
-    {ALWAYS|BY DEFAULT} AS IDENTITY [(START WITH n [INCREMENT BY s])]``
-    (both spellings serve the engine's BY-DEFAULT identity semantics),
-    ``GENERATED ALWAYS AS (expr)``, ``DEFAULT <expr>``, and table-level
-    ``CONSTRAINT name CHECK (expr)`` — the full Delta column-DDL surface
-    at create time."""
-    ddl, opts = [], []
-    for item in items:
-        item = item.strip()
-        m = _TBL_CHECK.match(item)
-        if m:
-            opts.append(("check", (_unquote(m.group(1)), m.group(2).strip())))
-            continue
-        cm = _COL_HEAD.match(item)
-        if not cm:
-            raise SqlDmlError(
-                f"CREATE TABLE {table}: cannot parse column item {item!r}"
-            )
-        name = _unquote(cm.group(1))
-        rest = item
-        m = _GEN_IDENTITY.search(rest)
-        if m:
-            start = int(m.group(2)) if m.group(2) else 1
-            step = int(m.group(3)) if m.group(3) else 1
-            opts.append(("identity", (name, start, step)))
-            rest = rest[: m.start()] + rest[m.end():]
-        else:
-            m = _GEN_EXPR.search(rest)
-            if m:
-                opts.append(("generated", (name, m.group(1).strip())))
-                rest = rest[: m.start()] + rest[m.end():]
-        m = _COL_DEFAULT.search(rest)
-        if m:
-            opts.append(("default", (name, m.group(1).strip())))
-            rest = rest[: m.start()] + rest[m.end():]
-        ddl.append(" ".join(rest.split()))
-    return ddl, opts
-
-
-def _apply_create_options(
-    spark: SparkSession, fq: str, col_opts: list[tuple]
-) -> None:
-    """Apply the parsed column options to the freshly created (empty)
-    table — each a metadata-only commit through the declaring writers,
-    so the invariants hold from the table's FIRST data write."""
-    from ..sources import txlog as TX
-
-    pinned = txlog_table_path(spark, fq)
-    assert pinned is not None  # _ctas just registered it
-    path = pinned[0]
-    for kind, payload in col_opts:
-        if kind == "identity":
-            col, start, step = payload
-            TX.tx_add_identity(spark, path, col, start=start, step=step)
-        elif kind == "generated":
-            TX.tx_add_generated_column(spark, path, *payload)
-        elif kind == "default":
-            TX.tx_set_default(spark, path, *payload)
-        else:  # check
-            TX.tx_add_constraint(spark, path, *payload)
-
-
 def _convert(
     spark: SparkSession,
     path: str | None,
@@ -1792,10 +1657,7 @@ def _convert(
     v = tx_convert(
         spark, loc, partition_by=cols, partition_types=types or None
     )
-    from .sql_serving import register_txlog_table
-
-    db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
-    register_txlog_table(spark, db, parts[-1], loc)
+    _reregister(spark, table, loc)
     return v
 
 
@@ -1838,6 +1700,25 @@ def _insert_replace_where(
     )
 
 
+def _managed_path(spark: SparkSession, db: str, name: str) -> str:
+    """The data dir of a MANAGED ``db.name``: ``<db location>/<name>__txlog``
+    — suffixed so it never collides with the catalog's default
+    managed-table location for db.name (Spark refuses CREATE TABLE when
+    that exact dir already exists)."""
+    import os
+
+    from .sql_serving import ensure_database
+
+    ensure_database(spark, db)
+    db_loc = (
+        spark.sql(f"DESCRIBE DATABASE {db}")
+        .filter("info_name = 'Location'")
+        .collect()[0]
+        .info_value
+    )
+    return os.path.join(db_loc.removeprefix("file:"), f"{name}__txlog")
+
+
 def _clone(
     spark: SparkSession,
     target: str,
@@ -1852,10 +1733,7 @@ def _clone(
     independently (Delta's SHALLOW CLONE, including the documented
     vacuum-the-source caveat). Without LOCATION the clone is managed
     under the target's layer database."""
-    import os
-
     from ..sources import txlog as TX
-    from .sql_serving import ensure_database, register_txlog_table
 
     pinned = txlog_table_path(spark, source)
     if pinned is None:
@@ -1869,62 +1747,125 @@ def _clone(
     if location:
         dst = location.replace("''", "'")
     else:
-        ensure_database(spark, db)
-        db_loc = (
-            spark.sql(f"DESCRIBE DATABASE {db}")
-            .filter("info_name = 'Location'")
-            .collect()[0]
-            .info_value
-        )
-        dst = os.path.join(db_loc.removeprefix("file:"), f"{name}__txlog")
+        dst = _managed_path(spark, db, name)
     TX.tx_clone(
         spark, src_path, dst,
         version=int(version) if version is not None else None,
     )
-    return register_txlog_table(spark, db, name, dst)
+    return _reregister(spark, f"{db}.{name}", dst)
 
 
-def _ctas(
-    spark: SparkSession,
-    replace: bool,
-    table: str,
-    opts_text: str,
-    query: str | None,
-    df: DataFrame | None = None,
-) -> str:
-    """``CREATE [OR REPLACE] TABLE db.t USING txlog [LOCATION '…']
-    [PARTITIONED BY (cols)] AS <query>`` — the SQL-only table
-    lifecycle's missing first step: run the query, commit it as version
-    1 (or a replace) through ``tx_write``, and register the catalog
-    name over the pinned format. Without LOCATION the table is MANAGED:
-    data lands under the layer database's directory (Delta's managed
-    CTAS), still a plain txlog dir that survives the catalog. The
-    empty-table DDL form passes ``df`` (a zero-row frame carrying the
-    declared schema) instead of a query. Returns the fully-qualified
-    registered name."""
-    import os
-
-    from ..sources import txlog as TX
-    from .sql_serving import ensure_database, register_txlog_table
-
-    parts = [_unquote(p) for p in table.split(".")]
-    db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
-    name = parts[-1]
-    mloc = _CTAS_LOCATION.search(opts_text)
-    mpart = _CTAS_PARTITIONED.search(opts_text)
-    partition_by = (
-        [_unquote(c) for c in _split_top(mpart.group(1), ",")]
-        if mpart
-        else None
+def _declared_columns(plan):
+    """The schema a CREATE TABLE column list declares (name, type,
+    nullability, comment) and its options, read off the
+    ``ColumnDefinition`` nodes and the table spec's CHECK constraints:
+    ``("identity", col, start, step)`` (``GENERATED ALWAYS`` and ``BY
+    DEFAULT`` both serve the engine's BY-DEFAULT identity),
+    ``("generated", col, expr)``, ``("default", col, expr)`` and
+    ``("check", name, expr)``."""
+    from pyspark.sql.types import (
+        StructField,
+        StructType,
+        _parse_datatype_json_string,
     )
-    leftover = _CTAS_LOCATION.sub(
-        "", _CTAS_PARTITIONED.sub("", opts_text)
-    ).strip()
-    if leftover:
+
+    fields, opts = [], []
+    for c in _seq(plan.columns()):
+        comment = _opt(c.comment())
+        fields.append(StructField(
+            c.name(),
+            _parse_datatype_json_string(c.dataType().json()),
+            c.nullable(),
+            None if comment is None else {"comment": comment},
+        ))
+        ident = _opt(c.identityColumnSpec())
+        if ident is not None:
+            opts.append(
+                ("identity", c.name(), ident.getStart(), ident.getStep())
+            )
+        gen = _opt(c.generationExpression())
+        if gen is not None:
+            opts.append(("generated", c.name(), gen))
+        default = _opt(c.defaultValue())
+        if default is not None:
+            opts.append(("default", c.name(), default.originalSQL()))
+    for check in _seq(plan.tableSpec().constraints()):
+        opts.append(("check", check.name(), check.condition()))
+    return StructType(fields), opts
+
+
+def _ctas(spark: SparkSession, plan) -> str:
+    """``CREATE [OR REPLACE] TABLE [IF NOT EXISTS] db.t USING txlog
+    [LOCATION '…'] [PARTITIONED BY (cols)] AS <query>`` — the SQL-only
+    table lifecycle's first step: run the query, commit it as version 1
+    (or a replace) through ``tx_write``, and register the catalog name
+    over the pinned format. Without LOCATION the table is MANAGED: data
+    lands under the layer database's directory (Delta's managed CTAS),
+    still a plain txlog dir that survives the catalog. The empty-table
+    form ``CREATE TABLE db.t (col TYPE …, [CONSTRAINT n CHECK (…)])``
+    commits a zero-row frame of the declared columns, then each column
+    option (:func:`_declared_columns`) as a metadata commit — every
+    option expression is analyzed against that frame first, so one that
+    does not resolve commits and registers nothing. Returns the
+    fully-qualified registered name."""
+    from ..sources import txlog as TX
+
+    parts = [str(p) for p in _seq(plan.name().nameParts())]
+    db = parts[-2] if len(parts) > 1 else spark.catalog.currentDatabase()
+    name = parts[-1]
+    replace = plan.nodeName().startswith("Replace")
+    if replace and not plan.orCreate():
         raise SqlDmlError(
-            f"CREATE TABLE {table} USING txlog: unsupported clause(s) "
-            f"{leftover!r} (supported: LOCATION, PARTITIONED BY)"
+            f"REPLACE TABLE {db}.{name} USING txlog: write CREATE OR "
+            "REPLACE TABLE (a txlog replace creates the table when absent)"
         )
+    spec = plan.tableSpec()
+    partition_by, unsupported = [], []
+    for tr in _seq(plan.partitioning()):
+        names = (
+            tr.references()[0].fieldNames() if tr.name() == "identity" else ()
+        )
+        if len(names) == 1:
+            partition_by.append(names[0])
+        else:  # CLUSTER BY, bucketing, transforms, nested fields
+            unsupported.append(tr.describe())
+    for clause, present in (
+        ("TBLPROPERTIES", not spec.properties().isEmpty()),
+        ("OPTIONS", not spec.optionExpression().options().isEmpty()),
+        ("COMMENT", spec.comment().isDefined()),
+        ("DEFAULT COLLATION", spec.collation().isDefined()),
+        ("ROW FORMAT / STORED AS", spec.serde().isDefined()),
+    ):
+        if present:
+            unsupported.append(clause)
+    unsupported += [
+        c.toString()
+        for c in _seq(spec.constraints())
+        if c.getClass().getSimpleName() != "CheckConstraint"
+    ]
+    if unsupported:
+        raise SqlDmlError(
+            f"CREATE TABLE {db}.{name} USING txlog: unsupported clause(s) "
+            f"{unsupported} (supported: LOCATION, PARTITIONED BY, CHECK "
+            "constraints)"
+        )
+    if plan.nodeName().endswith("AsSelect"):
+        df, opts = _df(spark, plan.query()), []
+    else:
+        schema, opts = _declared_columns(plan)
+        if not schema.fields:
+            raise SqlDmlError(
+                f"CREATE TABLE {db}.{name} USING txlog: needs a column "
+                "list or AS <query>"
+            )
+        df = spark.createDataFrame([], schema)
+    # analysis only: an option expression that does not resolve raises
+    # here, before version 1 is written
+    for kind, _, expr, *_ in opts:
+        if kind in ("generated", "default"):
+            df.selectExpr(expr)
+        elif kind == "check":
+            df.filter(expr)
     # CREATE OR REPLACE of an EXISTING txlog registration must land as a
     # commit in the SAME log (Delta reuses the table's location): prior
     # versions stay travelable through the name and nothing is orphaned.
@@ -1933,8 +1874,8 @@ def _ctas(
     existing = txlog_table_path(spark, f"{db}.{name}") if replace else None
     if existing is not None:
         existing_path = _writable(f"{db}.{name}", existing)[0]
-    if mloc:
-        path = mloc.group(1).replace("''", "'")
+    path = _opt(spec.location())
+    if path is not None:
         if existing is not None and path.rstrip("/") != existing_path.rstrip("/"):
             raise SqlDmlError(
                 f"CREATE OR REPLACE TABLE {db}.{name}: LOCATION {path!r} "
@@ -1945,31 +1886,63 @@ def _ctas(
     elif existing is not None:
         path = existing_path
     else:
-        ensure_database(spark, db)
-        db_loc = (
-            spark.sql(f"DESCRIBE DATABASE {db}")
-            .filter("info_name = 'Location'")
-            .collect()[0]
-            .info_value
-        )
-        # "__txlog"-suffixed so the data dir never collides with the
-        # catalog's default managed-table location for db.name (Spark
-        # refuses CREATE TABLE when that exact dir already exists)
-        path = os.path.join(db_loc.removeprefix("file:"), f"{name}__txlog")
+        path = _managed_path(spark, db, name)
     exists_in_catalog = spark.catalog.tableExists(f"{db}.{name}")
     has_commits = TX.current_version(spark, path) is not None
     if not replace and (exists_in_catalog or has_commits):
+        if plan.ignoreIfExists():
+            return f"{db}.{name}"
         raise SqlDmlError(
             f"CREATE TABLE {db}.{name}: already exists "
             f"({'catalog entry' if exists_in_catalog else path}) — use "
             "CREATE OR REPLACE TABLE to overwrite"
         )
-    if df is None:
-        df = spark.sql(query)
     TX.tx_write(
-        spark, df, path, mode="overwrite", partition_by=partition_by
+        spark, df, path, mode="overwrite", partition_by=partition_by or None
     )
-    return register_txlog_table(spark, db, name, path)
+    _apply_create_options(spark, path, opts)
+    return _reregister(spark, f"{db}.{name}", path)
+
+
+def _apply_create_options(
+    spark: SparkSession, path: str, opts: list[tuple]
+) -> None:
+    """Apply the options :func:`_declared_columns` read to the freshly
+    created (empty) table — each a metadata-only commit through the
+    declaring writers, so the invariants hold from the table's FIRST
+    data write."""
+    from ..sources import txlog as TX
+
+    for kind, *args in opts:
+        if kind == "identity":
+            col, start, step = args
+            TX.tx_add_identity(spark, path, col, start=start, step=step)
+        elif kind == "generated":
+            TX.tx_add_generated_column(spark, path, *args)
+        elif kind == "default":
+            TX.tx_set_default(spark, path, *args)
+        else:  # check
+            TX.tx_add_constraint(spark, path, *args)
+
+
+def _reregister(spark: SparkSession, table: str, path: str) -> str:
+    """(Re-)register ``table`` over ``path`` after a commit that created
+    or reshaped it (the catalog relation pins the schema it was created
+    with), in the mode it is registered in now: a read-optimized
+    registration keeps its native parquet relation."""
+    from .sql_serving import _SERVING_BY_PATH, register_txlog_table
+
+    parts = [_unquote(p) for p in table.split(".")]
+    db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
+    served = _SERVING_BY_PATH.get(
+        (spark.sparkContext.applicationId, path.rstrip("/")), ()
+    )
+    read_optimized = (db.lower(), parts[-1].lower()) in {
+        (d.lower(), n.lower()) for d, n in served
+    }
+    return register_txlog_table(
+        spark, db, parts[-1], path, read_optimized=read_optimized
+    )
 
 
 # table DDL served from the txlog record; every other ALTER TABLE plan on
@@ -2037,7 +2010,6 @@ def _alter(spark: SparkSession, stmt: str, plan, table: str, path: str):
     schema at CREATE time), so ``SELECT`` by name sees the new shape
     immediately."""
     from ..sources import txlog as TX
-    from .sql_serving import register_txlog_table
 
     refusal = SqlDmlError(
         f"ALTER TABLE {table}: unsupported action in {stmt!r} (supported: "
@@ -2118,9 +2090,7 @@ def _alter(spark: SparkSession, stmt: str, plan, table: str, path: str):
     else:
         raise refusal
     if reregister:
-        parts = [_unquote(p) for p in table.split(".")]
-        db = parts[0] if len(parts) == 2 else spark.catalog.currentDatabase()
-        register_txlog_table(spark, db, parts[-1], path)
+        _reregister(spark, table, path)
     return v
 
 

@@ -4979,7 +4979,10 @@ def _dml_rewrite(
     if not hit and insert_df is None:
         return cur  # nothing can match — no new version needed
 
-    cond = _dml_predicate(where, where_equals, condition)
+    cond = _dml_predicate(
+        where, where_equals, condition,
+        {c: part_types.get(c) for c in partition_by or ()},
+    )
 
     new_files: list[dict] = []
     if hit:
@@ -5052,21 +5055,30 @@ def _dml_rewrite(
         raise
 
 
-def _dml_predicate(where: dict, where_equals: dict, condition=None):
+def _dml_predicate(
+    where: dict, where_equals: dict, condition=None, types: dict | None = None
+):
     """The row-level Column predicate of a DML where/where_equals spec,
     AND-composed with the optional free-form ``condition`` (a SQL
     expression string or Column — the `DELETE WHERE <any expr>` path;
-    structured specs stay the file-pruning hints)."""
+    structured specs stay the file-pruning hints). A column named in
+    ``types`` ({name: type json}) is compared in that type: the rewrite's
+    file read types hive partition columns as strings."""
+
+    def column(name: str):
+        t = (types or {}).get(name)
+        return F.col(name) if t is None else F.col(name).cast(t)
+
     cond = None
     for col, (lo, hi) in where.items():
         c = F.lit(True)
         if lo is not None:
-            c = c & (F.col(col) >= F.lit(lo))
+            c = c & (column(col) >= F.lit(lo))
         if hi is not None:
-            c = c & (F.col(col) <= F.lit(hi))
+            c = c & (column(col) <= F.lit(hi))
         cond = c if cond is None else (cond & c)
     for col, val in where_equals.items():
-        c = F.col(col) == F.lit(val)
+        c = column(col) == F.lit(val)
         cond = c if cond is None else (cond & c)
     if condition is not None:
         c = F.expr(condition) if isinstance(condition, str) else condition
@@ -5275,7 +5287,10 @@ def _dv_dml(
     ]
     if not hit:
         return cur
-    cond = _dml_predicate(where, where_equals, condition)
+    cond = _dml_predicate(
+        where, where_equals, condition,
+        {c: part_types.get(c) for c in partition_by or ()},
+    )
     root = path.rstrip("/")
     matching = _read_files_with_position(spark, path, hit).filter(
         F.coalesce(cond, F.lit(False))

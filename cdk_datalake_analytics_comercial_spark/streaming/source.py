@@ -301,6 +301,11 @@ def _read_partition(part: _TxFilesPartition) -> Iterator:
             elif phys in part_vals:
                 raw = part_vals[phys]
                 col = pa.array([raw] * n, type=pa.string())
+                if pa.types.is_timestamp(field.type):
+                    # a hive TIMESTAMP value is a session-zone wall-clock
+                    # time without an offset; core/session pins that zone
+                    # to UTC, which the cast to the zoned type assumes
+                    col = pc.cast(col, pa.timestamp(field.type.unit))
                 if not pa.types.is_string(field.type):
                     col = pc.cast(col, field.type)
             else:  # schema-evolved column absent from an old file

@@ -2592,3 +2592,202 @@ def test_reserved_property_fallback_only_for_alter_set(spark):
             "CREATE TABLE dmldb.own (id BIGINT) USING parquet "
             "TBLPROPERTIES ('owner' = 'x')",
         )
+
+
+# ------------------------------------------------ CREATE on the parse tree
+
+
+@pytest.mark.parametrize(
+    "coldef, key, declared, filled",
+    [
+        ("v STRING DEFAULT 'a' NOT NULL", "default.v", "'a'", ["a", "a"]),
+        ("x BIGINT DEFAULT 7 COMMENT 'seven'", "default.x", "7", [7, 7]),
+        (
+            "v STRING COMMENT 'DEFAULT is none'",
+            "default.v", None, [None, None],
+        ),
+        (
+            "tot BIGINT GENERATED ALWAYS AS (x + 1) COMMENT 'total'",
+            "generated.tot", "x + 1", [42, 42],
+        ),
+        (
+            "id BIGINT GENERATED ALWAYS AS IDENTITY (INCREMENT BY 2)",
+            "identity.id", {"start": 1, "step": 2}, [1, 3],
+        ),
+        (
+            "id BIGINT GENERATED ALWAYS AS IDENTITY "
+            "(INCREMENT BY 2 START WITH 10)",
+            "identity.id", {"start": 10, "step": 2}, [10, 12],
+        ),
+    ],
+)
+def test_sql_create_column_definitions_as_spark_parses_them(
+    spark, tmp_path, coldef, key, declared, filled
+):
+    """Each column definition Spark's grammar accepts records the option
+    Spark read (DEFAULT up to its own end, COMMENT apart, either IDENTITY
+    clause order), and an INSERT omitting the column fills it."""
+    import json
+    import zlib
+
+    col = coldef.split()[0]
+    other = "k" if col == "x" else "x"
+    name = f"cdef_{zlib.crc32(coldef.encode())}"
+    loc = str(tmp_path / name)
+    sql_dml(
+        spark,
+        f"CREATE TABLE dmldb.{name} ({other} BIGINT, {coldef}) "
+        f"USING txlog LOCATION '{loc}'",
+    )
+    props = TX.tx_properties(spark, loc)
+    got = props.get(key)
+    if key.startswith("identity."):
+        got = json.loads(got)
+    assert got == declared
+    sql_dml(spark, f"INSERT INTO dmldb.{name} ({other}) VALUES (41), (41)")
+    got = spark.sql(f"SELECT {col} FROM dmldb.{name}").collect()
+    assert sorted((r[0] for r in got), key=str) == filled
+
+
+def test_sql_create_unresolved_option_commits_nothing(spark, tmp_path):
+    """An option expression that does not resolve is refused before
+    version 1: no commit at the location and no catalog name."""
+    loc = str(tmp_path / "badgen")
+    with pytest.raises(Exception, match="nope"):
+        sql_dml(
+            spark,
+            "CREATE TABLE dmldb.badgen (x BIGINT, "
+            "tot BIGINT GENERATED ALWAYS AS (nope + 1)) "
+            f"USING txlog LOCATION '{loc}'",
+        )
+    assert TX.current_version(spark, loc) is None
+    assert not spark.catalog.tableExists("dmldb.badgen")
+
+
+def test_sql_create_if_not_exists_keeps_existing(spark, tmp_path):
+    """CREATE TABLE IF NOT EXISTS … USING txlog, in both forms, on an
+    existing table returns its name without a commit."""
+    loc = str(tmp_path / "ine")
+    sql_dml(
+        spark,
+        f"CREATE TABLE dmldb.ine USING txlog LOCATION '{loc}' AS "
+        "SELECT id FROM range(3)",
+    )
+    for stmt in (
+        f"CREATE TABLE IF NOT EXISTS dmldb.ine USING txlog LOCATION '{loc}' "
+        "AS SELECT id FROM range(7)",
+        "CREATE TABLE IF NOT EXISTS dmldb.ine (id BIGINT) USING txlog",
+    ):
+        assert sql_dml(spark, stmt) == "dmldb.ine"
+    assert TX.current_version(spark, loc) == 1
+    assert spark.table("dmldb.ine").count() == 3
+
+
+def test_sql_create_provider_routing(spark, tmp_path):
+    """The provider decides the route, in any case: ``USING TXLOG``
+    commits a txlog table; ``USING parquet`` is Spark's own table."""
+    from cdk_datalake_analytics_comercial_spark.core.sql_dml import (
+        txlog_table_path,
+    )
+
+    loc = str(tmp_path / "upper")
+    assert sql_dml(
+        spark,
+        f"CREATE TABLE dmldb.upper (id BIGINT) USING TXLOG LOCATION '{loc}'",
+    ) == "dmldb.upper"
+    assert TX.current_version(spark, loc) == 1
+    spark.sql("DROP TABLE IF EXISTS dmldb.plainc")
+    out = sql_dml(spark, "CREATE TABLE dmldb.plainc (id BIGINT) USING parquet")
+    assert not isinstance(out, str)
+    assert spark.catalog.tableExists("dmldb.plainc")
+    assert txlog_table_path(spark, "dmldb.plainc") is None
+
+
+# ------------------------------------- schema DDL keeps a native registration
+
+
+def _provider(spark, fq):
+    rows = spark.sql(f"DESCRIBE TABLE EXTENDED {fq}").collect()
+    return next(str(r.data_type) for r in rows if r.col_name == "Provider")
+
+
+def test_alter_add_column_keeps_read_optimized_registration(spark, tmp_path):
+    p = _table(spark, tmp_path, "roalt")
+    register_txlog_table(spark, "dmldb", "roalt", p, read_optimized=True)
+    assert _provider(spark, "dmldb.roalt") == "parquet"
+    sql_dml(spark, "ALTER TABLE dmldb.roalt ADD COLUMN extra STRING")
+    assert _provider(spark, "dmldb.roalt") == "parquet"
+    assert "extra" in spark.table("dmldb.roalt").columns
+
+
+def test_merge_schema_evolution_keeps_read_optimized_registration(
+    spark, tmp_path
+):
+    p = _table(spark, tmp_path, "romevo")
+    register_txlog_table(spark, "dmldb", "romevo", p, read_optimized=True)
+    spark.sql(
+        "SELECT * FROM VALUES (1, 'n1', 0, 'x1') AS s(id, v, g, extra)"
+    ).createOrReplaceTempView("romevo_src")
+    sql_dml(
+        spark,
+        "MERGE WITH SCHEMA EVOLUTION INTO dmldb.romevo t USING romevo_src s "
+        "ON t.id = s.id "
+        "WHEN MATCHED THEN UPDATE SET * "
+        "WHEN NOT MATCHED THEN INSERT *",
+    )
+    assert _provider(spark, "dmldb.romevo") == "parquet"
+    got = spark.sql("SELECT extra FROM dmldb.romevo WHERE id = 1").collect()
+    assert [r.extra for r in got] == ["x1"]
+
+
+# ---------------------------------------------------- typed partition values
+
+
+def test_select_timestamp_partitioned_python_source(spark, tmp_path):
+    """The Python Data Source reads a TIMESTAMP partition column: the
+    hive value is a session-zone (UTC) wall-clock time."""
+    p = str(tmp_path / "tspsel")
+    TX.tx_write(
+        spark,
+        spark.sql(
+            "SELECT id, TIMESTAMP '2024-02-01 10:30:00' + "
+            "make_interval(0, 0, 0, 0, CAST(id % 2 AS INT)) AS ts "
+            "FROM range(4)"
+        ),
+        p,
+        partition_by=["ts"],
+    )
+    register_txlog_table(spark, "dmldb", "tspsel", p)
+    assert rows(spark.sql("SELECT id, ts FROM dmldb.tspsel")) == rows(
+        TX.tx_read(spark, p).select("id", "ts")
+    )
+
+
+def _double_partitioned(spark, tmp_path, name):
+    p = str(tmp_path / name)
+    TX.tx_write(
+        spark,
+        spark.createDataFrame(
+            [(j, f"v{j}", 0.1 * (j % 3)) for j in range(6)],
+            "id long, v string, p double",
+        ),
+        p,
+        partition_by=["p"],
+    )
+    register_txlog_table(spark, "dmldb", name, p)
+    return p
+
+
+def test_integer_bound_on_double_partition_delete(spark, tmp_path):
+    p = _double_partitioned(spark, tmp_path, "dblint_d")
+    sql_dml(spark, "DELETE FROM dmldb.dblint_d WHERE p BETWEEN 0 AND 0.1")
+    assert sorted(r.id for r in TX.tx_read(spark, p).collect()) == [2, 5]
+
+
+def test_integer_bound_on_double_partition_update(spark, tmp_path):
+    p = _double_partitioned(spark, tmp_path, "dblint_u")
+    sql_dml(
+        spark, "UPDATE dmldb.dblint_u SET v = 'u' WHERE p BETWEEN 0 AND 0.1"
+    )
+    got = {r.id: r.v for r in TX.tx_read(spark, p).collect()}
+    assert got == {0: "u", 1: "u", 2: "v2", 3: "u", 4: "u", 5: "v5"}
