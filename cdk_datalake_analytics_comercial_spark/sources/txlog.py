@@ -57,7 +57,9 @@ import os
 import re
 import time
 import uuid
+from typing import Callable, NamedTuple
 
+from py4j.protocol import Py4JJavaError
 from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -888,7 +890,7 @@ def _delete_checkpoint(spark: SparkSession, path: str, version: int) -> None:
     try:
         cp = json.loads(_read_text(spark, _checkpoint_path(path, version)))
         n_parts = int(cp.get("parts", 0))
-    except Exception:
+    except (FileNotFoundError, ValueError):  # missing, torn or not JSON
         n_parts = 0
     for i in range(n_parts):
         _delete(spark, _checkpoint_part_path(path, version, i))
@@ -1911,7 +1913,14 @@ def _create_no_overwrite(spark: SparkSession, path: str, text: str) -> bool:
     fs, p, _ = _fs(spark, path)
     try:
         out = fs.create(p, False)
-    except Exception:
+    except Py4JJavaError as exc:
+        # only an existing file is a lost claim: a permission or I/O error
+        # must surface, not retry as contention
+        if (
+            exc.java_exception.getClass().getName()
+            != "org.apache.hadoop.fs.FileAlreadyExistsException"
+        ):
+            raise
         return False
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -1936,7 +1945,9 @@ def _commit(spark: SparkSession, path: str, build) -> int:
     operations whose read set the winner invalidated raise
     :class:`TxConflictError` from inside ``build`` (Delta's
     logical-conflict check) instead of silently dropping the winner's
-    files.
+    files. Every rewrite (DML, MERGE, incremental OPTIMIZE) commits
+    through :func:`_commit_rewrite`, the one place its conflicts are
+    decided.
 
     After a successful claim, every ``_CHECKPOINT_EVERY``-th version
     writes a checkpoint manifest — best-effort (a failure only lengthens
@@ -1974,7 +1985,13 @@ def _commit(spark: SparkSession, path: str, build) -> int:
                 try:
                     _write_checkpoint(spark, path, version)
                 except Exception:
-                    pass  # commit already durable; checkpoint is an optimization
+                    # the commit is already durable and a checkpoint is an
+                    # optimization: a failure only lengthens the log tail
+                    # the next reader replays
+                    _logger.warning(
+                        "checkpoint of version %d of %s failed", version, path,
+                        exc_info=True,
+                    )
             _notify_commit(spark, path, version)
             return version
     raise RuntimeError(f"txlog commit contention at {path}")
@@ -2011,6 +2028,128 @@ def _notify_commit(spark: SparkSession, path: str, version: int) -> None:
                 getattr(fn, "__qualname__", fn), version, path, exc,
                 exc_info=True,
             )
+
+
+def _commit_rewrite(
+    spark: SparkSession,
+    path: str,
+    manifest: dict,
+    op: str,
+    read: set[str],
+    add: list[dict],
+    *,
+    schema: str | None = None,
+    dv: tuple[str, dict[str, int]] | None = None,
+    overlaps=None,
+    truncate: bool = False,
+    exclusive: bool = False,
+    extra=None,
+) -> int:
+    """Commit a rewrite (DML, MERGE, incremental OPTIMIZE) computed
+    against ``manifest``: the one place its logical conflict check is
+    decided (Delta's ConcurrentDelete / ConcurrentAppend checks). Each
+    :func:`_commit` attempt re-checks against the winner's snapshot and
+    raises :class:`TxConflictError` when
+
+    - a file of ``read`` (the paths the rewrite read) was removed;
+    - a file added since ``manifest`` matches ``overlaps``: a
+      ``can_match(file)`` pruner (:func:`_file_pruner`) or a set of
+      touched partition keys (:func:`_partition_key`);
+    - ``truncate`` or ``exclusive``: any commit landed at all, a
+      metadata-only one included.
+
+    Without ``dv`` the record removes ``read`` and adds ``add`` (a
+    ``truncate`` record replaces the whole table). ``dv=(ref, counts)``
+    soft-deletes instead: each counted file's entry is rebuilt from the
+    winner's snapshot with the sidecar ``ref`` appended (so a concurrent
+    DV's references merge) and the record declares the DV feature.
+    ``schema`` overrides ``manifest``'s schema record; ``extra(snapshot)``
+    adds record keys. On a conflict or a property violation the new
+    batch dirs and the sidecar are deleted before the error propagates."""
+    base = manifest["version"]
+    base_paths = {f["path"] for f in manifest["files"]}
+    ref, counts = dv or (None, {})
+    scope = "the touched partitions" if isinstance(overlaps, set) else None
+
+    def overlapping(f: dict) -> bool:
+        return _partition_key(f) in overlaps if scope else overlaps(f)
+
+    def build(now: int | None) -> dict:
+        snap = read_manifest(spark, path, now) if now is not None else {}
+        now_by = {f["path"]: f for f in snap.get("files", [])}
+        why = None
+        if (truncate or exclusive) and now != base:
+            why = "table changed concurrently"
+        elif read - now_by.keys():
+            # committing would resurrect the removed files' pre-images
+            why = f"files in {scope or 'the read set'} were removed concurrently"
+        elif overlaps is not None and any(
+            overlapping(f) for p, f in now_by.items() if p not in base_paths
+        ):
+            # rows this rewrite never saw may match it
+            why = f"concurrent append overlaps {scope or 'the predicate'}"
+        if why:
+            raise TxConflictError(
+                f"{op} at {path}: {why} (base v{base}, now v{now})"
+            )
+        dv_entries = []
+        for rel, n in sorted(counts.items()):
+            entry = dict(now_by[rel])
+            entry["dv"] = list(entry.get("dv", ())) + [ref]
+            entry["dv_count"] = int(entry.get("dv_count", 0)) + n
+            dv_entries.append(entry)
+        rec = {
+            "op": op,
+            "schema": schema or manifest["schema"],
+            "add": dv_entries + add,
+            "remove": [] if dv or truncate else sorted(read),
+            "truncate": truncate,
+        }
+        if counts:
+            # every DV-using commit embeds the full accumulated protocol,
+            # so any grounded log suffix containing it declares the feature
+            rec["protocol"] = _protocol_with(
+                snap.get("protocol"),
+                reader=(FEATURE_DELETION_VECTORS,),
+                writer=(FEATURE_DELETION_VECTORS,),
+            )
+        if extra is not None:
+            rec.update(extra(snap))
+        return rec
+
+    try:
+        return _commit(spark, path, build)
+    except (TxConflictError, TxPropertyViolation):
+        # the failed attempt's batches are unreferenced: reap them now
+        # rather than waiting for vacuum
+        root = path.rstrip("/")
+        dirs = {"/".join(f["path"].split("/")[:2]) for f in add}
+        for d in sorted(dirs | ({ref} if ref else set())):
+            _delete(spark, f"{root}/{d}")
+        raise
+
+
+def _write_dv(spark: SparkSession, path: str, rows: DataFrame) -> tuple[str, dict]:
+    """Write the positions of ``rows`` (a :func:`_read_files_with_position`
+    frame) as one deletion-vector sidecar batch of (rel, ri) pairs under
+    ``_dv/``. Returns (sidecar ref, {file: rows marked}); when nothing
+    was marked the empty sidecar is removed and the counts are empty."""
+    root = path.rstrip("/")
+    ref = f"{_DV}/{uuid.uuid4().hex}"
+    rows.select(
+        _dv_rel_expr(F.col("_txlog_fp")).alias("rel"),
+        F.col("_txlog_ri").alias("ri"),
+    ).write.parquet(f"{root}/{ref}")
+    counts = {
+        r["rel"]: int(r["n"])
+        for r in spark.read.parquet(f"{root}/{ref}")
+        .groupBy("rel")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    if not counts:
+        _delete(spark, f"{root}/{ref}")
+    return ref, counts
 
 
 # --------------------------------------------------------------------------
@@ -3237,6 +3376,37 @@ def _bloomable_probes(schema_json: str, where_equals: dict) -> dict:
     return allowed
 
 
+def _file_pruner(manifest: dict, where: dict | None, where_equals: dict | None):
+    """``can_match(file)`` for a LOGICAL ``where`` / ``where_equals`` spec
+    over ``manifest``'s files: the one file-skip test of ``tx_read``, the
+    DML rewrites and their conflict checks, and the Python Data Source's
+    pushed filters. It prunes on range stats (plus the generated-column
+    bounds the spec implies), on bloom bitsets (a probe typed unlike its
+    column raises TypeError) and on hive partition values, with every
+    name mapped to the PHYSICAL one that stats, bitsets and partition
+    dirs are recorded under. A bound that cannot be ordered against a
+    stat tag raises TypeError from ``can_match``."""
+    schema = manifest["schema"]
+    mapping = _schema_mapping(schema)
+    where = _map_keys(_derive_generated_hints(manifest, where, where_equals), mapping)
+    probes = (
+        _map_keys(_bloomable_probes(schema, where_equals), mapping)
+        if where_equals
+        else None
+    )
+    equals = _map_keys(where_equals, mapping) if where_equals else None
+    part_types = _partition_types(schema)
+
+    def can_match(f: dict) -> bool:
+        return not (
+            (where and not _file_overlaps(f, where))
+            or (probes and _bloom_rejects(f, probes))
+            or (part_types and _partition_rejects(f, where, equals, part_types))
+        )
+
+    return can_match
+
+
 def _resolve_file(root: str, fpath: str) -> tuple[str, str]:
     """(full path, batch dir) for a manifest file entry. Entries are
     normally RELATIVE (``data/<batch>/...``); shallow clones reference the
@@ -3294,27 +3464,11 @@ def tx_read(
     if where_equals is not None and any(v is None for v in where_equals.values()):
         raise ValueError("where_equals probes must be non-null; use `where`")
     manifest = read_manifest(spark, path, cur, _listing=listing)
-    # predicates arrive LOGICAL; file stats/bloom keys are PHYSICAL —
-    # validate types against the logical schema, prune with physical keys
-    mapping = _schema_mapping(manifest["schema"])
-    bloom_probes = (
-        _map_keys(_bloomable_probes(manifest["schema"], where_equals), mapping)
-        if where_equals
-        else None
-    )
-    # file-skip hints include derived generated-column bounds; the
-    # row-level filters below stay on the ORIGINAL predicate columns
-    p_where = _map_keys(
-        _derive_generated_hints(manifest, where, where_equals), mapping
-    )
-    part_types = _partition_types(manifest["schema"])
-    p_equals = _map_keys(where_equals, mapping) if where_equals else None
-    kept = [
-        f
-        for f in manifest["files"]
-        if _file_can_match(f, p_where, bloom_probes, part_types, p_equals)
-    ]
+    # the row-level filters below stay on the ORIGINAL predicate columns
+    can_match = _file_pruner(manifest, where, where_equals)
+    kept = [f for f in manifest["files"] if can_match(f)]
     out = _read_files(spark, path, kept, manifest["schema"])
+    mapping = _schema_mapping(manifest["schema"])
     # project onto the schema whenever the files carry anything else:
     # renamed physicals (mapping), dormant dropped columns (the files
     # keep a dropped column's data; the snapshot must not serve it), OR
@@ -3548,6 +3702,22 @@ def _merge_apply_clauses(
     return joined.filter(keep).select(*(value_of(c) for c in tgt_cols))
 
 
+def _partition_key(f: dict) -> tuple:
+    """A manifest entry's hive partition as a hashable key."""
+    return tuple(sorted(f["partition"].items()))
+
+
+def _touched_partitions(
+    source: DataFrame, partition_by: list[str], mapping: dict[str, str]
+) -> set[tuple]:
+    """The partition keys (:func:`_partition_key`: PHYSICAL names,
+    path-encoded values) that ``source``'s rows fall into."""
+    return {
+        tuple(sorted((mapping.get(k, k), _hive_enc(r[k])) for k in partition_by))
+        for r in source.select(*partition_by).distinct().collect()
+    }
+
+
 def tx_merge(
     spark: SparkSession,
     source: DataFrame,
@@ -3680,26 +3850,12 @@ def tx_merge(
     prunable = bool(partition_by) and all(
         c in source.columns for c in partition_by or []
     )
-    touched_sets: set[tuple] | None = None
+    touched: set[tuple] | None = None
+    read: set[str] = set()
     if prunable and not global_replace:
-        touched = [
-            r.asDict()
-            for r in source.select(*partition_by).distinct().collect()
-        ]
-        # partition dict keys in manifests are PHYSICAL names
-        touched_sets = {
-            tuple(
-                sorted(
-                    (mapping.get(k, k), _hive_enc(t[k]))
-                    for k in partition_by
-                )
-            )
-            for t in touched
-        }
+        touched = _touched_partitions(source, partition_by, mapping)
         touched_files = [
-            f
-            for f in manifest0["files"]
-            if tuple(sorted(f["partition"].items())) in touched_sets
+            f for f in manifest0["files"] if _partition_key(f) in touched
         ]
         slice_df = (
             _read_files(spark, path, touched_files, manifest0["schema"])
@@ -3710,7 +3866,7 @@ def tx_merge(
             # always project onto the schema: covers renamed physicals AND
             # dormant dropped columns in the raw files
             slice_df = _to_logical(slice_df, manifest0["schema"])
-        base_touched_paths = {f["path"] for f in touched_files}
+        read = {f["path"] for f in touched_files}
     else:
         slice_df = tx_read(spark, path, cur)
 
@@ -3781,56 +3937,13 @@ def tx_merge(
     )
     schema_json = manifest0["schema"] if mapped else merged.schema.json()
 
-    def build(now: int | None) -> dict:
-        if prunable and not global_replace:
-            now_files = (
-                read_manifest(spark, path, now)["files"] if now is not None else []
-            )
-            now_touched = {
-                f["path"]
-                for f in now_files
-                if tuple(sorted(f["partition"].items())) in touched_sets
-            }
-            if now_touched != base_touched_paths:
-                raise TxConflictError(
-                    f"merge at {path}: touched partitions changed "
-                    f"concurrently (base v{cur}, now v{now})"
-                )
-            # untouched partitions stay in place — the delta removes only
-            # the touched partitions' files and adds their replacements
-            return {
-                "op": "merge",
-                "schema": schema_json,
-                "add": new_files,
-                "remove": sorted(now_touched),
-                "truncate": False,
-                **_id_extra(now),
-            }
-        if now != cur:
-            raise TxConflictError(
-                f"merge at {path}: table changed concurrently "
-                f"(base v{cur}, now v{now})"
-            )
-        return {
-            "op": "merge",
-            "schema": schema_json,
-            "add": new_files,
-            "remove": [],
-            "truncate": True,
-            **_id_extra(now),
-        }
-
-    def _id_extra(now: int | None) -> dict:
+    def _id_extra(snap: dict) -> dict:
         # advance identity marks past explicit values the merge landed
         # (from the recorded file stats), re-based per attempt against the
         # snapshot current at that moment
         if not id_stats:
             return {}
-        nowm = (
-            read_manifest(spark, path, now).get("identity", {})
-            if now is not None
-            else {}
-        )
+        nowm = snap.get("identity", {})
         return {
             "identity": _identity_marks_from_stats(
                 {c: idents[c] for c in id_stats}, new_files, mapping,
@@ -3838,14 +3951,13 @@ def tx_merge(
             )
         }
 
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        # the failed attempt's batch is unreferenced; reap it now rather
-        # than waiting for vacuum
-        for f in new_files:
-            _delete(spark, f"{path.rstrip('/')}/{f['path']}")
-        raise
+    # the merged slice replaces exactly the touched partitions; untouched
+    # partitions stay in place. Unpruned, it replaces the whole table.
+    return _commit_rewrite(
+        spark, path, manifest0, "merge", read, new_files,
+        schema=schema_json, overlaps=touched, truncate=touched is None,
+        extra=_id_extra,
+    )
 
 
 def _dv_merge(
@@ -3869,29 +3981,16 @@ def _dv_merge(
     mapping = _schema_mapping(manifest["schema"])
     mapped = not _mapping_is_identity(mapping)
     partition_by = _partition_default(manifest, partition_by)
-    if partition_by:
-        touched = [
-            r.asDict()
-            for r in source.select(*partition_by).distinct().collect()
-        ]
-        touched_sets = {
-            tuple(
-                sorted(
-                    (mapping.get(k, k), _hive_enc(t[k]))
-                    for k in partition_by
-                )
-            )
-            for t in touched
-        }
-        cand = [
-            f
-            for f in manifest["files"]
-            if tuple(sorted(f["partition"].items())) in touched_sets
-        ]
-    else:
-        touched_sets = None
-        cand = manifest["files"]
-    base_cand_paths = {f["path"] for f in cand}
+    touched = (
+        _touched_partitions(source, partition_by, mapping)
+        if partition_by
+        else None
+    )
+    cand = [
+        f
+        for f in manifest["files"]
+        if touched is None or _partition_key(f) in touched
+    ]
 
     tgt_cols = [
         fld["name"] for fld in json.loads(manifest["schema"])["fields"]
@@ -3915,80 +4014,16 @@ def _dv_merge(
     if mapped:
         winners = _to_physical(winners, mapping)
 
-    root = path.rstrip("/")
-    batch = uuid.uuid4().hex
-    dv_ref = f"{_DV}/{batch}"
-    counts: dict[str, int] = {}
-    if matched is not None:
-        pairs = matched.select(
-            _dv_rel_expr(F.col("_txlog_fp")).alias("rel"),
-            F.col("_txlog_ri").alias("ri"),
-        )
-        pairs.write.parquet(f"{root}/{dv_ref}")
-        counts = {
-            r["rel"]: int(r["n"])
-            for r in spark.read.parquet(f"{root}/{dv_ref}")
-            .groupBy("rel")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        if not counts:  # pure-insert merge: no sidecar needed
-            _delete(spark, f"{root}/{dv_ref}")
+    # a pure-insert merge marks nothing: its sidecar is removed
+    dv = _write_dv(spark, path, matched) if matched is not None else None
     _, new_files = _write_batch(
         winners, path, _map_names(partition_by, mapping), None
     )
-
-    def build(now: int | None) -> dict:
-        now_manifest = (
-            read_manifest(spark, path, now) if now is not None else {}
-        )
-        now_files = now_manifest.get("files", [])
-        if touched_sets is not None:
-            now_cand = {
-                f["path"]
-                for f in now_files
-                if tuple(sorted(f["partition"].items())) in touched_sets
-            }
-            if now_cand != base_cand_paths:
-                raise TxConflictError(
-                    f"merge at {path}: touched partitions changed "
-                    f"concurrently (base v{cur}, now v{now})"
-                )
-        elif now != cur:
-            raise TxConflictError(
-                f"merge at {path}: table changed concurrently "
-                f"(base v{cur}, now v{now})"
-            )
-        now_by = {f["path"]: f for f in now_files}
-        add_entries = []
-        for rel, n in sorted(counts.items()):
-            entry = dict(now_by[rel])
-            entry["dv"] = list(entry.get("dv", ())) + [dv_ref]
-            entry["dv_count"] = int(entry.get("dv_count", 0)) + n
-            add_entries.append(entry)
-        rec = {
-            "op": "merge",
-            "schema": manifest["schema"],
-            "add": add_entries + new_files,
-            "remove": [],
-            "truncate": False,
-        }
-        if counts:  # this merge soft-deletes via a DV sidecar
-            rec["protocol"] = _protocol_with(
-                now_manifest.get("protocol"),
-                reader=(FEATURE_DELETION_VECTORS,),
-                writer=(FEATURE_DELETION_VECTORS,),
-            )
-        return rec
-
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        if counts:
-            _delete(spark, f"{root}/{dv_ref}")
-        for f in new_files:
-            _delete(spark, f"{root}/{f['path']}")
-        raise
+    # unpartitioned, any concurrent commit conflicts
+    return _commit_rewrite(
+        spark, path, manifest, "merge", {f["path"] for f in cand}, new_files,
+        dv=dv, overlaps=touched, exclusive=touched is None,
+    )
 
 
 def _precedence_pick(
@@ -4557,134 +4592,66 @@ def tx_compact(
     packed or clustered), every other partition's files carry forward
     by reference, and the CAS conflict check guards only the touched
     set."""
-    if partition_where:
-        return _compact_scoped(
-            spark, path, partition_where, n_files, stats_for, bloom_for,
-            cluster_by, zorder, small_bytes,
+    if small_bytes is not None and cluster_by:
+        raise ValueError(
+            "small_bytes (incremental OPTIMIZE) cannot cluster — "
+            "clustering is a global re-sort; run them separately"
         )
-    if small_bytes is not None:
-        if cluster_by:
-            raise ValueError(
-                "small_bytes (incremental OPTIMIZE) cannot cluster — "
-                "clustering is a global re-sort; run them separately"
-            )
-        return _compact_small(
-            spark, path, partition_by, n_files, stats_for, bloom_for,
-            small_bytes,
+    if partition_where or small_bytes is not None:
+        return _compact_files(
+            spark, path, partition_where, partition_by, n_files, stats_for,
+            bloom_for, cluster_by, zorder, small_bytes,
         )
     _curv = current_version(spark, path)
     if _curv is not None:  # OPTIMIZE preserves the table's hive layout
         partition_by = _partition_default(
             read_manifest(spark, path, _curv), partition_by
         )
-    df = tx_read(spark, path)
-    if cluster_by:
-        if zorder and len(cluster_by) >= 2:
-            df = df.withColumn("_zkey", _zorder_key(df, cluster_by))
-            df = (
-                df.repartitionByRange(n_files, F.col("_zkey"))
-                if n_files
-                else df.repartitionByRange(F.col("_zkey"))
-            ).sortWithinPartitions("_zkey").drop("_zkey")
-        else:
-            cols = [F.col(c) for c in cluster_by]
-            df = (
-                df.repartitionByRange(n_files, *cols)
-                if n_files
-                else df.repartitionByRange(*cols)
-            ).sortWithinPartitions(*cols)
-        stats_for = sorted(set(stats_for or []) | set(cluster_by))
-    elif n_files:
-        df = (
-            df.repartition(n_files, *partition_by)
-            if partition_by
-            else df.repartition(n_files)
-        )
+    df, stats_for = _layout(
+        tx_read(spark, path), partition_by, n_files, stats_for, cluster_by,
+        zorder,
+    )
     return tx_write(
         spark, df, path, partition_by=partition_by, mode="overwrite",
         stats_for=stats_for, bloom_for=bloom_for,
     )
 
 
-def _compact_small(
-    spark: SparkSession,
-    path: str,
+def _layout(
+    df: DataFrame,
     partition_by: list[str] | None,
     n_files: int | None,
     stats_for: list[str] | None,
-    bloom_for: list[str] | None,
-    small_bytes: int,
-) -> int:
-    """Incremental OPTIMIZE: rewrite only the under-threshold files (plus
-    DV'd or unsized entries), carry every right-sized file forward by
-    reference. Conflict contract: the rewritten read set must survive to
-    commit time (a concurrent commit touching any of those files raises
-    TxConflictError); files added concurrently are re-carried from the
-    winner's manifest and commit fine."""
-    cur = current_version(spark, path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    manifest = read_manifest(spark, path, cur)
-    # incremental OPTIMIZE stays in PHYSICAL space end-to-end (it reads
-    # raw files and rewrites them unchanged) — only the user-facing
-    # column params need translation
-    mapping = _schema_mapping(manifest["schema"])
-    stats_for, bloom_for = _skipping_defaults(
-        manifest.get("properties", {}), stats_for, bloom_for
-    )
-    # rewrites stay INSIDE the table's hive layout: an unpartitioned
-    # rewrite would escape dynamic-overwrite remove sets and pruning
-    partition_by = _partition_default(manifest, partition_by)
-    partition_by = _map_names(partition_by, mapping)
-    stats_for = _map_names(stats_for, mapping)
-    bloom_for = _map_names(bloom_for, mapping)
-    small = [
-        f
-        for f in manifest["files"]
-        if f.get("dv") or f.get("bytes") is None or f["bytes"] < small_bytes
-    ]
-    if len(small) <= 1 and not any(f.get("dv") for f in small):
-        return cur  # nothing to bin-pack
-    df = _read_files(spark, path, small, manifest["schema"])
-    if n_files:
+    cluster_by: list[str] | None,
+    zorder: bool,
+) -> tuple[DataFrame, list[str] | None]:
+    """OPTIMIZE's output layout: ``df`` clustered on ``cluster_by``
+    (range-partitioned and sorted; on the Morton key with ``zorder`` and
+    ≥ 2 columns), else re-binned into ``n_files`` per partition. Returns
+    the frame and ``stats_for`` widened by the clustered columns."""
+    if cluster_by:
+        zkey = zorder and len(cluster_by) >= 2
+        if zkey:
+            df = df.withColumn("_zkey", _zorder_key(df, cluster_by))
+        cols = [F.col("_zkey")] if zkey else [F.col(c) for c in cluster_by]
         df = (
-            df.repartition(n_files, *partition_by)
-            if partition_by
-            else df.repartition(n_files)
-        )
-    _, new_files = _write_batch(df, path, partition_by, stats_for, bloom_for)
-    small_paths = {f["path"] for f in small}
-
-    def build(now: int | None) -> dict:
-        now_files = (
-            read_manifest(spark, path, now)["files"] if now is not None else []
-        )
-        now_paths = {f["path"] for f in now_files}
-        if small_paths - now_paths:
-            raise TxConflictError(
-                f"compact at {path}: files in the read set were removed "
-                f"concurrently (base v{cur}, now v{now})"
-            )
-        return {
-            "op": "compact",
-            "schema": manifest["schema"],
-            "add": new_files,
-            "remove": sorted(small_paths),
-            "truncate": False,
-        }
-
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        for f in new_files:
-            _delete(spark, f"{path.rstrip('/')}/{f['path']}")
-        raise
+            df.repartitionByRange(n_files, *cols)
+            if n_files
+            else df.repartitionByRange(*cols)
+        ).sortWithinPartitions(*cols)
+        if zkey:
+            df = df.drop("_zkey")
+        return df, sorted(set(stats_for or []) | set(cluster_by))
+    if n_files:
+        df = df.repartition(n_files, *(partition_by or []))
+    return df, stats_for
 
 
-def _compact_scoped(
+def _compact_files(
     spark: SparkSession,
     path: str,
-    partition_where: dict,
+    partition_where: dict | None,
+    partition_by: list[str] | None,
     n_files: int | None,
     stats_for: list[str] | None,
     bloom_for: list[str] | None,
@@ -4692,115 +4659,77 @@ def _compact_scoped(
     zorder: bool,
     small_bytes: int | None,
 ) -> int:
-    """Partition-scoped OPTIMIZE (Delta's ``OPTIMIZE t WHERE part = v``):
-    bin-pack or re-cluster ONLY the partitions matching the equality
-    spec; every other partition's files carry forward by reference and
-    the CAS conflict check guards just the touched set. The 100 TB
-    maintenance shape — the hot partition compacts daily, the table
-    never rewrites."""
+    """Incremental and partition-scoped OPTIMIZE: rewrite only the files
+    in scope and carry every other file forward by reference.
+
+    ``small_bytes`` (Delta's bin-packing) scopes to files SMALLER than
+    the threshold, plus any file carrying a DV or predating size stamps
+    (both must materialize). ``partition_where`` (Delta's ``OPTIMIZE t
+    WHERE part = v``) scopes to the partitions matching an equality spec
+    on partition columns; the hot partition compacts daily, the table
+    never rewrites. Both combine.
+
+    Incremental OPTIMIZE stays in PHYSICAL space end to end (it reads raw
+    files and rewrites them unchanged); only the user-facing column
+    params are translated. Conflict contract: the rewritten read set must
+    survive to commit time; files added concurrently are carried from the
+    winner's manifest and commit fine."""
     cur = current_version(spark, path)
     if cur is None:
         raise FileNotFoundError(f"no committed version at {path}")
     manifest = read_manifest(spark, path, cur)
     mapping = _schema_mapping(manifest["schema"])
-    partition_by = _partition_default(manifest, None)
-    if not partition_by:
-        raise ValueError(
-            f"compact at {path}: partition_where on an unpartitioned "
-            "table — drop the WHERE or partition the table"
-        )
-    bad = sorted(set(partition_where) - set(partition_by))
-    if bad:
-        raise ValueError(
-            f"compact at {path}: partition_where names non-partition "
-            f"column(s) {bad} (partition columns: {partition_by})"
-        )
-    probe = {
-        mapping.get(k, k): _hive_enc(v) for k, v in partition_where.items()
-    }
-    in_scope = [
-        f
-        for f in manifest["files"]
-        if all(f["partition"].get(k) == v for k, v in probe.items())
-    ]
-    if small_bytes is not None:
-        if cluster_by:
+    # rewrites stay INSIDE the table's hive layout: an unpartitioned
+    # rewrite would escape dynamic-overwrite remove sets and pruning
+    partition_by = _partition_default(
+        manifest, None if partition_where else partition_by
+    )
+    files = manifest["files"]
+    if partition_where:
+        if not partition_by:
             raise ValueError(
-                "small_bytes (incremental OPTIMIZE) cannot cluster — "
-                "clustering is a global re-sort; run them separately"
+                f"compact at {path}: partition_where on an unpartitioned "
+                "table — drop the WHERE or partition the table"
             )
-        in_scope = [
+        bad = sorted(set(partition_where) - set(partition_by))
+        if bad:
+            raise ValueError(
+                f"compact at {path}: partition_where names non-partition "
+                f"column(s) {bad} (partition columns: {partition_by})"
+            )
+        probe = {
+            mapping.get(k, k): _hive_enc(v) for k, v in partition_where.items()
+        }
+        files = [
             f
-            for f in in_scope
+            for f in files
+            if all(f["partition"].get(k) == v for k, v in probe.items())
+        ]
+    if small_bytes is not None:
+        files = [
+            f
+            for f in files
             if f.get("dv") or f.get("bytes") is None or f["bytes"] < small_bytes
         ]
-        if len(in_scope) <= 1 and not any(f.get("dv") for f in in_scope):
-            return cur
-    elif not in_scope:
+        if len(files) <= 1 and not any(f.get("dv") for f in files):
+            return cur  # nothing to bin-pack
+    if not files:
         return cur
     stats_for, bloom_for = _skipping_defaults(
         manifest.get("properties", {}), stats_for, bloom_for
     )
-    w_partition_by = _map_names(partition_by, mapping)
-    w_stats = _map_names(stats_for, mapping)
-    w_bloom = _map_names(bloom_for, mapping)
-    df = _read_files(spark, path, in_scope, manifest["schema"])
-    if cluster_by:
-        ccols = _map_names(cluster_by, mapping)
-        if zorder and len(ccols) >= 2:
-            df = df.withColumn("_zkey", _zorder_key(df, ccols))
-            df = (
-                df.repartitionByRange(n_files, F.col("_zkey"))
-                if n_files
-                else df.repartitionByRange(F.col("_zkey"))
-            ).sortWithinPartitions("_zkey").drop("_zkey")
-        else:
-            cols = [F.col(c) for c in ccols]
-            df = (
-                df.repartitionByRange(n_files, *cols)
-                if n_files
-                else df.repartitionByRange(*cols)
-            ).sortWithinPartitions(*cols)
-        w_stats = sorted(set(w_stats or []) | set(ccols))
-    elif n_files:
-        df = df.repartition(n_files, *w_partition_by)
-    _, new_files = _write_batch(df, path, w_partition_by, w_stats, w_bloom)
-    scope_paths = {f["path"] for f in in_scope}
-
-    def build(now: int | None) -> dict:
-        now_files = (
-            read_manifest(spark, path, now)["files"] if now is not None else []
-        )
-        if scope_paths - {f["path"] for f in now_files}:
-            raise TxConflictError(
-                f"compact at {path}: scoped files were removed "
-                f"concurrently (base v{cur}, now v{now})"
-            )
-        return {
-            "op": "compact",
-            "schema": manifest["schema"],
-            "add": new_files,
-            "remove": sorted(scope_paths),
-            "truncate": False,
-        }
-
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        for f in new_files:
-            _delete(spark, f"{path.rstrip('/')}/{f['path']}")
-        raise
-
-
-def _split_files_by_range(
-    manifest: dict, where: dict[str, tuple]
-) -> tuple[list[dict], list[dict]]:
-    """(possibly-affected, provably-untouched) file partition by the stats
-    ranges — the same skip test reads use, applied to DML."""
-    hit, miss = [], []
-    for f in manifest["files"]:
-        (hit if _file_overlaps(f, where) else miss).append(f)
-    return hit, miss
+    partition_by = _map_names(partition_by, mapping)
+    df, stats_for = _layout(
+        _read_files(spark, path, files, manifest["schema"]), partition_by,
+        n_files, _map_names(stats_for, mapping), _map_names(cluster_by, mapping),
+        zorder,
+    )
+    _, new_files = _write_batch(
+        df, path, partition_by, stats_for, _map_names(bloom_for, mapping)
+    )
+    return _commit_rewrite(
+        spark, path, manifest, "compact", {f["path"] for f in files}, new_files
+    )
 
 
 def _dv_rel_expr(fp_col):
@@ -4812,27 +4741,43 @@ def _dv_rel_expr(fp_col):
     return F.regexp_extract(fp_col, "^.*/(data/[0-9a-f]{32}/.+)$", 1)
 
 
+def _scan_batches(
+    spark: SparkSession, path: str, files: list[dict], with_position: bool = False
+):
+    """The raw rows of ``files`` (no DVs applied), one ``basePath`` read
+    per batch dir so partition columns are recovered from the paths,
+    unioned by name; with ``with_position`` each row keeps its physical
+    position as ``_txlog_fp``/``_txlog_ri``. None for no files."""
+    root = path.rstrip("/")
+    by_batch: dict[str, list[str]] = {}
+    for f in files:
+        full, bd = _resolve_file(root, f["path"])
+        by_batch.setdefault(bd, []).append(full)
+    out = None
+    for bd, fl in sorted(by_batch.items()):
+        part = spark.read.option("basePath", bd).parquet(*sorted(fl))
+        if with_position:
+            part = part.select(
+                "*",
+                F.col("_metadata.file_path").alias("_txlog_fp"),
+                F.col("_metadata.row_index").alias("_txlog_ri"),
+            )
+        out = (
+            part
+            if out is None
+            else out.unionByName(part, allowMissingColumns=True)
+        )
+    return out
+
+
 def _read_files(spark: SparkSession, path: str, files: list[dict], schema_json: str):
     """The LIVE rows of the given manifest entries: per-batch basePath
     reads unioned by name, with deletion-vector entries anti-joined
     against their DV sidecars on (file, row_index) — every internal
     consumer (snapshot read, DML rewrite, MERGE, compaction) sees
     DV-deleted rows as gone, so a rewrite can never resurrect them."""
-    root = path.rstrip("/")
-    plain = [f for f in files if not f.get("dv")]
+    out = _scan_batches(spark, path, [f for f in files if not f.get("dv")])
     dved = [f for f in files if f.get("dv")]
-    by_batch: dict[str, list[str]] = {}
-    for f in plain:
-        full, bd = _resolve_file(root, f["path"])
-        by_batch.setdefault(bd, []).append(full)
-    out = None
-    for bd, fl in sorted(by_batch.items()):
-        part = spark.read.option("basePath", bd).parquet(*sorted(fl))
-        out = (
-            part
-            if out is None
-            else out.unionByName(part, allowMissingColumns=True)
-        )
     if dved:
         live = _read_files_with_position(spark, path, dved).drop(
             "_txlog_fp", "_txlog_ri"
@@ -4886,51 +4831,39 @@ def _merge_range(where: dict, col: str, lo, hi) -> bool:
     return True
 
 
-def _file_can_match(
-    f: dict,
-    where: dict,
-    where_equals: dict,
-    part_types: dict | None = None,
-    part_equals: dict | None = None,
-) -> bool:
-    """The one file-skip test of ``tx_read``, the DML rewrites and the
-    Python Data Source's pushed filters: range stats, bloom, and —
-    when ``part_types`` is given — hive partition values (``where`` may
-    carry derived generated-column hints; ``part_equals`` is the full
-    equality probe set, wider than the bloom-eligible subset)."""
-    if where and not _file_overlaps(f, where):
-        return False
-    if where_equals and _bloom_rejects(f, where_equals):
-        return False
-    if part_types and _partition_rejects(f, where, part_equals, part_types):
-        return False
-    return True
+class _DmlScope(NamedTuple):
+    """What a DELETE / UPDATE / REPLACE WHERE acts on (see
+    :func:`_dml_scope`); write-side column lists are PHYSICAL."""
+
+    manifest: dict
+    mapping: dict[str, str]
+    partition_by: list[str] | None
+    stats_for: list[str] | None
+    bloom_for: list[str] | None
+    hit: list[dict]  # the files whose stats, bitsets or partition can match
+    cond: "F.Column"  # the row-level predicate, over physical names
+    can_match: Callable[[dict], bool]  # the pruner; also the append test
 
 
-def _dml_rewrite(
+def _dml_scope(
     spark: SparkSession,
     path: str,
-    where: dict[str, tuple],
-    transform,
     op: str,
+    where: dict[str, tuple] | None,
+    where_equals: dict | None,
+    condition,
     partition_by: list[str] | None,
     stats_for: list[str] | None,
-    where_equals: dict | None = None,
-    bloom_for: list[str] | None = None,
-    condition=None,
-    insert_df: DataFrame | None = None,
-) -> int:
-    """Shared DELETE/UPDATE machinery: rewrite only the files whose stats
-    ranges (and bloom bitsets, for equality predicates) can match the
-    predicate; every other file is carried forward by reference (Delta's
-    file-pruned DML). ``transform(df, cond)`` produces the rewritten
-    content of the affected files. A free-form ``condition`` joins the
-    row-level predicate but contributes NO pruning — with no structured
-    spec beside it, every live file is a rewrite candidate (documented:
-    sargable conjuncts belong in where/where_equals). ``insert_df``
-    (LOGICAL names, table schema) is written as an additional batch in
-    the SAME commit — the replaceWhere shape: delete-matching + insert,
-    atomic."""
+    bloom_for: list[str] | None,
+) -> _DmlScope:
+    """Resolve the snapshot a DML statement acts on ONCE: the latest
+    manifest and its column mapping, the files the predicate can touch
+    (stats ranges, bloom bitsets, partition values and derived
+    generated-column bounds; every other file carries forward by
+    reference — Delta's file-pruned DML), and the row predicate. A
+    free-form ``condition`` joins the row-level predicate but contributes
+    NO pruning — with no structured spec beside it, every live file is a
+    candidate (sargable conjuncts belong in where/where_equals)."""
     where = where or {}
     where_equals = where_equals or {}
     if not where and not where_equals and condition is None:
@@ -4946,113 +4879,71 @@ def _dml_rewrite(
     # predicates arrive logical; stats/bloom/file columns are physical
     mapping = _schema_mapping(manifest["schema"])
     _check_condition_mapping(condition, mapping)
-    bloom_probes = _map_keys(
-        _bloomable_probes(manifest["schema"], where_equals), mapping
-    )
-    # file-skip hints: the predicate's own ranges PLUS derived
-    # generated-column bounds (logical names — derive before mapping);
-    # the ROW-level predicate below stays the original
-    prune_where = _map_keys(
-        _derive_generated_hints(manifest, where, where_equals), mapping
-    )
-    part_types = _partition_types(manifest["schema"])
-    where = _map_keys(where, mapping)
-    where_equals = _map_keys(where_equals, mapping)
+    can_match = _file_pruner(manifest, where, where_equals)
     stats_for, bloom_for = _skipping_defaults(
         manifest.get("properties", {}), stats_for, bloom_for
     )
     # rewrites stay INSIDE the table's hive layout: an unpartitioned
     # rewrite would escape dynamic-overwrite remove sets and pruning
-    partition_by = _partition_default(manifest, partition_by)
-    partition_by = _map_names(partition_by, mapping)
-    stats_for = _map_names(stats_for, mapping)
-    bloom_for = _map_names(bloom_for, mapping)
-    hit, miss = [], []
-    for f in manifest["files"]:
-        (
-            hit
-            if _file_can_match(
-                f, prune_where, bloom_probes, part_types, where_equals
-            )
-            else miss
-        ).append(f)
-    if not hit and insert_df is None:
-        return cur  # nothing can match — no new version needed
-
-    cond = _dml_predicate(
-        where, where_equals, condition,
-        {c: part_types.get(c) for c in partition_by or ()},
+    partition_by = _map_names(_partition_default(manifest, partition_by), mapping)
+    part_types = _partition_types(manifest["schema"])
+    return _DmlScope(
+        manifest, mapping, partition_by,
+        _map_names(stats_for, mapping), _map_names(bloom_for, mapping),
+        [f for f in manifest["files"] if can_match(f)],
+        _dml_predicate(
+            _map_keys(where, mapping), _map_keys(where_equals, mapping),
+            condition, {c: part_types.get(c) for c in partition_by or ()},
+        ),
+        can_match,
     )
 
+
+def _dml_rewrite(
+    spark: SparkSession,
+    path: str,
+    scope: _DmlScope,
+    transform,
+    op: str,
+    insert_df: DataFrame | None = None,
+) -> int:
+    """DELETE/UPDATE by copy-on-write: ``transform(df, cond, mapping)``
+    produces the rewritten content of the scope's hit files, which the
+    commit swaps in for them. ``insert_df`` (LOGICAL names, table schema)
+    is written as an additional batch in the SAME commit — the
+    replaceWhere shape: delete-matching + insert, atomic."""
+    manifest, mapping = scope.manifest, scope.mapping
+    if not scope.hit and insert_df is None:
+        return manifest["version"]  # nothing can match — no new version
+    stored = _write_invariants(manifest.get("properties", {}))
+
+    def write(df: DataFrame) -> list[dict]:
+        return _write_batch(
+            df, path, scope.partition_by, scope.stats_for, scope.bloom_for
+        )[1]
+
     new_files: list[dict] = []
-    if hit:
-        affected = _read_files(spark, path, hit, manifest["schema"])
-        rewritten = transform(affected, cond, mapping)
-        if op == "update":  # a delete can only remove rows, never violate
-            stored = _write_invariants(manifest.get("properties", {}))
-            if stored:
-                # constraint exprs are written (and validated at add time)
-                # against LOGICAL names; the rewritten frame carries physical
-                # names. A constraint added after a rename would fail to bind —
-                # or, after rename-then-re-add, silently bind a dormant
-                # physical name of a DIFFERENT column — so enforce on the
-                # logical projection, exactly the frame tx_read would serve.
-                _enforce_checks(
-                    _to_logical(rewritten, manifest["schema"]), stored
-                )
-        _, batch = _write_batch(
-            rewritten, path, partition_by, stats_for, bloom_for
-        )
-        new_files.extend(batch)
+    if scope.hit:
+        affected = _read_files(spark, path, scope.hit, manifest["schema"])
+        rewritten = transform(affected, scope.cond, mapping)
+        if op == "update" and stored:
+            # a delete can only remove rows, never violate. Constraint
+            # exprs are written (and validated at add time) against
+            # LOGICAL names; the rewritten frame carries physical names. A
+            # constraint added after a rename would fail to bind — or,
+            # after rename-then-re-add, silently bind a dormant physical
+            # name of a DIFFERENT column — so enforce on the logical
+            # projection, exactly the frame tx_read would serve.
+            _enforce_checks(_to_logical(rewritten, manifest["schema"]), stored)
+        new_files += write(rewritten)
     if insert_df is not None:
-        stored = _write_invariants(manifest.get("properties", {}))
         if stored:  # inserted rows bind constraints like any write
             _enforce_checks(insert_df, stored)
-        _, batch = _write_batch(
-            _to_physical(insert_df, mapping), path,
-            partition_by, stats_for, bloom_for,
-        )
-        new_files.extend(batch)
-    hit_paths = {f["path"] for f in hit}
-    base_paths = hit_paths | {f["path"] for f in miss}
-
-    def build(now: int | None) -> dict:
-        now_files = (
-            read_manifest(spark, path, now)["files"] if now is not None else []
-        )
-        now_paths = {f["path"] for f in now_files}
-        if hit_paths - now_paths:
-            # a concurrent commit rewrote/removed files whose rows we
-            # rewrote — committing would resurrect their pre-images
-            raise TxConflictError(
-                f"{op} at {path}: files in the read set were removed "
-                f"concurrently (base v{cur}, now v{now})"
-            )
-        added = [f for f in now_files if f["path"] not in base_paths]
-        if any(
-            _file_can_match(f, prune_where, bloom_probes, part_types, where_equals)
-            for f in added
-        ):
-            # concurrently appended rows may match the predicate; this
-            # rewrite never saw them (Delta's ConcurrentAppendException)
-            raise TxConflictError(
-                f"{op} at {path}: concurrent append overlaps the "
-                f"predicate (base v{cur}, now v{now})"
-            )
-        return {
-            "op": op,
-            "schema": manifest["schema"],
-            "add": new_files,
-            "remove": sorted(hit_paths),
-            "truncate": False,
-        }
-
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        for f in new_files:
-            _delete(spark, f"{path.rstrip('/')}/{f['path']}")
-        raise
+        new_files += write(_to_physical(insert_df, mapping))
+    return _commit_rewrite(
+        spark, path, manifest, op, {f["path"] for f in scope.hit}, new_files,
+        overlaps=scope.can_match,
+    )
 
 
 def _dml_predicate(
@@ -5132,17 +5023,16 @@ def tx_delete(
     through the DV (compaction materializes it away); ``tx_vacuum`` reaps
     unreferenced sidecars. The trade: each read of a DV'd file pays the
     (file, row_index) anti-join until compaction."""
+    scope = _dml_scope(
+        spark, path, "delete", where, where_equals, condition,
+        partition_by, stats_for, bloom_for,
+    )
     if use_dv:
-        return _dv_dml(
-            spark, path, where, where_equals=where_equals,
-            condition=condition,
-        )
+        return _dv_dml(spark, path, scope)
     return _dml_rewrite(
-        spark, path, where,
+        spark, path, scope,
         lambda df, cond, _m: df.filter(~F.coalesce(cond, F.lit(False))),
-        "delete", partition_by, stats_for,
-        where_equals=where_equals, bloom_for=bloom_for,
-        condition=condition,
+        "delete",
     )
 
 
@@ -5174,10 +5064,12 @@ def tx_replace_where(
     (those fill through ``tx_write``'s INSERT path — run the replace as
     DELETE + INSERT when you need them); CHECK constraints are enforced
     on both the rewritten and the inserted rows."""
-    cur = current_version(spark, path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    manifest = read_manifest(spark, path, cur)
+    # the column checks and the rewrite see one snapshot
+    scope = _dml_scope(
+        spark, path, "replace_where", where, where_equals, condition,
+        partition_by, stats_for, bloom_for,
+    )
+    manifest = scope.manifest
     props = manifest.get("properties", {})
     special = (
         set(_column_defaults(props))
@@ -5211,112 +5103,40 @@ def tx_replace_where(
             "(Delta's replaceWhere contract)"
         )
     return _dml_rewrite(
-        spark, path, where or {},
+        spark, path, scope,
         lambda d, cond, _m: d.filter(~F.coalesce(cond, F.lit(False))),
-        "replace_where", partition_by, stats_for,
-        where_equals=where_equals, bloom_for=bloom_for,
-        condition=condition, insert_df=df.select(*tbl_cols),
+        "replace_where", insert_df=df.select(*tbl_cols),
     )
 
 
 def _dv_dml(
-    spark: SparkSession,
-    path: str,
-    where: dict[str, tuple] | None,
-    where_equals: dict | None = None,
-    assignments: dict | None = None,
-    partition_by: list[str] | None = None,
-    stats_for: list[str] | None = None,
-    bloom_for: list[str] | None = None,
-    condition=None,
+    spark: SparkSession, path: str, scope: _DmlScope, assignments: dict | None = None
 ) -> int:
-    """DELETE/UPDATE via deletion vectors: compute the matching
-    (file, row_index) pairs among the LIVE rows of the prunable files
-    (prior DVs applied, so counts are exact and never double-marked),
-    write them as one parquet sidecar batch, and commit updated entries
-    that reference it — touched files' contents stay untouched. With
-    ``assignments`` (UPDATE), the matching rows' POST-images are appended
-    as a fresh data batch in the SAME commit (Delta's DV update: old image
-    soft-deleted, new image appended). Concurrency contract matches the
-    rewrite path: the read set must survive, and a concurrent append
-    overlapping the predicate conflicts."""
+    """DELETE/UPDATE via deletion vectors: mark the matching
+    (file, row_index) pairs among the LIVE rows of the scope's hit files
+    (prior DVs applied, so counts are exact and never double-marked) in
+    one sidecar batch, and commit updated entries that reference it —
+    touched files' contents stay untouched. With ``assignments``
+    (UPDATE), the matching rows' POST-images are appended as a fresh data
+    batch in the SAME commit (Delta's DV update: old image soft-deleted,
+    new image appended). Concurrency contract matches the rewrite path:
+    the read set must survive, and a concurrent append overlapping the
+    predicate conflicts."""
     op = "update" if assignments else "delete"
-    where = where or {}
-    where_equals = where_equals or {}
-    if not where and not where_equals and condition is None:
-        raise ValueError(
-            f"{op} needs a predicate (where, where_equals and/or condition)"
-        )
-    if any(v is None for v in where_equals.values()):
-        raise ValueError("where_equals probes must be non-null; use `where`")
-    cur = current_version(spark, path)
-    if cur is None:
-        raise FileNotFoundError(f"no committed version at {path}")
-    manifest = read_manifest(spark, path, cur)
-    mapping = _schema_mapping(manifest["schema"])
-    _check_condition_mapping(condition, mapping)
-    bloom_probes = _map_keys(
-        _bloomable_probes(manifest["schema"], where_equals), mapping
+    manifest, mapping = scope.manifest, scope.mapping
+    if not scope.hit:
+        return manifest["version"]
+    matching = _read_files_with_position(spark, path, scope.hit).filter(
+        F.coalesce(scope.cond, F.lit(False))
     )
-    prune_where = _map_keys(
-        _derive_generated_hints(manifest, where, where_equals), mapping
-    )
-    part_types = _partition_types(manifest["schema"])
-    where = _map_keys(where, mapping)
-    where_equals = _map_keys(where_equals, mapping)
-    stats_for, bloom_for = _skipping_defaults(
-        manifest.get("properties", {}), stats_for, bloom_for
-    )
-    # rewrites stay INSIDE the table's hive layout: an unpartitioned
-    # rewrite would escape dynamic-overwrite remove sets and pruning
-    partition_by = _partition_default(manifest, partition_by)
-    partition_by = _map_names(partition_by, mapping)
-    stats_for = _map_names(stats_for, mapping)
-    bloom_for = _map_names(bloom_for, mapping)
-    assignments = (
-        {mapping.get(k, k): v for k, v in assignments.items()}
-        if assignments
-        else assignments
-    )
-    hit = [
-        f
-        for f in manifest["files"]
-        if _file_can_match(
-            f, prune_where, bloom_probes, part_types, where_equals
-        )
-    ]
-    if not hit:
-        return cur
-    cond = _dml_predicate(
-        where, where_equals, condition,
-        {c: part_types.get(c) for c in partition_by or ()},
-    )
-    root = path.rstrip("/")
-    matching = _read_files_with_position(spark, path, hit).filter(
-        F.coalesce(cond, F.lit(False))
-    )
-    pairs = matching.select(
-        _dv_rel_expr(F.col("_txlog_fp")).alias("rel"),
-        F.col("_txlog_ri").alias("ri"),
-    )
-    batch = uuid.uuid4().hex
-    dv_ref = f"{_DV}/{batch}"
-    pairs.write.parquet(f"{root}/{dv_ref}")
-    counts = {
-        r["rel"]: r["n"]
-        for r in spark.read.parquet(f"{root}/{dv_ref}")
-        .groupBy("rel")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
+    ref, counts = _write_dv(spark, path, matching)
     if not counts:  # predicate matched no live row
-        _delete(spark, f"{root}/{dv_ref}")
-        return cur
+        return manifest["version"]
     new_files: list[dict] = []
     if assignments:
         updated = matching.drop("_txlog_fp", "_txlog_ri")
         for col, expr in assignments.items():
-            updated = updated.withColumn(col, expr)
+            updated = updated.withColumn(mapping.get(col, col), expr)
         stored = _write_invariants(manifest.get("properties", {}))
         if stored:  # persistent constraints bind DV-update post-images
             try:
@@ -5326,63 +5146,15 @@ def _dv_dml(
                     _to_logical(updated, manifest["schema"]), stored
                 )
             except TxCheckViolation:
-                _delete(spark, f"{root}/{dv_ref}")  # reap the orphan sidecar
+                _delete(spark, f"{path.rstrip('/')}/{ref}")  # orphan sidecar
                 raise
         _, new_files = _write_batch(
-            updated, path, partition_by, stats_for, bloom_for
+            updated, path, scope.partition_by, scope.stats_for, scope.bloom_for
         )
-    base_paths = {f["path"] for f in manifest["files"]}
-
-    def build(now: int | None) -> dict:
-        now_manifest = (
-            read_manifest(spark, path, now) if now is not None else {}
-        )
-        now_files = now_manifest.get("files", [])
-        now_by = {f["path"]: f for f in now_files}
-        if set(counts) - set(now_by):
-            raise TxConflictError(
-                f"{op} at {path}: files in the read set were removed "
-                f"concurrently (base v{cur}, now v{now})"
-            )
-        added = [f for f in now_files if f["path"] not in base_paths]
-        if any(
-            _file_can_match(f, prune_where, bloom_probes, part_types, where_equals)
-            for f in added
-        ):
-            raise TxConflictError(
-                f"{op} at {path}: concurrent append overlaps the "
-                f"predicate (base v{cur}, now v{now})"
-            )
-        # entries are rebuilt from the CURRENT snapshot per attempt, so a
-        # concurrent DV delete's references merge instead of being lost
-        add_entries = []
-        for rel, n in sorted(counts.items()):
-            entry = dict(now_by[rel])
-            entry["dv"] = list(entry.get("dv", ())) + [dv_ref]
-            entry["dv_count"] = int(entry.get("dv_count", 0)) + int(n)
-            add_entries.append(entry)
-        return {
-            "op": op,
-            "schema": manifest["schema"],
-            "add": add_entries + new_files,
-            "remove": [],
-            "truncate": False,
-            # every DV-using commit embeds the full accumulated protocol,
-            # so any grounded log suffix containing it declares the feature
-            "protocol": _protocol_with(
-                now_manifest.get("protocol"),
-                reader=(FEATURE_DELETION_VECTORS,),
-                writer=(FEATURE_DELETION_VECTORS,),
-            ),
-        }
-
-    try:
-        return _commit(spark, path, build)
-    except (TxConflictError, TxPropertyViolation):
-        _delete(spark, f"{root}/{dv_ref}")
-        for f in new_files:
-            _delete(spark, f"{root}/{f['path']}")
-        raise
+    return _commit_rewrite(
+        spark, path, manifest, op, set(counts), new_files,
+        dv=(ref, counts), overlaps=scope.can_match,
+    )
 
 
 def _read_files_with_position(
@@ -5403,22 +5175,7 @@ def _read_files_with_position(
             "managed batches, then retry the DV operation"
         )
     root = path.rstrip("/")
-    by_batch: dict[str, list[str]] = {}
-    for f in files:
-        full, bd = _resolve_file(root, f["path"])
-        by_batch.setdefault(bd, []).append(full)
-    out = None
-    for bd, fl in sorted(by_batch.items()):
-        part = spark.read.option("basePath", bd).parquet(*sorted(fl)).select(
-            "*",
-            F.col("_metadata.file_path").alias("_txlog_fp"),
-            F.col("_metadata.row_index").alias("_txlog_ri"),
-        )
-        out = (
-            part
-            if out is None
-            else out.unionByName(part, allowMissingColumns=True)
-        )
+    out = _scan_batches(spark, path, files, with_position=True)
     dv_refs = sorted({ref for f in files for ref in (f.get("dv") or ())})
     if dv_refs:
         # shallow clones carry ABSOLUTE dv refs (sidecars live at the
@@ -5464,13 +5221,12 @@ def tx_update(
     subject's rows in gigabyte files moves only the changed rows)."""
     if not assignments:
         raise ValueError("update needs assignments")
+    scope = _dml_scope(
+        spark, path, "update", where, where_equals, condition,
+        partition_by, stats_for, bloom_for,
+    )
     if use_dv:
-        return _dv_dml(
-            spark, path, where, where_equals=where_equals,
-            assignments=assignments, partition_by=partition_by,
-            stats_for=stats_for, bloom_for=bloom_for,
-            condition=condition,
-        )
+        return _dv_dml(spark, path, scope, assignments)
 
     def apply(df, cond, mapping):
         # assignment KEYS are logical; the frame is physical. Assignment
@@ -5487,8 +5243,4 @@ def tx_update(
             )
         return out
 
-    return _dml_rewrite(
-        spark, path, where, apply, "update", partition_by, stats_for,
-        where_equals=where_equals, bloom_for=bloom_for,
-        condition=condition,
-    )
+    return _dml_rewrite(spark, path, scope, apply, "update")

@@ -582,29 +582,18 @@ class TxLogBatchReader(DataSourceReader):
             # pushed base-column bounds also derive GENERATED partition
             # column hints (date_format/year/to_date shapes) — Delta's
             # generated-column partition filter on the SQL face
-            ranges = TX._derive_generated_hints(
-                manifest, self._ranges, self._equals
-            )
-            where = TX._map_keys(ranges, mapping)
-            equals = TX._map_keys(self._equals, mapping)
             try:
-                probes = TX._map_keys(
-                    TX._bloomable_probes(manifest["schema"], self._equals),
-                    mapping,
-                )
+                can_match = TX._file_pruner(manifest, self._ranges, self._equals)
             except TypeError:
-                probes = {}  # a probe typed unlike its column: no bloom skip
-            part_types = TX._partition_types(manifest["schema"])
+                can_match = None  # a probe typed unlike its column: no skip
 
-            def can_match(f: dict) -> bool:
+            def keep(f: dict) -> bool:
                 try:
-                    return TX._file_can_match(
-                        f, where, probes, part_types, equals
-                    )
+                    return can_match is None or can_match(f)
                 except TypeError:
                     return True  # bound not orderable against a stat tag
 
-            files = [f for f in files if can_match(f)]
+            files = [f for f in files if keep(f)]
         parts = [
             _TxFilesPartition(
                 self.path,
